@@ -1,5 +1,4 @@
 from .expressions import (
-    case_when_paid,
     iso_date_str,
     json_get,
     label_expr,
@@ -7,7 +6,6 @@ from .expressions import (
 )
 
 __all__ = [
-    "case_when_paid",
     "iso_date_str",
     "json_get",
     "label_expr",

@@ -20,12 +20,6 @@ def label_expr(name: Column, price: Column) -> Column:
     return F.concat(name, F.lit(" - $"), price.cast("string"))
 
 
-def case_when_paid(price: Column) -> Column:
-    """E2: CASE WHEN price > 0 THEN 'Paid' ELSE 'Free' END
-    (subscription_flow.py:222)."""
-    return F.when(price > 0, F.lit("Paid")).otherwise(F.lit("Free"))
-
-
 def net_revenue(extendedprice: Column, discount: Column) -> Column:
     """E1 analog on the star schema: extendedprice * (1 - discount)."""
     return extendedprice * (F.lit(1.0) - discount)

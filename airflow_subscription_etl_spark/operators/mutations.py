@@ -7,9 +7,11 @@ transform ``subs -> new_subs``; the caller persists via sources.io
 scale). Non-transactional read-modify-write semantics and the
 single-writer constraint are documented in SURVEY.md §7.4.1.
 
-Target-row selection for M2/M3 re-uses A1 (top-1 active sub per user),
-exactly like the reference re-locates the row before each update
-(subscription_flow.py:229, 237).
+M2/M3 are addressed by ``subscription_id``: the caller resolves the
+target row (the pipeline's A1 lookup, subscription_flow.py:93–110) and
+the mutation is one conditional ``withColumn`` on that key — narrow and
+order-preserving, the Spark form of the reference's in-place row edit
+(subscription_flow.py:229–241).
 """
 
 from __future__ import annotations
@@ -18,35 +20,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .relational import (
-    active_subs_for_user,
     coalesce_default,
     next_subscription_id,
     payment_status_for_price,
-    top1_per_key,
 )
-
-
-def _target_subscription_id(subs: DataFrame, user_id: int) -> int | None:
-    """A1: latest active subscription for the user; None if absent.
-
-    Order: start_date (ISO string, lexicographic == chronological,
-    decision D1) desc, subscription_id desc as deterministic tiebreak
-    (decision D2 — the reference's Python ``max`` keeps file order,
-    which is not a relational concept).
-    """
-    rows = (
-        active_subs_for_user(subs, user_id)
-        .transform(
-            lambda d: top1_per_key(
-                d,
-                "user_id",
-                [F.col("start_date").desc(), F.col("subscription_id").desc()],
-            )
-        )
-        .select("subscription_id")
-        .collect()
-    )
-    return int(rows[0]["subscription_id"]) if rows else None
 
 
 def insert_subscription(
@@ -76,95 +53,28 @@ def insert_subscription(
     return subs.unionByName(new_row, allowMissingColumns=True)
 
 
-def _apply_via_merge(
-    subs: DataFrame, target_id: int, set_exprs: dict[str, "F.Column"]
-) -> DataFrame:
-    """Express a single-row UPDATE as a MERGE: the source is the
-    A1-selected row with the SET columns overwritten; merge_upsert
-    joins it back on subscription_id (matched → UPDATE; the key always
-    matches, so the insert branch is provably empty). This is the
-    1:1 shape of ``MERGE INTO subs USING cdc ON key WHEN MATCHED THEN
-    UPDATE SET ...`` — on Delta/Iceberg the same source frame feeds
-    ``DeltaTable.merge`` / ``MERGE INTO`` and the table format turns
-    the full rewrite into a file-level upsert. Row order of the result
-    follows the merge join, not the input file; callers needing
-    reference file order sort by subscription_id (M1 assigns max+1, so
-    id order IS file order).
-    """
-    source = subs.filter(F.col("subscription_id") == F.lit(target_id)).select(
-        F.col("subscription_id"),
-        *[e.alias(c) for c, e in set_exprs.items()],
-    )
-    return merge_upsert(
-        subs, source, ["subscription_id"], update_cols=list(set_exprs)
-    )
-
-
-def _apply_single_row_update(
-    subs: DataFrame,
-    user_id: int,
-    set_exprs: dict[str, "F.Column"],
-    strategy: str,
-) -> DataFrame:
-    """Shared M2/M3 writer interface (SURVEY §7.4: "do both behind one
-    writer interface"). ``strategy``:
-
-    - ``"projection"`` (default): conditional ``withColumn`` over the
-      full table — narrow, order-preserving, the Spark equivalent of
-      the reference's in-place row edit + full-file save. Right for
-      the catalog-sized JSON-parity table.
-    - ``"merge"``: the same update expressed through
-      :func:`merge_upsert` — the scale path that maps 1:1 onto a
-      lakehouse ``MERGE INTO`` (Delta/Iceberg), where unmatched data
-      passes through untouched instead of being rewritten.
-
-    Both strategies produce identical rows (equivalence is pinned in
-    tests/test_round6_ops.py); both raise the reference's error when
-    the user has no active subscription (subscription_flow.py:229,237).
-    """
-    # validate BEFORE the A1 Spark job: a typoed strategy must fail
-    # fast with the right message, not after (or masked by) the
-    # target-row lookup
-    if strategy not in ("projection", "merge"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    target = _target_subscription_id(subs, user_id)
-    if target is None:
-        raise ValueError(f"No active subscription found for user_id {user_id}")
-    if strategy == "merge":
-        return _apply_via_merge(subs, target, set_exprs)
-    is_target = F.col("subscription_id") == F.lit(target)
-    out = subs
-    for col, expr in set_exprs.items():
-        out = out.withColumn(
-            col, F.when(is_target, expr).otherwise(F.col(col))
-        )
-    return out
-
-
 def change_subscription_plan(
-    subs: DataFrame, user_id: int, new_plan_id: int, strategy: str = "projection"
+    subs: DataFrame, subscription_id: int, new_plan_id: int
 ) -> DataFrame:
-    """M2: UPDATE subscription_plan_id on the A1-selected row
-    (subscription_flow.py:228–234) — see
-    :func:`_apply_single_row_update` for the projection/merge strategy
-    choice."""
-    return _apply_single_row_update(
-        subs,
-        user_id,
-        {"subscription_plan_id": F.lit(new_plan_id).cast("int")},
-        strategy,
+    """M2: UPDATE subscription_plan_id on row ``subscription_id``
+    (subscription_flow.py:228–234)."""
+    return subs.withColumn(
+        "subscription_plan_id",
+        F.when(
+            F.col("subscription_id") == F.lit(subscription_id),
+            F.lit(new_plan_id).cast("int"),
+        ).otherwise(F.col("subscription_plan_id")),
     )
 
 
-def cancel_subscription(
-    subs: DataFrame, user_id: int, strategy: str = "projection"
-) -> DataFrame:
-    """M3: soft delete — status → "inactive" on the A1-selected row
-    (subscription_flow.py:236–242) — see
-    :func:`_apply_single_row_update` for the projection/merge strategy
-    choice."""
-    return _apply_single_row_update(
-        subs, user_id, {"subscription_status": F.lit("inactive")}, strategy
+def cancel_subscription(subs: DataFrame, subscription_id: int) -> DataFrame:
+    """M3: soft delete — status → "inactive" on row ``subscription_id``
+    (subscription_flow.py:236–242)."""
+    return subs.withColumn(
+        "subscription_status",
+        F.when(
+            F.col("subscription_id") == F.lit(subscription_id), F.lit("inactive")
+        ).otherwise(F.col("subscription_status")),
     )
 
 

@@ -12,13 +12,10 @@ Scale posture per operator family:
   ``F.broadcast`` hint — zero shuffle; fact-fact joins shuffle on the
   key and AQE handles skew.
 - A1 top-1-per-key: a single shuffle on the partition key; at 1000
-  executors this is the canonical window pattern. When only the
-  max-row is needed, ``max_by(struct(*), key)`` gives map-side partial
-  aggregation (less shuffle IO than row_number over raw rows).
+  executors this is the canonical window pattern.
 - A2 global max: an ``agg(max)`` tree-reduces; the scalar result is
   one row. The max+1 *allocation* serializes writers by design
-  (reference semantics, subscription_flow.py:214); a scale deployment
-  swaps the strategy (see ``next_subscription_id``).
+  (reference semantics, subscription_flow.py:214).
 """
 
 from __future__ import annotations
@@ -27,6 +24,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.expressions import label_expr
 
 # --- P: projections / filters / predicates ---------------------------------
 
@@ -46,16 +45,10 @@ def with_label(
     out: str = "label",
 ) -> DataFrame:
     """P2/E3: computed string label ``f"{name} - ${price}"``
-    (subscription_flow.py:88–91, 131–134).
-
-    Uses ``concat`` + string cast rather than ``format_string`` so the
-    rendering of numeric values is engine-portable (matches the DuckDB
-    oracle's ``CAST(x AS VARCHAR)``).
+    (subscription_flow.py:88–91, 131–134), via
+    :func:`..functions.expressions.label_expr`.
     """
-    return df.withColumn(
-        out,
-        F.concat(F.col(name_col), F.lit(" - $"), F.col(price_col).cast("string")),
-    )
+    return df.withColumn(out, label_expr(F.col(name_col), F.col(price_col)))
 
 
 def active_subs_for_user(df: DataFrame, user_id: int) -> DataFrame:
@@ -144,9 +137,7 @@ def top1_per_key(
     require the caller to pass a *total* order (decision D2: e.g.
     ``[start_date.desc(), subscription_id.desc()]``).
 
-    One shuffle on ``key``; AQE splits skewed partitions. The window
-    variant keeps all columns; for narrow outputs prefer
-    :func:`argmax_per_key` (map-side partial agg).
+    One shuffle on ``key``; AQE splits skewed partitions.
     """
     keys = [key] if isinstance(key, str) else list(key)
     w = Window.partitionBy(*keys).orderBy(*order)
@@ -157,36 +148,13 @@ def top1_per_key(
     )
 
 
-def argmax_per_key(df: DataFrame, key: str | Sequence[str], order_col: Column) -> DataFrame:
-    """A1 (agg form): ``groupBy(key).agg(max_by(struct(*), order_col))``.
-
-    Partial-aggregates map-side before the shuffle — at scale this moves
-    one struct per key per partition instead of every row.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    out = df.groupBy(*keys).agg(F.max_by(payload, order_col).alias("__row"))
-    return out.select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
-
-
-def next_subscription_id(subs: DataFrame, strategy: str = "max_plus_one") -> Column | int:
+def next_subscription_id(subs: DataFrame) -> int:
     """A2: ID allocation (subscription_flow.py:214):
-    ``max([ids] + [1000]) + 1`` — empty table → 1001 (decision D4).
-
-    ``max_plus_one`` is reference-faithful but serializes writers; at
-    scale pass ``strategy="monotonic"`` (collision-free per-partition
-    ids) or ``"uuid"`` behind the same interface (SURVEY.md §7.4.3).
-    """
-    if strategy == "max_plus_one":
-        row = subs.agg(
-            (F.coalesce(F.max("subscription_id"), F.lit(1000)) + F.lit(1)).alias("next_id")
-        ).collect()[0]
-        return int(row["next_id"])
-    if strategy == "monotonic":
-        return F.monotonically_increasing_id() + F.lit(1001)
-    if strategy == "uuid":
-        return F.expr("uuid()")
-    raise ValueError(f"unknown id strategy: {strategy}")
+    ``max([ids] + [1000]) + 1`` — empty table → 1001 (decision D4)."""
+    row = subs.agg(
+        (F.coalesce(F.max("subscription_id"), F.lit(1000)) + F.lit(1)).alias("next_id")
+    ).collect()[0]
+    return int(row["next_id"])
 
 
 def is_empty(df: DataFrame) -> bool:
@@ -199,11 +167,6 @@ def is_empty(df: DataFrame) -> bool:
 
 
 # --- E: scalar expressions --------------------------------------------------
-
-
-def price_difference(new_price: Column, current_price: Column) -> Column:
-    """E1: float subtraction (subscription_flow.py:181)."""
-    return (new_price - current_price).alias("price_difference")
 
 
 def payment_status_for_price(price: Column) -> Column:

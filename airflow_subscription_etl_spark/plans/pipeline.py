@@ -7,6 +7,14 @@ through two ``BranchPythonOperator``s (subscription_flow.py:69–76,
 than Airflow's skip propagation. The always-run ``notify_user``
 finalizer (TriggerRule.ALL_DONE, :334) becomes try/finally (C4).
 
+Each intent resolves what it needs once, as driver values, before any
+write: ``create``/``change`` collect the plan catalog with its labels
+(the selected plan, the current plan's price and ``plan_labels`` all
+come from those rows); ``view``/``change``/``cancel`` collect the
+latest active row (P3 + A1). M2/M3 then rewrite that row by
+``subscription_id``, so no plan built over the table is re-read after
+``write_json_table`` overwrites it.
+
 Error-message parity with the reference's ``ValueError``s:
 - invalid intent            (:62–63)
 - no active subscription    (:108–109)
@@ -33,8 +41,6 @@ from ..operators.mutations import (
 )
 from ..operators.relational import (
     active_subs_for_user,
-    lookup_join,
-    price_difference,
     top1_per_key,
     validate_intent,
     with_label,
@@ -72,10 +78,6 @@ def _latest_active(subs: DataFrame, user_id: int) -> DataFrame:
     )
 
 
-def _selected_plan(plans: DataFrame, name: str) -> DataFrame:
-    return plans.filter(F.col("subscription_plan_name") == name)
-
-
 def run_intent(
     spark: SparkSession,
     conf: dict[str, Any],
@@ -97,70 +99,58 @@ def run_intent(
         plans = read_plans(spark, plans_path)
         subs = read_user_subscriptions(spark, subs_path)
 
+        if intent == "view":  # null result, NO error (decision D7, :245)
+            res.result = _collect_one(_latest_active(subs, user_id))
+            return res
+
+        if intent in ("change", "cancel"):
+            current = _collect_one(_latest_active(subs, user_id))
+            if current is None:
+                raise ValueError(f"No active subscription for user_id {user_id}")
+            target_id = current["subscription_id"]
+
         if intent in ("create", "change"):
             # fetch_subscription_plans / fetch_available…: P1+P2 labels
-            # (subscription_flow.py:84–91, 127–134).
-            res.plan_labels = [
-                r["label"]
-                for r in with_label(
-                    plans, "subscription_plan_name", "subscription_price"
-                )
-                .select("label")
-                .collect()
-            ]
+            # (subscription_flow.py:84–91, 127–134). The same catalog rows
+            # resolve the selected plan and the current plan's price.
+            catalog = with_label(
+                plans, "subscription_plan_name", "subscription_price"
+            ).collect()
+            res.plan_labels = [p["label"] for p in catalog]
+            sel = next(
+                (p for p in catalog if p["subscription_plan_name"] == selected_name),
+                None,
+            )
+            if sel is None:
+                raise ValueError(f"Selected plan not found: {selected_name}")
+            res.payment_status = "Success"  # E4 (:186, :190) — downgrades too (D6)
 
         if intent == "create":
-            sel = _selected_plan(plans, selected_name)
-            if sel.isEmpty():
-                raise ValueError(f"Selected plan not found: {selected_name}")
-            res.payment_status = "Success"  # E4 (:186)
-            new_subs = insert_subscription(subs, sel, user_id)
-            # write_json_table materializes BEFORE overwriting; derive the
-            # result from those rows — any later action on `new_subs`
-            # would lazily re-read the mutated file (see sources.io).
-            rows = write_json_table(new_subs, subs_path)
-            res.result = max(rows, key=lambda r: r["subscription_id"])
-
+            sel_plan = plans.filter(F.col("subscription_plan_name") == selected_name)
+            new_subs = insert_subscription(subs, sel_plan, user_id)
         elif intent == "change":
-            current = _latest_active(subs, user_id)
-            if current.isEmpty():
-                raise ValueError(f"No active subscription for user_id {user_id}")
-            # J1/J4 enrichment (:118–125)
-            cur_plan = lookup_join(current, plans, "subscription_plan_id")
-            sel = _selected_plan(plans, selected_name)
-            if sel.isEmpty():
-                raise ValueError(f"Selected plan not found: {selected_name}")
-            # E1 price diff (:170–182): 1-row × 1-row crossJoin, stays tiny.
-            diff_row = (
-                sel.select(F.col("subscription_price").alias("new_price"))
-                .crossJoin(
-                    cur_plan.select(F.col("subscription_price").alias("current_price"))
-                )
-                .select(price_difference(F.col("new_price"), F.col("current_price")))
-                .collect()[0]
+            # J1/J4 enrichment (:118–125) + E1 price diff (:181)
+            cur_plan = next(
+                p
+                for p in catalog
+                if p["subscription_plan_id"] == current["subscription_plan_id"]
             )
-            res.price_difference = float(diff_row["price_difference"])
-            res.payment_status = "Success"  # E4 (:190) — downgrades too (D6)
-            new_plan_id = sel.collect()[0]["subscription_plan_id"]
-            # materialize the target id BEFORE the write mutates the file
-            target_id = current.select("subscription_id").collect()[0][0]
-            new_subs = change_subscription_plan(subs, user_id, int(new_plan_id))
-            rows = write_json_table(new_subs, subs_path)
+            res.price_difference = float(
+                sel["subscription_price"] - cur_plan["subscription_price"]
+            )
+            new_subs = change_subscription_plan(
+                subs, target_id, sel["subscription_plan_id"]
+            )
+        else:
+            new_subs = cancel_subscription(subs, target_id)
+
+        # Every id and price above is a driver value, so nothing below
+        # re-reads the file write_json_table overwrites (see sources.io).
+        rows = write_json_table(new_subs, subs_path)
+        if intent == "create":
+            res.result = max(rows, key=lambda r: r["subscription_id"])
+        else:
             res.result = next(r for r in rows if r["subscription_id"] == target_id)
-
-        elif intent == "cancel":
-            current = _latest_active(subs, user_id)
-            if current.isEmpty():
-                raise ValueError(f"No active subscription for user_id {user_id}")
-            target_id = current.select("subscription_id").collect()[0][0]
-            new_subs = cancel_subscription(subs, user_id)
-            rows = write_json_table(new_subs, subs_path)
-            res.result = next(r for r in rows if r["subscription_id"] == target_id)
-
-        else:  # view — null result, NO error (decision D7, :245)
-            current = _latest_active(subs, user_id)
-            res.result = _collect_one(current)
-
         return res
     finally:
         # C4: notify always runs (TriggerRule.ALL_DONE, :334), even when a

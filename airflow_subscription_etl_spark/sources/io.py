@@ -70,21 +70,21 @@ def write_json_table(
     old file: Spark plans are lazy and re-read the (now mutated) source
     on every later action — the read-overwrite-reread trap.
 
-    Raises ``ValueError`` if the table exceeds ``max_rows`` (cheap
-    ``limit(max_rows+1).count()`` probe — never materializes the
-    overage): this sink is driver-materializing by design and the guard
-    keeps it from being silently pointed at a fact table. Use
-    :func:`write_parquet_table` for anything big.
+    Raises ``ValueError`` if the table exceeds ``max_rows``: one
+    ``limit(max_rows+1).collect()`` both fetches the rows and bounds the
+    driver at one row past the guard. This sink is driver-materializing
+    by design and the guard keeps it from being silently pointed at a
+    fact table. Use :func:`write_parquet_table` for anything big.
     """
-    overflow = df.limit(max_rows + 1).count()
-    if overflow > max_rows:
+    collected = df.limit(max_rows + 1).collect()
+    if len(collected) > max_rows:
         raise ValueError(
             f"write_json_table is a driver-materializing catalog sink; "
             f"table has > {max_rows} rows — use write_parquet_table"
         )
     rows = [
         {k: v for k, v in row.asDict().items() if v is not None}
-        for row in df.collect()
+        for row in collected
     ]
     d = os.path.dirname(os.path.abspath(path)) or "."
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")

@@ -69,13 +69,11 @@ def test_m3_cancel_only_touches_status(rows):
     spark = _spark
     subs = spark.createDataFrame(rows, USER_SUBSCRIPTIONS_SCHEMA)
     active_101 = [r for r in rows if r[1] == 101 and r[3] == "active"]
-    if not active_101:
-        with pytest.raises(ValueError):
-            M.cancel_subscription(subs, 101)
-        return
-    out = M.cancel_subscription(subs, 101).collect()
-    # A1 target: max start_date, tie → max id
-    target = max(active_101, key=lambda r: (r[4], r[0]))[0]
+    # A1 target: max start_date, tie → max id; an absent id (user 101
+    # has no active row) must leave every row unchanged
+    target = max(active_101, key=lambda r: (r[4], r[0]))[0] if active_101 else 9999
+    out = M.cancel_subscription(subs, target).collect()
+    assert len(out) == len(rows)
     for r in out:
         orig = next(o for o in rows if o[0] == r["subscription_id"])
         if r["subscription_id"] == target:
@@ -97,7 +95,7 @@ def test_m2_change_updates_only_target(spark):
         (1003, 102, 2, "active", "2025-01-01", "2025-12-31", None),
     ]
     subs = spark.createDataFrame(rows, USER_SUBSCRIPTIONS_SCHEMA)
-    out = {r["subscription_id"]: r for r in M.change_subscription_plan(subs, 101, 3).collect()}
-    assert out[1002]["subscription_plan_id"] == 3  # latest active for 101
+    out = {r["subscription_id"]: r for r in M.change_subscription_plan(subs, 1002, 3).collect()}
+    assert out[1002]["subscription_plan_id"] == 3
     assert out[1001]["subscription_plan_id"] == 1
     assert out[1003]["subscription_plan_id"] == 2

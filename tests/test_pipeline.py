@@ -128,3 +128,62 @@ def test_a1_tiebreak_subscription_id_desc(spark, seed_tables):
     run_intent(spark, {"user_id": 101, "intent": "create"}, plans_path, subs_path)
     res = run_intent(spark, {"user_id": 101, "intent": "view"}, plans_path, subs_path)
     assert res.result["subscription_id"] == 1003
+
+
+def test_cancel_unknown_user_raises(spark, seed_tables):
+    plans_path, subs_path = seed_tables
+    with pytest.raises(ValueError, match="No active subscription for user_id 999"):
+        run_intent(spark, {"user_id": 999, "intent": "cancel"}, plans_path, subs_path)
+    # a user whose only subscription is inactive has no cancel target either
+    run_intent(spark, {"user_id": 101, "intent": "cancel"}, plans_path, subs_path)
+    with pytest.raises(ValueError, match="No active subscription for user_id 101"):
+        run_intent(spark, {"user_id": 101, "intent": "cancel"}, plans_path, subs_path)
+
+
+def test_change_error_order(spark, seed_tables):
+    """The missing active subscription is reported before the unknown
+    plan, as in the reference (:108–109 precede :178–179)."""
+    plans_path, subs_path = seed_tables
+    bad = {"intent": "change", "selected_plan_name": "Gold"}
+    with pytest.raises(ValueError, match="No active subscription for user_id 999"):
+        run_intent(spark, {**bad, "user_id": 999}, plans_path, subs_path)
+    with pytest.raises(ValueError, match="Selected plan not found: Gold"):
+        run_intent(spark, {**bad, "user_id": 102}, plans_path, subs_path)
+    # neither error wrote the table
+    assert len(json.load(open(subs_path))) == 2
+
+
+def test_cancel_tiebreak_subscription_id_desc(spark, seed_tables):
+    """D2 through cancel: equal start_date → the higher id is cancelled."""
+    plans_path, subs_path = seed_tables
+    run_intent(spark, {"user_id": 101, "intent": "create"}, plans_path, subs_path)
+    res = run_intent(spark, {"user_id": 101, "intent": "cancel"}, plans_path, subs_path)
+    assert res.result["subscription_id"] == 1003
+    by_id = {r["subscription_id"]: r for r in json.load(open(subs_path))}
+    assert by_id[1003]["subscription_status"] == "inactive"
+    assert by_id[1001]["subscription_status"] == "active"
+
+
+def test_spark_jobs_per_intent(spark, seed_tables):
+    """Each intent resolves its lookups once: the Spark jobs one
+    run_intent launches stay within a fixed budget per intent."""
+    plans_path, subs_path = seed_tables
+    sc = spark.sparkContext
+    confs = [
+        {"user_id": 101, "intent": "view"},
+        {"user_id": 101, "intent": "create"},
+        {"user_id": 102, "intent": "change", "selected_plan_name": "Team"},
+        {"user_id": 101, "intent": "cancel"},
+    ]
+    limits = {"view": 2, "create": 5, "change": 4, "cancel": 3}
+    jobs = {}
+    try:
+        for conf in confs:
+            group = f"jobs-per-intent-{conf['intent']}"
+            sc.setJobGroup(group, group)
+            run_intent(spark, conf, plans_path, subs_path)
+            jobs[conf["intent"]] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(jobs[i] <= limits[i] for i in limits), jobs

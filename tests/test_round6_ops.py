@@ -1,5 +1,5 @@
-"""Round-6 operator work: the MERGE-unified lifecycle writer (VERDICT
-r5 #5) and the plan-lint broadcast-miss rule (VERDICT r5 #6)."""
+"""Round-6 operator work: the plan-lint broadcast-miss rule (VERDICT
+r5 #6), semantic_dedup impl dispatch and the indexed minhash query."""
 
 from __future__ import annotations
 
@@ -7,119 +7,9 @@ import pathlib
 import sys
 
 import pytest
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from airflow_subscription_etl_spark.operators import mutations as M
-from airflow_subscription_etl_spark.schemas import USER_SUBSCRIPTIONS_SCHEMA
-
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent / "tools"))
-
-_spark = None
-
-
-@pytest.fixture(autouse=True)
-def _cap(spark):
-    global _spark
-    _spark = spark
-
-
-SEED = [
-    (1001, 101, 1, "active", "2025-01-01", "2025-12-31", None),
-    (1002, 102, 2, "active", "2025-02-01", "2025-12-31", None),
-    (1003, 101, 2, "active", "2025-01-01", "2025-12-31", "Paid"),
-    (1004, 103, 3, "inactive", "2025-03-01", "2025-12-31", "Paid"),
-]
-
-
-def _subs(spark):
-    return spark.createDataFrame(SEED, USER_SUBSCRIPTIONS_SCHEMA)
-
-
-def _sorted_rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-# --- M2/M3 through merge_upsert (one writer interface) ----------------------
-
-
-def test_change_merge_equals_projection(spark):
-    subs = _subs(spark)
-    a = M.change_subscription_plan(subs, 102, 3)
-    b = M.change_subscription_plan(subs, 102, 3, strategy="merge")
-    assert a.columns == b.columns
-    assert _sorted_rows(a) == _sorted_rows(b)
-    # and the update actually landed
-    row = [r for r in b.collect() if r["subscription_id"] == 1002][0]
-    assert row["subscription_plan_id"] == 3
-
-
-def test_cancel_merge_equals_projection(spark):
-    subs = _subs(spark)
-    a = M.cancel_subscription(subs, 101)
-    b = M.cancel_subscription(subs, 101, strategy="merge")
-    assert a.columns == b.columns
-    assert _sorted_rows(a) == _sorted_rows(b)
-    # A1 tiebreak: user 101's 1003 (same start_date, higher id) cancels
-    by_id = {r["subscription_id"]: r for r in b.collect()}
-    assert by_id[1003]["subscription_status"] == "inactive"
-    assert by_id[1001]["subscription_status"] == "active"
-
-
-def test_merge_strategy_error_paths_match(spark):
-    subs = _subs(spark)
-    for strategy in ("projection", "merge"):
-        with pytest.raises(ValueError, match="No active subscription"):
-            M.change_subscription_plan(subs, 999, 2, strategy=strategy)
-        with pytest.raises(ValueError, match="No active subscription"):
-            M.cancel_subscription(subs, 103, strategy=strategy)  # inactive only
-
-
-def test_unknown_strategy_raises(spark):
-    with pytest.raises(ValueError, match="unknown strategy"):
-        M.cancel_subscription(_subs(spark), 101, strategy="delta")
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(1001, 1015),
-            st.integers(100, 104),
-            st.integers(1, 3),
-            st.sampled_from(["active", "inactive"]),
-            st.sampled_from(["2025-01-01", "2025-02-01"]),
-            st.just("2025-12-31"),
-            st.none(),
-        ),
-        min_size=1,
-        max_size=8,
-        unique_by=lambda r: r[0],
-    ),
-    user=st.integers(100, 104),
-)
-def test_merge_projection_equivalence_property(rows, user):
-    """For ANY table state and user, the two strategies agree (both on
-    the result rows and on whether they raise)."""
-    subs = _spark.createDataFrame(rows, USER_SUBSCRIPTIONS_SCHEMA)
-    try:
-        a = _sorted_rows(M.change_subscription_plan(subs, user, 3))
-        raised_a = None
-    except ValueError as e:
-        raised_a = str(e)
-    try:
-        b = _sorted_rows(M.change_subscription_plan(subs, user, 3, strategy="merge"))
-        raised_b = None
-    except ValueError as e:
-        raised_b = str(e)
-    assert raised_a == raised_b
-    if raised_a is None:
-        assert a == b
 
 
 # --- plan_lint broadcast-miss rule ------------------------------------------
@@ -223,14 +113,6 @@ def test_broadcast_miss_not_fooled_by_bound_below_join(_nobroadcast):
     plan = plan_lint.render_plan(side.join(big2, "k"))
     assert "SortMergeJoin" in plan  # precondition: it IS a big-big SMJ
     assert "broadcast-miss" not in plan_lint.lint_plan(plan)
-
-
-def test_bad_strategy_fails_fast_even_without_target(spark):
-    """Strategy validation precedes the A1 lookup: a typo'd strategy
-    surfaces as 'unknown strategy' even for a user with no active
-    subscription (review finding r6)."""
-    with pytest.raises(ValueError, match="unknown strategy"):
-        M.change_subscription_plan(_subs(spark), 999, 2, strategy="mrege")
 
 
 # --- doc_minhash_indexed registered query -----------------------------------
