@@ -773,15 +773,6 @@ def simhash_from_hashes(hashes: Column) -> Column:
     return sig
 
 
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash of whitespace tokens (single-expression form).
-
-    Correct but re-tokenizes per bit-vote if Catalyst inlines it; use
-    :func:`with_simhash` (staged) in anything per-corpus.
-    """
-    return simhash_from_hashes(F.transform(norm_tokens(col), lambda t: F.xxhash64(t)))
-
-
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach a ``simhash`` bigint column, staged so the token-hash
     array materializes once before the 64 bit-vote aggregates."""

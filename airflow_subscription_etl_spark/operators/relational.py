@@ -13,9 +13,11 @@ Scale posture per operator family:
   key and AQE handles skew.
 - A1 top-1-per-key: a single shuffle on the partition key; at 1000
   executors this is the canonical window pattern.
-- A2 global max: an ``agg(max)`` tree-reduces; the scalar result is
-  one row. The max+1 *allocation* serializes writers by design
-  (reference semantics, subscription_flow.py:214).
+- A2 global max: a top-1 over the id column (``orderBy(desc)
+  .limit(1)``) — each partition keeps its own max and the driver
+  merges them, one stage and no shuffle. The max+1 *allocation*
+  serializes writers by design (reference semantics,
+  subscription_flow.py:214).
 """
 
 from __future__ import annotations
@@ -150,11 +152,20 @@ def top1_per_key(
 
 def next_subscription_id(subs: DataFrame) -> int:
     """A2: ID allocation (subscription_flow.py:214):
-    ``max([ids] + [1000]) + 1`` — empty table → 1001 (decision D4)."""
-    row = subs.agg(
-        (F.coalesce(F.max("subscription_id"), F.lit(1000)) + F.lit(1)).alias("next_id")
-    ).collect()[0]
-    return int(row["next_id"])
+    ``coalesce(max(id), 1000) + 1`` — empty table → 1001 (decision D4).
+
+    The max is a top-1 (``TakeOrderedAndProject``), one stage with no
+    shuffle. Descending order puts NULLs last, so a NULL id is only
+    seen when no id is set, and then counts as absent, as in ``max``.
+    """
+    top = (
+        subs.select("subscription_id")
+        .orderBy(F.col("subscription_id").desc())
+        .limit(1)
+        .collect()
+    )
+    max_id = top[0][0] if top else None
+    return int(1000 if max_id is None else max_id) + 1
 
 
 def is_empty(df: DataFrame) -> bool:

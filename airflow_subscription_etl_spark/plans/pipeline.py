@@ -11,9 +11,11 @@ Each intent resolves what it needs once, as driver values, before any
 write: ``create``/``change`` collect the plan catalog with its labels
 (the selected plan, the current plan's price and ``plan_labels`` all
 come from those rows); ``view``/``change``/``cancel`` collect the
-latest active row (P3 + A1). M2/M3 then rewrite that row by
-``subscription_id``, so no plan built over the table is re-read after
-``write_json_table`` overwrites it.
+latest active row. That lookup is a filtered top-1: P3 narrows the
+table to one user, so A1's "top-1 per ``user_id``" is a global top-1,
+planned as one ``TakeOrderedAndProject`` job with no shuffle. M2/M3
+then rewrite that row by ``subscription_id``, so no plan built over
+the table is re-read after ``write_json_table`` overwrites it.
 
 Error-message parity with the reference's ``ValueError``s:
 - invalid intent            (:62–63)
@@ -41,7 +43,6 @@ from ..operators.mutations import (
 )
 from ..operators.relational import (
     active_subs_for_user,
-    top1_per_key,
     validate_intent,
     with_label,
 )
@@ -70,11 +71,15 @@ class RunResult:
 
 
 def _latest_active(subs: DataFrame, user_id: int) -> DataFrame:
-    """P3 + A1 composition (subscription_flow.py:93–110)."""
-    return active_subs_for_user(subs, user_id).transform(
-        lambda d: top1_per_key(
-            d, "user_id", [F.col("start_date").desc(), F.col("subscription_id").desc()]
-        )
+    """P3 + A1 (subscription_flow.py:93–110): the user's active rows,
+    latest first, ties broken by ``subscription_id`` desc (D1/D2).
+
+    Only one user survives the filter, so the first row is the top-1
+    per ``user_id``: ``limit(1)`` on this order is a single top-k job,
+    where a per-key window would shuffle.
+    """
+    return active_subs_for_user(subs, user_id).orderBy(
+        F.col("start_date").desc(), F.col("subscription_id").desc()
     )
 
 

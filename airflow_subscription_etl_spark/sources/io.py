@@ -7,8 +7,10 @@ The reference's storage is whole-file JSON arrays (`_load_json` /
   — the files are JSON *arrays*, not NDJSON, so ``multiLine`` is
   required.
 - S2 sink: full overwrite. For catalog-sized tables we keep single-file
-  parity via ``coalesce(1)``; at scale the same interface writes
-  partitioned parquet (the caller picks the format).
+  parity: rows come to the driver as Arrow batches from one
+  ``coalesce(1)`` partition and are written as one JSON array; at
+  scale the same interface writes partitioned parquet (the caller
+  picks the format).
 
 Parquet is the scale path: columnar, splittable, predicate-pushdown-
 and column-pruning-friendly — ``.explain`` on any filtered scan shows
@@ -47,6 +49,37 @@ def read_user_subscriptions(spark: SparkSession, path: str) -> DataFrame:
 JSON_SINK_MAX_ROWS = 100_000
 
 
+#: Column types the JSON sink writes: the flat scalars the reference's
+#: files hold. Arrow renders nested, temporal and decimal values
+#: differently from Spark Rows (or ``json`` cannot encode them at all),
+#: so anything else is refused before a job runs.
+_JSON_SINK_TYPES = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+)
+
+#: Encodes one flat record as the body of an ``indent=2`` array element.
+#: Without ``indent`` the json module runs its C encoder.
+_RECORD_ENCODER = json.JSONEncoder(separators=(",\n    ", ": "))
+
+
+def _json_array_text(rows: list[dict]) -> str:
+    """``json.dumps(rows, indent=2)`` for flat records, byte for byte."""
+    if not rows:
+        return "[]"
+    items = (
+        "  {\n    " + _RECORD_ENCODER.encode(r)[1:-1] + "\n  }" if r else "  {}"
+        for r in rows
+    )
+    return "[\n" + ",\n".join(items) + "\n]"
+
+
 def write_json_table(
     df: DataFrame, path: str, max_rows: int = JSON_SINK_MAX_ROWS
 ) -> list[dict]:
@@ -61,6 +94,15 @@ def write_json_table(
     use :func:`write_parquet_table` instead; this sink exists for
     byte-parity with the reference's storage format.
 
+    The rows reach the driver as Arrow batches from one ``coalesce(1)``
+    partition (so the limit needs no shuffle, and rows keep partition
+    order). The file is byte-identical to ``json.dump(rows, indent=2)``
+    but is encoded by the json module's C encoder.
+
+    Only boolean, integral, float/double and string columns are
+    accepted; any other column raises ``ValueError`` naming it, before
+    any Spark job runs.
+
     Null fields are dropped per record, matching the ragged
     ``payment_status`` column of the reference (seed rows lack the key
     entirely; subscription_flow.py:222 adds it on new rows).
@@ -71,26 +113,35 @@ def write_json_table(
     on every later action — the read-overwrite-reread trap.
 
     Raises ``ValueError`` if the table exceeds ``max_rows``: one
-    ``limit(max_rows+1).collect()`` both fetches the rows and bounds the
+    ``limit(max_rows+1)`` fetch both collects the rows and bounds the
     driver at one row past the guard. This sink is driver-materializing
     by design and the guard keeps it from being silently pointed at a
     fact table. Use :func:`write_parquet_table` for anything big.
     """
-    collected = df.limit(max_rows + 1).collect()
-    if len(collected) > max_rows:
+    for field in df.schema.fields:
+        if not isinstance(field.dataType, _JSON_SINK_TYPES):
+            raise ValueError(
+                f"write_json_table cannot write column {field.name!r} of type "
+                f"{field.dataType.simpleString()}; it takes boolean, integral, "
+                f"float/double and string columns"
+            )
+    table = df.coalesce(1).limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
         raise ValueError(
             f"write_json_table is a driver-materializing catalog sink; "
             f"table has > {max_rows} rows — use write_parquet_table"
         )
+    names = table.column_names
+    columns = [c.to_pylist() for c in table.columns]
     rows = [
-        {k: v for k, v in row.asDict().items() if v is not None}
-        for row in collected
+        {k: v for k, v in zip(names, values) if v is not None}
+        for values in zip(*columns)
     ]
     d = os.path.dirname(os.path.abspath(path)) or "."
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")
     try:
         with os.fdopen(fd, "w") as f:
-            json.dump(rows, f, indent=2)
+            f.write(_json_array_text(rows))
         shutil.move(tmp, path)
     finally:
         if os.path.exists(tmp):

@@ -164,26 +164,90 @@ def test_cancel_tiebreak_subscription_id_desc(spark, seed_tables):
     assert by_id[1001]["subscription_status"] == "active"
 
 
+def _run_in_group(sc, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    stage count of every Spark job it launched."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job and SQL-execution events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return out, [len(st.getJobInfo(j).stageIds) for j in st.getJobIdsForGroup(group)]
+
+
 def test_spark_jobs_per_intent(spark, seed_tables):
     """Each intent resolves its lookups once: the Spark jobs one
     run_intent launches stay within a fixed budget per intent."""
     plans_path, subs_path = seed_tables
     sc = spark.sparkContext
-    confs = [
-        {"user_id": 101, "intent": "view"},
-        {"user_id": 101, "intent": "create"},
-        {"user_id": 102, "intent": "change", "selected_plan_name": "Team"},
-        {"user_id": 101, "intent": "cancel"},
-    ]
-    limits = {"view": 2, "create": 5, "change": 4, "cancel": 3}
-    jobs = {}
-    try:
-        for conf in confs:
-            group = f"jobs-per-intent-{conf['intent']}"
-            sc.setJobGroup(group, group)
+
+    def run(kind, conf):
+        if kind.endswith("_miss"):
+            with pytest.raises(ValueError, match="No active subscription"):
+                run_intent(spark, conf, plans_path, subs_path)
+        else:
             run_intent(spark, conf, plans_path, subs_path)
-            jobs[conf["intent"]] = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert all(jobs[i] <= limits[i] for i in limits), jobs
+
+    confs = {
+        "view": {"user_id": 101, "intent": "view"},
+        "create": {"user_id": 101, "intent": "create"},
+        "change": {"user_id": 102, "intent": "change", "selected_plan_name": "Team"},
+        "cancel": {"user_id": 101, "intent": "cancel"},
+        "change_miss": {"user_id": 999, "intent": "change"},
+    }
+    limits = {"view": 1, "create": 3, "change": 3, "cancel": 2, "change_miss": 1}
+    jobs = {}
+    for kind, conf in confs.items():
+        group = f"jobs-per-intent-{kind}"
+        _, stages = _run_in_group(sc, group, lambda: run(kind, conf))
+        jobs[kind] = len(stages)
+    assert all(jobs[k] <= limits[k] for k in limits), jobs
+
+
+def test_latest_active_lookup_has_no_exchange(spark, seed_tables):
+    """The latest-active lookup is a filtered top-1: one single-stage
+    job, no Exchange in the executed plan."""
+    from airflow_subscription_etl_spark.plans.pipeline import _latest_active
+    from airflow_subscription_etl_spark.sources.io import read_user_subscriptions
+
+    _, subs_path = seed_tables
+    lookup = _latest_active(read_user_subscriptions(spark, subs_path), 101).limit(1)
+    rows, stages = _run_in_group(
+        spark.sparkContext, "latest-active-plan", lookup.collect
+    )
+    assert [r["subscription_id"] for r in rows] == [1001]
+    plan = lookup._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "TakeOrderedAndProject" in plan, plan
+    assert stages == [1]
+
+
+def test_json_sink_collect_has_no_exchange(spark, seed_tables):
+    """The sink fetches a two-partition union (the create path) in one
+    single-stage job; the collect's executed plan has no Exchange."""
+    from airflow_subscription_etl_spark.sources.io import (
+        read_user_subscriptions,
+        write_json_table,
+    )
+
+    _, subs_path = seed_tables
+    subs = read_user_subscriptions(spark, subs_path)
+    both = subs.unionByName(subs)
+    assert both.rdd.getNumPartitions() == 2
+    rows, stages = _run_in_group(
+        spark.sparkContext,
+        "json-sink-plan",
+        lambda: write_json_table(both, subs_path + ".out"),
+    )
+    assert len(rows) == 4 and stages == [1]
+    plan = (
+        spark._jsparkSession.sharedState()
+        .statusStore()
+        .executionsList()
+        .last()
+        .physicalPlanDescription()
+    )
+    assert "Exchange" not in plan and "CollectLimit" in plan, plan
