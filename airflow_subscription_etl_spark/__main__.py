@@ -68,7 +68,9 @@ def _query(args) -> int:
             )
         ))
         return 0
-    rows = df.limit(args.limit).collect() if args.limit else df.collect()
+    # --limit 0 streams every row, one partition at a time, instead of
+    # collecting the whole result on the driver
+    rows = df.limit(args.limit).collect() if args.limit else df.toLocalIterator()
     for r in rows:
         print(json.dumps(r.asDict(recursive=True), default=str))
     return 0

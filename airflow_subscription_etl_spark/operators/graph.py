@@ -171,6 +171,31 @@ def simulate_star_rounds(
     return counts
 
 
+#: Most edges :func:`star_schedule` brings to the driver. The schedule
+#: is simulated over Python sets, which suits a catalog-bounded graph
+#: (doc_cc_islands' leader graph has one edge per adjacent occupied
+#: cell); a larger edge list is data-sized and keeps the distributed
+#: signature loop.
+STAR_SCHEDULE_MAX_EDGES = 100_000
+
+
+def star_schedule(pairs: DataFrame) -> list[int] | None:
+    """The :func:`simulate_star_rounds` schedule of a catalog-bounded
+    ``(id_a, id_b)`` pair graph, or ``None`` when it has more than
+    :data:`STAR_SCHEDULE_MAX_EDGES` edges.
+
+    One job fetches at most cap+1 edges from one ``coalesce(1)``
+    partition; a bare ``limit().collect()`` scans partitions
+    incrementally and can launch several jobs. Pass the result as
+    :func:`connected_components`' ``schedule``: ``None`` runs its
+    signature loop.
+    """
+    rows = pairs.coalesce(1).limit(STAR_SCHEDULE_MAX_EDGES + 1).collect()
+    if len(rows) > STAR_SCHEDULE_MAX_EDGES:
+        return None
+    return simulate_star_rounds([(r["id_a"], r["id_b"]) for r in rows])
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",

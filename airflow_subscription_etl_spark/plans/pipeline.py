@@ -15,7 +15,11 @@ latest active row. That lookup is a filtered top-1: P3 narrows the
 table to one user, so A1's "top-1 per ``user_id``" is a global top-1,
 planned as one ``TakeOrderedAndProject`` job with no shuffle. M2/M3
 then rewrite that row by ``subscription_id``, so no plan built over
-the table is re-read after ``write_json_table`` overwrites it.
+the table is re-read after ``write_json_table`` overwrites it. The
+result row of a write comes from the Arrow table the sink returns:
+``pyarrow.compute`` finds the first row holding the max
+``subscription_id`` (create) or the target id (change/cancel), and
+only that one row becomes a dict.
 
 Error-message parity with the reference's ``ValueError``s:
 - invalid intent            (:62–63)
@@ -33,6 +37,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -151,11 +156,11 @@ def run_intent(
 
         # Every id and price above is a driver value, so nothing below
         # re-reads the file write_json_table overwrites (see sources.io).
-        rows = write_json_table(new_subs, subs_path)
-        if intent == "create":
-            res.result = max(rows, key=lambda r: r["subscription_id"])
-        else:
-            res.result = next(r for r in rows if r["subscription_id"] == target_id)
+        table = write_json_table(new_subs, subs_path)
+        ids = table.column("subscription_id")
+        key = pc.max(ids) if intent == "create" else target_id
+        row = table.slice(pc.index(ids, key).as_py(), 1).to_pylist()[0]
+        res.result = {k: v for k, v in row.items() if v is not None}
         return res
     finally:
         # C4: notify always runs (TriggerRule.ALL_DONE, :334), even when a

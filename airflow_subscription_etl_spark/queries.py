@@ -2658,14 +2658,11 @@ def q_doc_cc_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round signature actions: the whole O(log n)-round
     # transitive-closure computation — unchanged and still distributed
     # — now executes inside the caller's single action instead of one
-    # job per round. Data-sized CC callers keep the distributed
-    # signature loop.
-    from .operators.graph import simulate_star_rounds  # noqa: PLC0415
+    # job per round. The collect is capped (star_schedule); an edge
+    # list over the cap gets no schedule and the signature loop.
+    from .operators.graph import star_schedule  # noqa: PLC0415
 
-    schedule = simulate_star_rounds(
-        [(r["id_a"], r["id_b"]) for r in adj_edges.collect()]
-    )
-    comp = connected_components(adj_edges, schedule=schedule)
+    comp = connected_components(adj_edges, schedule=star_schedule(adj_edges))
     lead_comp = leaders.join(
         comp, leaders.lead == comp.node, "left"
     ).select(

@@ -8,9 +8,11 @@ The reference's storage is whole-file JSON arrays (`_load_json` /
   required.
 - S2 sink: full overwrite. For catalog-sized tables we keep single-file
   parity: rows come to the driver as Arrow batches from one
-  ``coalesce(1)`` partition and are written as one JSON array; at
-  scale the same interface writes partitioned parquet (the caller
-  picks the format).
+  ``coalesce(1)`` partition and are encoded column by column with
+  ``pyarrow.compute`` into one JSON array, byte-identical to
+  ``json.dump(indent=2)``; the sink returns the fetched
+  ``pyarrow.Table``. At scale the same interface writes partitioned
+  parquet (the caller picks the format).
 
 Parquet is the scale path: columnar, splittable, predicate-pushdown-
 and column-pruning-friendly — ``.explain`` on any filtered scan shows
@@ -24,6 +26,8 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -64,25 +68,75 @@ _JSON_SINK_TYPES = (
     T.StringType,
 )
 
-#: Encodes one flat record as the body of an ``indent=2`` array element.
-#: Without ``indent`` the json module runs its C encoder.
-_RECORD_ENCODER = json.JSONEncoder(separators=(",\n    ", ": "))
+#: Characters ``json.dumps`` escapes under ``ensure_ascii``: anything
+#: outside printable ASCII (control characters, DEL, non-ASCII) plus
+#: ``"`` and ``\\``. A string column with none of them is quoted as is.
+_JSON_ESCAPE_RE = r'[^ -~]|["\\]'
+
+#: Between two ``"key": value`` fields of one ``indent=2`` record.
+_FIELD_SEP = ",\n    "
 
 
-def _json_array_text(rows: list[dict]) -> str:
-    """``json.dumps(rows, indent=2)`` for flat records, byte for byte."""
-    if not rows:
-        return "[]"
-    items = (
-        "  {\n    " + _RECORD_ENCODER.encode(r)[1:-1] + "\n  }" if r else "  {}"
-        for r in rows
+def _json_values(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """Each value's JSON text, NULL where the value is NULL.
+
+    Integer and boolean columns cast to string, and a string column
+    with nothing to escape is wrapped in quotes, all in Arrow. Float
+    columns and string columns that need escaping fall back to
+    per-value ``json.dumps``: Arrow prints ``29``, ``0.00001`` and
+    ``-0`` where Python prints ``29.0``, ``1e-05`` and ``-0.0``.
+    """
+    t = col.type
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        return pc.cast(col, pa.string())
+    if pa.types.is_string(t) and not pc.any(
+        pc.match_substring_regex(col, _JSON_ESCAPE_RE)
+    ).as_py():
+        return pc.binary_join_element_wise('"', col, '"', "")
+    return pa.chunked_array(
+        [[None if v is None else json.dumps(v) for v in col.to_pylist()]],
+        pa.string(),
     )
-    return "[\n" + ",\n".join(items) + "\n]"
+
+
+def _json_array_bytes(table: pa.Table) -> bytes:
+    """``json.dumps(records, indent=2)`` for a flat table, byte for
+    byte, where each record drops its NULL fields.
+
+    Each field becomes a ``sep + "key": value`` fragment that is NULL
+    where the value is. The fragments join with NULLs replaced by the
+    empty string (never skipped, see :func:`write_json_table`), then
+    the leading separator is sliced off.
+    """
+    if table.num_rows == 0:
+        return b"[]"
+    fragments = [
+        pc.binary_join_element_wise(
+            _FIELD_SEP + json.dumps(name) + ": ", _json_values(col), ""
+        )
+        for name, col in zip(table.column_names, table.columns)
+    ]
+    body = pc.utf8_slice_codeunits(
+        pc.binary_join_element_wise(
+            *fragments, "", null_handling="replace", null_replacement=""
+        ),
+        start=len(_FIELD_SEP),
+    )
+    records = pc.if_else(
+        pc.equal(body, ""),
+        "  {}",
+        pc.binary_join_element_wise("  {\n    ", body, "\n  }", ""),
+    ).combine_chunks()
+    whole = pa.ListArray.from_arrays(
+        pa.array([0, len(records)], pa.int32()), records
+    )
+    text = pc.binary_join(whole, ",\n")[0].as_buffer().to_pybytes()
+    return b"[\n" + text + b"\n]"
 
 
 def write_json_table(
     df: DataFrame, path: str, max_rows: int = JSON_SINK_MAX_ROWS
-) -> list[dict]:
+) -> pa.Table:
     """S2: full-file overwrite sink (subscription_flow.py:32–34).
 
     The reference overwrites one JSON-array file in place. Spark's JSON
@@ -97,7 +151,13 @@ def write_json_table(
     The rows reach the driver as Arrow batches from one ``coalesce(1)``
     partition (so the limit needs no shuffle, and rows keep partition
     order). The file is byte-identical to ``json.dump(rows, indent=2)``
-    but is encoded by the json module's C encoder.
+    but is encoded column by column with ``pyarrow.compute``: integer,
+    boolean and escape-free string columns run no Python per row. Float
+    and double columns, and any string column holding a character
+    ``json`` escapes, fall back to per-value ``json.dumps`` for that
+    column only. The records are joined with NULLs replaced, never
+    skipped: pyarrow's ``null_handling="skip"`` drops rows that are NULL
+    in every input, which would lose each all-NULL record.
 
     Only boolean, integral, float/double and string columns are
     accepted; any other column raises ``ValueError`` naming it, before
@@ -107,10 +167,11 @@ def write_json_table(
     ``payment_status`` column of the reference (seed rows lack the key
     entirely; subscription_flow.py:222 adds it on new rows).
 
-    Returns the materialized rows. Callers MUST derive any post-write
-    results from this return value, not from DataFrames built over the
-    old file: Spark plans are lazy and re-read the (now mutated) source
-    on every later action — the read-overwrite-reread trap.
+    Returns the fetched ``pyarrow.Table``. Callers MUST derive any
+    post-write results from this return value, not from DataFrames built
+    over the old file: Spark plans are lazy and re-read the (now
+    mutated) source on every later action — the read-overwrite-reread
+    trap.
 
     Raises ``ValueError`` if the table exceeds ``max_rows``: one
     ``limit(max_rows+1)`` fetch both collects the rows and bounds the
@@ -131,22 +192,16 @@ def write_json_table(
             f"write_json_table is a driver-materializing catalog sink; "
             f"table has > {max_rows} rows — use write_parquet_table"
         )
-    names = table.column_names
-    columns = [c.to_pylist() for c in table.columns]
-    rows = [
-        {k: v for k, v in zip(names, values) if v is not None}
-        for values in zip(*columns)
-    ]
     d = os.path.dirname(os.path.abspath(path)) or "."
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")
     try:
-        with os.fdopen(fd, "w") as f:
-            f.write(_json_array_text(rows))
+        with os.fdopen(fd, "wb") as f:
+            f.write(_json_array_bytes(table))
         shutil.move(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
-    return rows
+    return table
 
 
 def write_parquet_table(

@@ -66,3 +66,15 @@ def test_list_tags_generated_oracles_without_running_them(capsys, spark):
     assert main(["list", "--filter", "ivf"]) == 0
     out = capsys.readouterr().out
     assert "emb_ivf_topk                     oracled (generated)" in out
+
+
+def test_query_limit_zero_streams_every_row(capsys, spark):
+    """``--limit 0`` prints one line per result row, streamed rather
+    than collected."""
+    from airflow_subscription_etl_spark.queries import REGISTRY
+
+    n = REGISTRY["p1_projection"][0](spark, SF_DIR).count()
+    assert main(["query", "p1_projection", "--sf-dir", SF_DIR, "--limit", "0"]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == n > 20
+    assert all("p_name" in json.loads(l) for l in lines)

@@ -151,3 +151,36 @@ def test_kcore_fixed_point_and_validation(spark):
     assert a == b and len(a) == 6
     with pytest.raises(ValueError):
         kcore_peel(edges, k=0)
+
+
+def test_star_schedule_over_cap_is_never_simulated(spark, monkeypatch):
+    """Over STAR_SCHEDULE_MAX_EDGES edges, star_schedule returns no
+    schedule without simulating the edge list, and doc_cc_islands falls
+    back to the signature loop with identical components."""
+    from airflow_subscription_etl_spark import queries as Q
+    from airflow_subscription_etl_spark.operators import graph as G
+
+    # source A: one run over buckets 1..6; B: runs {1, 2} and {5, 6};
+    # C: a singleton — 7 leader edges in all
+    cells = [("A", b) for b in range(1, 7)] + [("B", b) for b in (1, 2, 5, 6)]
+    cells += [("C", 3)]
+    docs = spark.createDataFrame(
+        [(i, s, b * 100 + 7) for i, (s, b) in enumerate(cells)],
+        "doc_id long, source string, n_chars int",
+    )
+    monkeypatch.setattr(Q, "_t", lambda spark_, sf_dir_, name_: docs)
+    want = {tuple(r) for r in Q.q_doc_cc_islands(spark, "unused").collect()}
+    assert len({c for _, c in want}) == 4
+
+    chain = [(1, 2), (2, 3), (3, 4)]
+    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
+    assert G.star_schedule(pairs) == G.simulate_star_rounds(chain)
+
+    def simulated(edges):
+        raise AssertionError(f"simulated {len(edges)} edges over the cap")
+
+    monkeypatch.setattr(G, "STAR_SCHEDULE_MAX_EDGES", 2)
+    monkeypatch.setattr(G, "simulate_star_rounds", simulated)
+    assert G.star_schedule(pairs) is None
+    got = {tuple(r) for r in Q.q_doc_cc_islands(spark, "unused").collect()}
+    assert got == want

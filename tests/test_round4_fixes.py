@@ -1,11 +1,8 @@
 """Round-4 hardening: regression tests for the advisor findings
 (zorder sign-bit overflow, prefix-sum integer exactness, HALF_UP
-weight quantization, reservoir weight guard, empty expectations), and
-the JSON sink's size guard, byte parity, row order and type contract."""
+weight quantization, reservoir weight guard, empty expectations)."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,83 +75,6 @@ def test_weighted_reservoir_excludes_nonpositive_weights(spark):
     # only the 10 positive-weight rows are eligible
     assert len(out) == 10
     assert picked == set(range(10))
-
-
-def test_write_json_table_guards_big_tables(spark, tmp_path):
-    from airflow_subscription_etl_spark.sources.io import write_json_table
-
-    big = spark.range(50).selectExpr("id", "id * 2 AS v")
-    with pytest.raises(ValueError, match="driver-materializing"):
-        write_json_table(big, str(tmp_path / "t.json"), max_rows=10)
-    # at-the-bound passes and round-trips
-    small = spark.range(10).selectExpr("id", "id * 2 AS v")
-    rows = write_json_table(small, str(tmp_path / "s.json"), max_rows=10)
-    assert len(rows) == 10
-
-
-def test_write_json_table_matches_json_dumps_indent2(spark, tmp_path):
-    """The file is byte-identical to ``json.dumps(rows, indent=2)``:
-    ints, doubles, booleans, dropped NULLs, non-ASCII and escaped text."""
-    from airflow_subscription_etl_spark.sources.io import write_json_table
-
-    tricky = 'say "hi"\\ back\nslash,"end'
-    df = spark.createDataFrame(
-        [
-            (1, 29.0, None, "Zoë – 東京", True),
-            (2, 0.1, 1 << 40, tricky, False),
-            (None, None, None, None, None),
-        ],
-        "id int, price double, big long, name string, ok boolean",
-    )
-    expected = [
-        {"id": 1, "price": 29.0, "name": "Zoë – 東京", "ok": True},
-        {"id": 2, "price": 0.1, "big": 1 << 40, "name": tricky, "ok": False},
-        {},
-    ]
-    path = tmp_path / "t.json"
-    assert write_json_table(df, str(path)) == expected
-    assert path.read_bytes() == json.dumps(expected, indent=2).encode()
-
-    assert write_json_table(df.limit(0), str(path)) == []
-    assert path.read_bytes() == b"[]"
-
-
-def test_write_json_table_keeps_partition_order(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from airflow_subscription_etl_spark.sources.io import (
-        read_json_table,
-        write_json_table,
-    )
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    parts = []
-    for name, ids in (("a", [5, 4, 3]), ("b", [20, 1, 17])):
-        path = tmp_path / f"{name}.json"
-        path.write_text(json.dumps([{"id": i} for i in ids]))
-        parts.append(read_json_table(spark, str(path), schema))
-    both = parts[0].unionByName(parts[1])
-    assert both.rdd.getNumPartitions() == 2
-    rows = write_json_table(both, str(tmp_path / "t.json"))
-    assert [r["id"] for r in rows] == [5, 4, 3, 20, 1, 17]
-
-
-def test_write_json_table_rejects_nested_columns_before_any_job(spark, tmp_path):
-    from airflow_subscription_etl_spark.sources.io import write_json_table
-
-    df = spark.createDataFrame([(1, (2, "x"))], "id int, s struct<a:int,b:string>")
-    sc = spark.sparkContext
-    group = "json-sink-type-contract"
-    sc.setJobGroup(group, group)
-    try:
-        with pytest.raises(ValueError, match="column 's' of type struct"):
-            write_json_table(df, str(tmp_path / "t.json"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
-    assert not (tmp_path / "t.json").exists()
 
 
 def test_enforce_expectations_empty_rules_raise(spark):
