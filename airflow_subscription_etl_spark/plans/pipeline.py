@@ -8,17 +8,22 @@ than Airflow's skip propagation. The always-run ``notify_user``
 finalizer (TriggerRule.ALL_DONE, :334) becomes try/finally (C4).
 
 Each intent resolves what it needs once, as driver values, before any
-write: ``create``/``change`` collect the plan catalog with its labels
+write: only ``create``/``change`` open the plan catalog, and they
+collect it with its labels
 (the selected plan, the current plan's price and ``plan_labels`` all
 come from those rows); ``view``/``change``/``cancel`` collect the
 latest active row. That lookup is a filtered top-1: P3 narrows the
 table to one user, so A1's "top-1 per ``user_id``" is a global top-1,
 planned as one ``TakeOrderedAndProject`` job with no shuffle. M2/M3
 then rewrite that row by ``subscription_id``, so no plan built over
-the table is re-read after ``write_json_table`` overwrites it. The
-result row of a write comes from the Arrow table the sink returns:
-``pyarrow.compute`` finds the first row holding the max
-``subscription_id`` (create) or the target id (change/cancel), and
+the table is used after ``write_json_table`` overwrites it. Both
+tables are read through ``sources.io``'s file-version snapshots: the
+sink's fetch job leaves the written rows cached for the next intent,
+and a frame over a superseded version raises on its next action, so
+the read-overwrite-reread trap is an error, not a silent re-read of
+the new file. The result row of a write comes from the Arrow table
+the sink returns: ``pyarrow.compute`` finds the first row holding the
+max ``subscription_id`` (create) or the target id (change/cancel), and
 only that one row becomes a dict.
 
 Error-message parity with the reference's ``ValueError``s:
@@ -106,7 +111,6 @@ def run_intent(
 
     res = RunResult(intent=intent, user_id=user_id)
     try:
-        plans = read_plans(spark, plans_path)
         subs = read_user_subscriptions(spark, subs_path)
 
         if intent == "view":  # null result, NO error (decision D7, :245)
@@ -122,7 +126,9 @@ def run_intent(
         if intent in ("create", "change"):
             # fetch_subscription_plans / fetch_available…: P1+P2 labels
             # (subscription_flow.py:84–91, 127–134). The same catalog rows
-            # resolve the selected plan and the current plan's price.
+            # resolve the selected plan and the current plan's price. Only
+            # these two intents open the catalog.
+            plans = read_plans(spark, plans_path)
             catalog = with_label(
                 plans, "subscription_plan_name", "subscription_price"
             ).collect()
@@ -154,8 +160,8 @@ def run_intent(
         else:
             new_subs = cancel_subscription(subs, target_id)
 
-        # Every id and price above is a driver value, so nothing below
-        # re-reads the file write_json_table overwrites (see sources.io).
+        # Every id and price above is a driver value, so nothing after the
+        # write reads the version it supersedes (see sources.io).
         table = write_json_table(new_subs, subs_path)
         ids = table.column("subscription_id")
         key = pc.max(ids) if intent == "create" else target_id

@@ -8,11 +8,27 @@ The reference's storage is whole-file JSON arrays (`_load_json` /
   required.
 - S2 sink: full overwrite. For catalog-sized tables we keep single-file
   parity: rows come to the driver as Arrow batches from one
-  ``coalesce(1)`` partition and are encoded column by column with
-  ``pyarrow.compute`` into one JSON array, byte-identical to
-  ``json.dump(indent=2)``; the sink returns the fetched
-  ``pyarrow.Table``. At scale the same interface writes partitioned
-  parquet (the caller picks the format).
+  ``coalesce(1)`` partition, sorted back into partition order, and are
+  encoded column by column with ``pyarrow.compute`` into one JSON
+  array, byte-identical to ``json.dump(indent=2)``; the sink returns
+  the fetched ``pyarrow.Table``. At scale the same interface writes
+  partitioned parquet (the caller picks the format).
+
+S1 and S2 share one **file-version snapshot** per JSON path, so each
+version of a file is parsed at most once per process. A snapshot is a
+lineage-free ``localCheckpoint(eager=False)`` frame registered against
+the file's identity ``(st_dev, st_ino, st_size, st_mtime_ns)``, its
+SparkSession and its schema's field names and types. The sink's fetch
+job materializes the snapshot of exactly the rows it writes; later
+reads of that version scan its cached blocks. A snapshot is never
+``persist``-ed: a lost block fails the job instead of being recomputed
+from a file that has since been overwritten. The snapshot of a
+superseded version is released, so once a job has read that version,
+a frame built on it fails loudly instead of reading the newer file (a
+version no job ever read has no blocks and is still read from the
+path, as before). Single-writer discipline (SURVEY.md §7.4) is
+assumed: another process that rewrites a file in place is seen once
+its size or mtime changes.
 
 Parquet is the scale path: columnar, splittable, predicate-pushdown-
 and column-pruning-friendly — ``.explain`` on any filtered scan shows
@@ -23,20 +39,121 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import stat
 import tempfile
+import threading
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import PLANS_SCHEMA, USER_SUBSCRIPTIONS_SCHEMA
 
 
+#: Paths Spark reads as a URI (``scheme:...``) or a Hadoop glob have no
+#: single file identity; they are read without a snapshot.
+_NOT_A_FILE_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:|[{}\[\]*?\\]")
+
+
+@dataclass
+class _Snapshot:
+    """One version of one JSON file, as a lineage-free frame."""
+
+    identity: tuple[int, int, int, int]
+    spark: SparkSession
+    df: DataFrame
+
+    def serves(
+        self, identity: tuple | None, spark: SparkSession, schema: T.StructType
+    ) -> bool:
+        return (
+            self.identity == identity
+            and self.spark is spark
+            and _fields(self.df.schema) == _fields(schema)
+        )
+
+    def release(self) -> None:
+        """Drop the cached blocks: once materialized, a frame built on
+        this version fails from now on instead of recomputing it from a
+        newer file."""
+        if self.spark.sparkContext is SparkContext._active_spark_context:
+            self.df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+#: absolute path → the snapshot of the file version last read or written.
+#: Process-wide, like the files it mirrors; ``_LOCK`` orders each read's
+#: stat-to-register step and each write's register step, so a version
+#: is never registered over a newer one a concurrent reader has seen.
+_SNAPSHOTS: dict[str, _Snapshot] = {}
+_LOCK = threading.Lock()
+
+
+def _fields(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def _identity(st: os.stat_result) -> tuple[int, int, int, int]:
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _file_identity(path: str) -> tuple[int, int, int, int] | None:
+    """The identity of the regular file at ``path``; None for a missing
+    path, a directory, a glob or a URI."""
+    if _NOT_A_FILE_RE.search(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return _identity(st) if stat.S_ISREG(st.st_mode) else None
+
+
+def _register(path: str, snap: _Snapshot) -> None:
+    """Make ``snap`` the path's snapshot; the caller holds ``_LOCK``.
+
+    A snapshot of an older file version is released. One of the same
+    version (another session or schema) is only dropped, so frames
+    built on it keep working and the JVM frees its blocks once nothing
+    references it."""
+    old = _SNAPSHOTS.get(path)
+    _SNAPSHOTS[path] = snap
+    if old is not None and old.identity != snap.identity:
+        old.release()
+
+
 def read_json_table(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S1: JSON-array file → DataFrame (subscription_flow.py:27–29)."""
-    return spark.read.schema(schema).option("multiLine", True).json(path)
+    """S1: JSON-array file → DataFrame (subscription_flow.py:27–29).
+
+    Returns the path's registered file-version snapshot when the file's
+    identity ``(st_dev, st_ino, st_size, st_mtime_ns)``, the session and
+    the schema's field names and types all match it: no JSON is parsed.
+    Otherwise the file is read once into a new snapshot, checkpointed
+    lazily by the first job that uses it, and registered in place of
+    the old one. Snapshots are never ``persist``-ed, so a lost block
+    fails loudly rather than re-reading an overwritten file.
+
+    A missing path, a directory, a glob or a URI has no file identity
+    and is read as a plain scan, as before: Spark still raises
+    ``PATH_NOT_FOUND`` for a missing path.
+    """
+    key = os.path.abspath(path)
+    with _LOCK:
+        identity = _file_identity(path)
+        snap = _SNAPSHOTS.get(key)
+        if snap is not None and snap.serves(identity, spark, schema):
+            return snap.df
+        scan = spark.read.schema(schema).option("multiLine", True).json(path)
+        if identity is None:
+            return scan
+        snap = _Snapshot(identity, spark, scan.localCheckpoint(eager=False))
+        _register(key, snap)
+        return snap.df
 
 
 def read_plans(spark: SparkSession, path: str) -> DataFrame:
@@ -144,13 +261,20 @@ def write_json_table(
     the same path in one plan (self-overwrite reads zero rows). So:
     collect the (catalog-sized, ≤ thousands of rows by construction)
     table to the driver and atomically replace the file — single-writer
-    discipline, documented in SURVEY.md §7.4.1. Tables at 100 TB scale
+    discipline, documented in SURVEY.md §7.4. Tables at 100 TB scale
     use :func:`write_parquet_table` instead; this sink exists for
     byte-parity with the reference's storage format.
 
     The rows reach the driver as Arrow batches from one ``coalesce(1)``
-    partition (so the limit needs no shuffle, and rows keep partition
-    order). The file is byte-identical to ``json.dump(rows, indent=2)``
+    partition, so the limit needs no shuffle. Row order holds by
+    construction: ``coalesce`` starts its partition with the first
+    input partition that has a preferred location (a cached or
+    checkpointed one), not with input partition 0, so each row is
+    tagged with ``monotonically_increasing_id()`` below the coalesce
+    and the single partition is sorted on that tag. The plan stays one
+    job and one stage with no Exchange.
+
+    The file is byte-identical to ``json.dump(rows, indent=2)``
     but is encoded column by column with ``pyarrow.compute``: integer,
     boolean and escape-free string columns run no Python per row. Float
     and double columns, and any string column holding a character
@@ -161,17 +285,23 @@ def write_json_table(
 
     Only boolean, integral, float/double and string columns are
     accepted; any other column raises ``ValueError`` naming it, before
-    any Spark job runs.
+    any Spark job runs. For these types the JSON round trip is exact
+    (floats through ``repr``, a dropped field reads back as NULL), so
+    the fetched rows are the file's rows.
 
     Null fields are dropped per record, matching the ragged
     ``payment_status`` column of the reference (seed rows lack the key
     entirely; subscription_flow.py:222 adds it on new rows).
 
-    Returns the fetched ``pyarrow.Table``. Callers MUST derive any
-    post-write results from this return value, not from DataFrames built
-    over the old file: Spark plans are lazy and re-read the (now
-    mutated) source on every later action — the read-overwrite-reread
-    trap.
+    The fetch job also materializes the written rows as the path's new
+    file-version snapshot, keyed by the identity ``os.fstat`` reports
+    for the temp file before it is renamed over ``path`` (the rename
+    keeps inode, size and mtime). :func:`read_json_table` then serves
+    that version without parsing it. The previous version's snapshot is
+    released: once a job has read the old version, a frame built on
+    it raises on its next action instead of silently re-reading the
+    mutated file (the read-overwrite-reread trap). Callers MUST still
+    derive post-write results from the returned ``pyarrow.Table``.
 
     Raises ``ValueError`` if the table exceeds ``max_rows``: one
     ``limit(max_rows+1)`` fetch both collects the rows and bounds the
@@ -186,21 +316,36 @@ def write_json_table(
                 f"{field.dataType.simpleString()}; it takes boolean, integral, "
                 f"float/double and string columns"
             )
-    table = df.coalesce(1).limit(max_rows + 1).toArrow()
+    tag = "_json_sink_order"
+    while tag in df.columns:
+        tag += "_"
+    rows = (
+        df.withColumn(tag, F.monotonically_increasing_id())
+        .coalesce(1)
+        .sortWithinPartitions(tag)
+        .drop(tag)
+        .limit(max_rows + 1)
+        .localCheckpoint(eager=False)
+    )
+    table = rows.toArrow()
     if table.num_rows > max_rows:
         raise ValueError(
             f"write_json_table is a driver-materializing catalog sink; "
             f"table has > {max_rows} rows — use write_parquet_table"
         )
-    d = os.path.dirname(os.path.abspath(path)) or "."
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")
+    key = os.path.abspath(path)
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(key), suffix=".json.tmp")
     try:
         with os.fdopen(fd, "wb") as f:
             f.write(_json_array_bytes(table))
+            f.flush()
+            identity = _identity(os.fstat(f.fileno()))
         shutil.move(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
+    with _LOCK:
+        _register(key, _Snapshot(identity, df.sparkSession, rows))
     return table
 
 

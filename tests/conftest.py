@@ -59,6 +59,42 @@ def spark():
     s.stop()
 
 
+class PlanLog:
+    """Physical plan descriptions of the SQL executions run since the
+    last :meth:`mark` (the store is shared by every session)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.mark()
+
+    def _executions(self):
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return self.spark._jsparkSession.sharedState().statusStore().executionsList()
+
+    def mark(self) -> None:
+        execs = self._executions()
+        self.last = execs.last().executionId() if execs.size() else -1
+
+    def plans(self) -> list[str]:
+        execs = self._executions()
+        out = []
+        for i in reversed(range(execs.size())):
+            e = execs.apply(i)
+            if e.executionId() <= self.last:
+                break
+            out.append(e.physicalPlanDescription())
+        return out[::-1]
+
+    def json_parses(self) -> int:
+        """How many of those executions scan a JSON file."""
+        return sum("Scan json" in p for p in self.plans())
+
+
+@pytest.fixture()
+def plan_log(spark):
+    return PlanLog(spark)
+
+
 @pytest.fixture()
 def seed_tables(tmp_path):
     """Reference seed fixtures as JSON-array files (FIXTURES.md §1)."""

@@ -164,6 +164,23 @@ def test_cancel_tiebreak_subscription_id_desc(spark, seed_tables):
     assert by_id[1001]["subscription_status"] == "active"
 
 
+def test_only_create_and_change_open_the_catalog(spark, seed_tables, tmp_path):
+    """Views, cancels and misses never use the plan catalog, so they
+    run without one; a create still needs it."""
+    from pyspark.errors import AnalysisException
+
+    _, subs_path = seed_tables
+    no_plans = str(tmp_path / "absent" / "plans.json")
+    view = run_intent(spark, {"user_id": 101, "intent": "view"}, no_plans, subs_path)
+    assert view.result["subscription_id"] == 1001
+    with pytest.raises(ValueError, match="No active subscription for user_id 999"):
+        run_intent(spark, {"user_id": 999, "intent": "change"}, no_plans, subs_path)
+    cancel = run_intent(spark, {"user_id": 102, "intent": "cancel"}, no_plans, subs_path)
+    assert cancel.result["subscription_status"] == "inactive"
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_intent(spark, {"user_id": 101, "intent": "create"}, no_plans, subs_path)
+
+
 def _run_in_group(sc, group, fn):
     """Run ``fn`` under job group ``group``; return its result and the
     stage count of every Spark job it launched."""
@@ -225,9 +242,11 @@ def test_latest_active_lookup_has_no_exchange(spark, seed_tables):
     assert stages == [1]
 
 
-def test_json_sink_collect_has_no_exchange(spark, seed_tables):
+def test_json_sink_collect_has_no_exchange(spark, seed_tables, plan_log):
     """The sink fetches a two-partition union (the create path) in one
-    single-stage job; the collect's executed plan has no Exchange."""
+    single-stage job. The execution that plans the written snapshot
+    holds the coalesce, the order-restoring sort and the limit, and no
+    execution of the write has an Exchange."""
     from airflow_subscription_etl_spark.sources.io import (
         read_user_subscriptions,
         write_json_table,
@@ -237,17 +256,43 @@ def test_json_sink_collect_has_no_exchange(spark, seed_tables):
     subs = read_user_subscriptions(spark, subs_path)
     both = subs.unionByName(subs)
     assert both.rdd.getNumPartitions() == 2
+    plan_log.mark()
     rows, stages = _run_in_group(
         spark.sparkContext,
         "json-sink-plan",
         lambda: write_json_table(both, subs_path + ".out"),
     )
     assert len(rows) == 4 and stages == [1]
-    plan = (
-        spark._jsparkSession.sharedState()
-        .statusStore()
-        .executionsList()
-        .last()
-        .physicalPlanDescription()
-    )
-    assert "Exchange" not in plan and "CollectLimit" in plan, plan
+    plans = plan_log.plans()
+    assert not any("Exchange" in p for p in plans), plans
+    (snapshot,) = [p for p in plans if "Coalesce" in p]
+    assert "Sort" in snapshot and "CollectLimit" in snapshot, snapshot
+
+
+def test_json_parsed_once_per_file_version(spark, seed_tables, plan_log):
+    """Over a mixed 20-intent sequence only two SQL executions scan a
+    JSON file: the catalog's and the first read of the subscriptions.
+    Every later read is served from the snapshot the last write left."""
+    plans_path, subs_path = seed_tables
+    confs = [
+        {"user_id": 101, "intent": "view"},
+        {"user_id": 999, "intent": "view"},
+        {"user_id": 101, "intent": "create"},
+        {"user_id": 102, "intent": "change", "selected_plan_name": "Team"},
+        {"user_id": 101, "intent": "view"},
+        {"user_id": 101, "intent": "cancel"},
+        {"user_id": 103, "intent": "create", "selected_plan_name": "Free"},
+        {"user_id": 999, "intent": "cancel"},
+        {"user_id": 102, "intent": "view"},
+        {"user_id": 103, "intent": "change", "selected_plan_name": "Pro"},
+    ] * 2
+    plan_log.mark()
+    misses = 0
+    for conf in confs:
+        try:
+            run_intent(spark, conf, plans_path, subs_path)
+        except ValueError as e:
+            assert "No active subscription for user_id 999" in str(e)
+            misses += 1
+    assert misses == 2 and len(json.load(open(subs_path))) == 6
+    assert plan_log.json_parses() <= 2, plan_log.plans()

@@ -1,6 +1,7 @@
-"""sources.io JSON sink: size guard, byte parity with
-``json.dumps(indent=2)``, row order, type contract, and the columnar
-encoder's parity on random Arrow tables."""
+"""sources.io JSON source and sink: size guard, byte parity with
+``json.dumps(indent=2)``, row order, type contract, the columnar
+encoder's parity on random Arrow tables, and the file-version
+snapshots the source and sink share."""
 
 from __future__ import annotations
 
@@ -84,6 +85,32 @@ def test_write_json_table_keeps_partition_order(spark, tmp_path):
     assert rows.column("id").to_pylist() == [5, 4, 3, 20, 1, 17]
 
 
+def test_write_json_table_orders_cached_partition_after_file_scan(spark, tmp_path):
+    """``coalesce(1)`` starts its partition with the first input
+    partition that has a preferred location, and a cached one has one
+    where a local file scan has none: the sink must still write the
+    file-scan rows first and the appended row last."""
+    from pyspark.sql import types as T
+
+    from airflow_subscription_etl_spark.sources.io import write_json_table
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    path = tmp_path / "a.json"
+    path.write_text(json.dumps([{"id": i} for i in (5, 4, 3)]))
+    scan = spark.read.schema(schema).option("multiLine", True).json(str(path))
+    cached = spark.createDataFrame([(99,)], schema).coalesce(1).cache()
+    try:
+        cached.count()
+        both = scan.unionByName(cached)
+        assert both.rdd.getNumPartitions() == 2
+        out = tmp_path / "t.json"
+        rows = write_json_table(both, str(out))
+    finally:
+        cached.unpersist()
+    assert rows.column("id").to_pylist() == [5, 4, 3, 99]
+    assert [r["id"] for r in json.loads(out.read_text())] == [5, 4, 3, 99]
+
+
 def test_write_json_table_rejects_nested_columns_before_any_job(spark, tmp_path):
     from airflow_subscription_etl_spark.sources.io import write_json_table
 
@@ -126,6 +153,137 @@ def test_write_json_table_keeps_all_null_rows(spark, tmp_path):
     assert path.read_bytes() == json.dumps(expected, indent=2).encode()
     back = read_json_table(spark, str(path), df.schema).collect()
     assert [tuple(r) for r in back] == [tuple(r) for r in df.collect()]
+
+
+def _ids_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType([T.StructField("id", T.LongType())])
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_after_write_is_a_snapshot_hit(spark, tmp_path, plan_log):
+    """A read of the version the sink just wrote parses no JSON: its
+    plan scans the snapshot's RDD, and no execution has a JSON scan."""
+    from airflow_subscription_etl_spark.sources.io import (
+        read_json_table,
+        write_json_table,
+    )
+
+    path = str(tmp_path / "t.json")
+    write_json_table(spark.range(4), path)
+    plan_log.mark()
+    df = read_json_table(spark, path, _ids_schema())
+    assert "Scan ExistingRDD" in _plan(df) and "FileScan" not in _plan(df)
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 3]
+    assert read_json_table(spark, path, _ids_schema()) is df
+    assert plan_log.json_parses() == 0, plan_log.plans()
+
+
+def test_external_rewrite_is_seen_on_next_read(spark, tmp_path):
+    """An in-place ``json.dump`` by another writer changes the file's
+    size and mtime: the next read parses the new version."""
+    from airflow_subscription_etl_spark.sources.io import read_json_table
+
+    path = tmp_path / "t.json"
+    path.write_text(json.dumps([{"id": 1}]))
+    first = read_json_table(spark, str(path), _ids_schema())
+    assert [r.id for r in first.collect()] == [1]
+    with open(path, "w") as f:  # same inode, new size
+        json.dump([{"id": 10}, {"id": 20}], f)
+    again = read_json_table(spark, str(path), _ids_schema())
+    assert again is not first
+    assert [r.id for r in again.collect()] == [10, 20]
+
+
+def test_other_session_or_schema_reads_afresh(spark, tmp_path, plan_log):
+    """A snapshot serves only its own session and field types: another
+    session or schema parses the file again, and the frames already
+    built on the same version keep working."""
+    from pyspark.sql import types as T
+
+    from airflow_subscription_etl_spark.sources.io import (
+        read_json_table,
+        write_json_table,
+    )
+
+    path = str(tmp_path / "t.json")
+    write_json_table(spark.range(3), path)
+    mine = read_json_table(spark, path, _ids_schema())
+    plan_log.mark()
+    theirs = read_json_table(spark.newSession(), path, _ids_schema())
+    assert [r.id for r in theirs.collect()] == [0, 1, 2]
+    assert plan_log.json_parses() == 1, plan_log.plans()
+    as_text = read_json_table(
+        spark, path, T.StructType([T.StructField("id", T.StringType())])
+    )
+    assert [r.id for r in as_text.collect()] == ["0", "1", "2"]
+    assert plan_log.json_parses() == 2, plan_log.plans()
+    assert [r.id for r in mine.collect()] == [0, 1, 2]
+
+
+def test_each_path_keeps_one_checkpointed_rdd(spark, tmp_path):
+    """Every write releases the snapshot it supersedes: after N writes
+    the path holds one checkpointed RDD, the latest version's."""
+    from airflow_subscription_etl_spark.sources.io import (
+        _SNAPSHOTS,
+        read_json_table,
+        write_json_table,
+    )
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    path = str(tmp_path / "t.json")
+    write_json_table(spark.range(1), path)
+    for k in range(1, 6):
+        subs = read_json_table(spark, path, _ids_schema())
+        write_json_table(subs.unionByName(spark.range(k, k + 1)), path)
+    assert sorted(r["id"] for r in json.load(open(path))) == [0, 1, 2, 3, 4, 5]
+    latest = _SNAPSHOTS[str(tmp_path / "t.json")].df
+    latest_id = latest._jdf.queryExecution().logical().rdd().id()
+    assert cached_rdds() - before == {latest_id}
+
+
+def test_frame_on_superseded_version_raises(spark, tmp_path):
+    """A frame built on a version the sink has since overwritten fails
+    on its next action instead of returning the new file's rows."""
+    from airflow_subscription_etl_spark.sources.io import (
+        read_json_table,
+        write_json_table,
+    )
+
+    path = tmp_path / "t.json"
+    path.write_text(json.dumps([{"id": 1}, {"id": 2}]))
+    old = read_json_table(spark, str(path), _ids_schema())
+    evens = old.filter("id % 2 = 0")
+    assert [r.id for r in evens.collect()] == [2]
+    write_json_table(spark.range(10, 14), str(path))
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        evens.collect()
+
+
+def test_paths_without_a_file_identity_read_as_before(spark, tmp_path):
+    """A glob is a plain file scan, and a missing path still raises
+    ``PATH_NOT_FOUND``."""
+    from pyspark.errors import AnalysisException
+
+    from airflow_subscription_etl_spark.sources.io import read_json_table
+
+    for name in ("a", "b"):
+        (tmp_path / f"{name}.json").write_text(json.dumps([{"id": len(name)}]))
+    both = read_json_table(spark, str(tmp_path / "*.json"), _ids_schema())
+    assert "FileScan json" in _plan(both)
+    assert [r.id for r in both.collect()] == [1, 1]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_json_table(spark, str(tmp_path / "missing.json"), _ids_schema())
 
 
 _SPECIAL_TEXT = ['"', "\\", "\x00", "\n", "\x1f", "\x7f", " ", "é", "東京", "😀", ""]
