@@ -9,22 +9,23 @@ finalizer (TriggerRule.ALL_DONE, :334) becomes try/finally (C4).
 
 Each intent resolves what it needs once, as driver values, before any
 write: only ``create``/``change`` open the plan catalog, and they
-collect it with its labels
-(the selected plan, the current plan's price and ``plan_labels`` all
-come from those rows); ``view``/``change``/``cancel`` collect the
-latest active row. That lookup is a filtered top-1: P3 narrows the
-table to one user, so A1's "top-1 per ``user_id``" is a global top-1,
-planned as one ``TakeOrderedAndProject`` job with no shuffle. M2/M3
-then rewrite that row by ``subscription_id``, so no plan built over
-the table is used after ``write_json_table`` overwrites it. Both
-tables are read through ``sources.io``'s file-version snapshots: the
-sink's fetch job leaves the written rows cached for the next intent,
-and a frame over a superseded version raises on its next action, so
-the read-overwrite-reread trap is an error, not a silent re-read of
-the new file. The result row of a write comes from the Arrow table
-the sink returns: ``pyarrow.compute`` finds the first row holding the
-max ``subscription_id`` (create) or the target id (change/cancel), and
-only that one row becomes a dict.
+collect it with its labels (the selected plan, the current plan's
+price and ``plan_labels`` all come from those rows);
+``view``/``change``/``cancel`` collect the latest active row. That
+lookup is a filtered top-1: P3 narrows the table to one user, so A1's
+"top-1 per ``user_id``" is a global top-1, planned as one
+``TakeOrderedAndProject`` job with no shuffle. M2/M3 then rewrite that
+row by ``subscription_id``, so no plan built over the table is used
+after ``write_json_table`` overwrites it. In a process that runs many
+intents, both tables are read through ``sources.io``'s file-version
+snapshots: the sink's fetch job leaves the written rows cached for the
+next intent, and a frame over a superseded version raises on its next
+action, so the read-overwrite-reread trap is an error, not a silent
+re-read of the new file. A one-intent process reads each table once,
+as a plain scan, and caches nothing. The result row of a write comes
+from the Arrow table the sink returns: ``pyarrow.compute`` finds the
+first row holding the max ``subscription_id`` (create) or the target
+id (change/cancel), and only that one row becomes a dict.
 
 Error-message parity with the reference's ``ValueError``s:
 - invalid intent            (:62–63)

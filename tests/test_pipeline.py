@@ -244,10 +244,12 @@ def test_latest_active_lookup_has_no_exchange(spark, seed_tables):
 
 def test_json_sink_collect_has_no_exchange(spark, seed_tables, plan_log):
     """The sink fetches a two-partition union (the create path) in one
-    single-stage job. The execution that plans the written snapshot
-    holds the coalesce, the order-restoring sort and the limit, and no
-    execution of the write has an Exchange."""
+    single-stage job, with and without a snapshot of the target path.
+    The execution that holds the coalesce also holds the
+    order-restoring sort and the limit, and no execution of the write
+    has an Exchange."""
     from airflow_subscription_etl_spark.sources.io import (
+        _SNAPSHOTS,
         read_user_subscriptions,
         write_json_table,
     )
@@ -256,23 +258,32 @@ def test_json_sink_collect_has_no_exchange(spark, seed_tables, plan_log):
     subs = read_user_subscriptions(spark, subs_path)
     both = subs.unionByName(subs)
     assert both.rdd.getNumPartitions() == 2
-    plan_log.mark()
-    rows, stages = _run_in_group(
-        spark.sparkContext,
-        "json-sink-plan",
-        lambda: write_json_table(both, subs_path + ".out"),
-    )
-    assert len(rows) == 4 and stages == [1]
-    plans = plan_log.plans()
-    assert not any("Exchange" in p for p in plans), plans
-    (snapshot,) = [p for p in plans if "Coalesce" in p]
-    assert "Sort" in snapshot and "CollectLimit" in snapshot, snapshot
+    out = subs_path + ".out"
+    for snapshot in (False, True):
+        if snapshot:  # a path read twice gets its snapshots from the sink
+            read_user_subscriptions(spark, out)
+            read_user_subscriptions(spark, out)
+        plan_log.mark()
+        rows, stages = _run_in_group(
+            spark.sparkContext,
+            f"json-sink-plan-{snapshot}",
+            lambda: write_json_table(both, out),
+        )
+        assert len(rows) == 4 and stages == [1]
+        assert (out in _SNAPSHOTS) == snapshot
+        plans = plan_log.plans()
+        assert not any("Exchange" in p for p in plans), plans
+        (fetch,) = [p for p in plans if "Coalesce" in p]
+        assert "Sort" in fetch and "CollectLimit" in fetch, fetch
 
 
 def test_json_parsed_once_per_file_version(spark, seed_tables, plan_log):
-    """Over a mixed 20-intent sequence only two SQL executions scan a
-    JSON file: the catalog's and the first read of the subscriptions.
-    Every later read is served from the snapshot the last write left."""
+    """Over a mixed 20-intent sequence each file's first read is a plain
+    scan, parsed by every job that uses it (the first create parses the
+    catalog for its lookup and again for its write), and its second
+    read makes its snapshot: five JSON scans in the first four intents.
+    Every later read is served from the snapshot the last write left,
+    so the last 16 intents parse no JSON."""
     plans_path, subs_path = seed_tables
     confs = [
         {"user_id": 101, "intent": "view"},
@@ -288,11 +299,14 @@ def test_json_parsed_once_per_file_version(spark, seed_tables, plan_log):
     ] * 2
     plan_log.mark()
     misses = 0
-    for conf in confs:
+    for i, conf in enumerate(confs):
+        if i == 4:
+            assert plan_log.json_parses() <= 5, plan_log.plans()
+            plan_log.mark()
         try:
             run_intent(spark, conf, plans_path, subs_path)
         except ValueError as e:
             assert "No active subscription for user_id 999" in str(e)
             misses += 1
     assert misses == 2 and len(json.load(open(subs_path))) == 6
-    assert plan_log.json_parses() <= 2, plan_log.plans()
+    assert plan_log.json_parses() == 0, plan_log.plans()

@@ -155,25 +155,67 @@ def test_write_json_table_keeps_all_null_rows(spark, tmp_path):
     assert [tuple(r) for r in back] == [tuple(r) for r in df.collect()]
 
 
-def _ids_schema():
+def _ids_schema(nullable=True):
     from pyspark.sql import types as T
 
-    return T.StructType([T.StructField("id", T.LongType())])
+    return T.StructType([T.StructField("id", T.LongType(), nullable)])
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _snapshot_read(spark, path):
+    """Read ``path`` twice, as a process serving many intents does: the
+    second read is the one that makes the path's snapshot."""
+    from airflow_subscription_etl_spark.sources.io import read_json_table
+
+    read_json_table(spark, str(path), _ids_schema())
+    return read_json_table(spark, str(path), _ids_schema())
+
+
+def _cached_rdds(spark) -> set[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def test_one_read_per_path_checkpoints_nothing(spark, tmp_path):
+    """A one-intent process reads each path once: that read is a plain
+    file scan, and the sink registers and caches no snapshot for it."""
+    from airflow_subscription_etl_spark.sources.io import (
+        _SNAPSHOTS,
+        read_json_table,
+        write_json_table,
+    )
+
+    path = tmp_path / "t.json"
+    path.write_text(json.dumps([{"id": 1}, {"id": 2}]))
+    before = _cached_rdds(spark)
+    subs = read_json_table(spark, str(path), _ids_schema())
+    assert "FileScan json" in _plan(subs)
+    rows = write_json_table(subs.unionByName(spark.range(3, 4)), str(path))
+    assert rows.column("id").to_pylist() == [1, 2, 3]
+    assert str(path) not in _SNAPSHOTS
+    assert _cached_rdds(spark) == before
+
+
 def test_read_after_write_is_a_snapshot_hit(spark, tmp_path, plan_log):
-    """A read of the version the sink just wrote parses no JSON: its
-    plan scans the snapshot's RDD, and no execution has a JSON scan."""
+    """Once a path has a snapshot, a read of the version the sink just
+    wrote parses no JSON: its plan scans the snapshot's RDD, and no
+    execution has a JSON scan."""
     from airflow_subscription_etl_spark.sources.io import (
         read_json_table,
         write_json_table,
     )
 
     path = str(tmp_path / "t.json")
+    write_json_table(spark.range(2), path)
+    _snapshot_read(spark, path)
     write_json_table(spark.range(4), path)
     plan_log.mark()
     df = read_json_table(spark, path, _ids_schema())
@@ -183,6 +225,28 @@ def test_read_after_write_is_a_snapshot_hit(spark, tmp_path, plan_log):
     assert plan_log.json_parses() == 0, plan_log.plans()
 
 
+def test_snapshot_reports_the_file_scan_schema(spark, tmp_path):
+    """A hit returns the schema a file scan would: every field nullable,
+    whatever the writer's or the reader's nullability."""
+    from airflow_subscription_etl_spark.sources.io import (
+        read_json_table,
+        write_json_table,
+    )
+
+    path = str(tmp_path / "t.json")
+    write_json_table(spark.range(2), path)
+    _snapshot_read(spark, path)
+    written = write_json_table(spark.range(3), path)
+    assert written.schema.field("id").nullable
+    scan = spark.read.schema(_ids_schema(False)).option("multiLine", True).json(path)
+    assert scan.schema == _ids_schema()
+    for schema in (_ids_schema(False), _ids_schema()):
+        df = read_json_table(spark, path, schema)
+        assert "Scan ExistingRDD" in _plan(df)
+        assert df.schema == scan.schema
+        assert [r.id for r in df.collect()] == [0, 1, 2]
+
+
 def test_external_rewrite_is_seen_on_next_read(spark, tmp_path):
     """An in-place ``json.dump`` by another writer changes the file's
     size and mtime: the next read parses the new version."""
@@ -190,7 +254,8 @@ def test_external_rewrite_is_seen_on_next_read(spark, tmp_path):
 
     path = tmp_path / "t.json"
     path.write_text(json.dumps([{"id": 1}]))
-    first = read_json_table(spark, str(path), _ids_schema())
+    first = _snapshot_read(spark, path)
+    assert "Scan ExistingRDD" in _plan(first)
     assert [r.id for r in first.collect()] == [1]
     with open(path, "w") as f:  # same inode, new size
         json.dump([{"id": 10}, {"id": 20}], f)
@@ -212,7 +277,8 @@ def test_other_session_or_schema_reads_afresh(spark, tmp_path, plan_log):
 
     path = str(tmp_path / "t.json")
     write_json_table(spark.range(3), path)
-    mine = read_json_table(spark, path, _ids_schema())
+    mine = _snapshot_read(spark, path)
+    assert [r.id for r in mine.collect()] == [0, 1, 2]
     plan_log.mark()
     theirs = read_json_table(spark.newSession(), path, _ids_schema())
     assert [r.id for r in theirs.collect()] == [0, 1, 2]
@@ -223,6 +289,7 @@ def test_other_session_or_schema_reads_afresh(spark, tmp_path, plan_log):
     assert [r.id for r in as_text.collect()] == ["0", "1", "2"]
     assert plan_log.json_parses() == 2, plan_log.plans()
     assert [r.id for r in mine.collect()] == [0, 1, 2]
+    assert plan_log.json_parses() == 2, plan_log.plans()
 
 
 def test_each_path_keeps_one_checkpointed_rdd(spark, tmp_path):
@@ -234,13 +301,7 @@ def test_each_path_keeps_one_checkpointed_rdd(spark, tmp_path):
         write_json_table,
     )
 
-    sc = spark.sparkContext
-
-    def cached_rdds():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-
-    before = cached_rdds()
+    before = _cached_rdds(spark)
     path = str(tmp_path / "t.json")
     write_json_table(spark.range(1), path)
     for k in range(1, 6):
@@ -248,21 +309,57 @@ def test_each_path_keeps_one_checkpointed_rdd(spark, tmp_path):
         write_json_table(subs.unionByName(spark.range(k, k + 1)), path)
     assert sorted(r["id"] for r in json.load(open(path))) == [0, 1, 2, 3, 4, 5]
     latest = _SNAPSHOTS[str(tmp_path / "t.json")].df
-    latest_id = latest._jdf.queryExecution().logical().rdd().id()
-    assert cached_rdds() - before == {latest_id}
+    assert _cached_rdds(spark) - before == {_rdd_id(latest)}
+
+
+def test_snapshots_of_deleted_or_rewritten_files_are_released(spark, tmp_path):
+    """A registration anywhere releases the snapshots whose file is gone
+    or was rewritten by another writer: no checkpointed RDD outlives
+    the file version it mirrors."""
+    from airflow_subscription_etl_spark.sources.io import (
+        _SNAPSHOTS,
+        write_json_table,
+    )
+
+    before = _cached_rdds(spark)
+    gone, rewritten = tmp_path / "gone.json", tmp_path / "rewritten.json"
+    held = {}
+    for path in (gone, rewritten):
+        write_json_table(spark.range(2), str(path))
+        _snapshot_read(spark, path)
+        write_json_table(spark.range(3), str(path))
+        held[path] = _rdd_id(_SNAPSHOTS[str(path)].df)
+    assert _cached_rdds(spark) - before == set(held.values())
+    gone.unlink()
+    with open(rewritten, "w") as f:
+        json.dump([{"id": 7}], f)
+    write_json_table(spark.range(1), str(tmp_path / "other.json"))
+    assert str(gone) not in _SNAPSHOTS and str(rewritten) not in _SNAPSHOTS
+    assert _cached_rdds(spark) - before == set()
+
+
+def test_size_guard_leaves_no_checkpoint(spark, tmp_path):
+    """A write refused by the row guard caches nothing, even on a path
+    that has a snapshot."""
+    from airflow_subscription_etl_spark.sources.io import write_json_table
+
+    path = tmp_path / "t.json"
+    path.write_text(json.dumps([{"id": 1}]))
+    _snapshot_read(spark, path)
+    before = _cached_rdds(spark)
+    with pytest.raises(ValueError, match="driver-materializing"):
+        write_json_table(spark.range(50), str(path), max_rows=10)
+    assert _cached_rdds(spark) == before
 
 
 def test_frame_on_superseded_version_raises(spark, tmp_path):
     """A frame built on a version the sink has since overwritten fails
     on its next action instead of returning the new file's rows."""
-    from airflow_subscription_etl_spark.sources.io import (
-        read_json_table,
-        write_json_table,
-    )
+    from airflow_subscription_etl_spark.sources.io import write_json_table
 
     path = tmp_path / "t.json"
     path.write_text(json.dumps([{"id": 1}, {"id": 2}]))
-    old = read_json_table(spark, str(path), _ids_schema())
+    old = _snapshot_read(spark, path)
     evens = old.filter("id % 2 = 0")
     assert [r.id for r in evens.collect()] == [2]
     write_json_table(spark.range(10, 14), str(path))
