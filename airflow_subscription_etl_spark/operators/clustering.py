@@ -231,15 +231,11 @@ def kmeans_fit(
     iterative-ML posture — MLlib does the same; at 100 TB you cache a
     sample or accept the re-scan).
 
-    ``assign_fn`` defaults to the Arrow/numpy twin (bit-identical to
-    the HOF reference — consistent with :func:`kmeans_fit_predict`'s
-    ``impl="pandas"`` default since r7); pass ``assign_clusters`` for
-    the interpreted reference kernel.
+    ``assign_fn`` defaults to the Arrow/numpy twin
+    :func:`assign_clusters_pandas`, bit-identical to the HOF reference
+    on all inputs (see ``_round_like_spark``); pass ``assign_clusters``
+    for the interpreted reference kernel, as the parity tests do.
     """
-    # default kernel = the Arrow/numpy twin, CONSISTENT with
-    # kmeans_fit_predict's default (bit-identical to assign_clusters on
-    # all inputs — see _round_like_spark); pass assign_fn for the
-    # interpreted HOF reference kernel
     assign = assign_fn or assign_clusters_pandas
     # cached for the Lloyd iterations (standard iterative-ML posture);
     # pin()-ed to the returned assignment so library callers can free
@@ -284,40 +280,13 @@ def kmeans_fit_predict(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    impl: str = "pandas",
 ) -> DataFrame:
-    """Assignment-only wrapper of :func:`kmeans_fit`.
-
-    ``impl`` picks the per-round assignment kernel — ``"pandas"``
-    (default) runs the Arrow/numpy twin (~3× faster at sf0.1; the
-    single most expensive headline query before this flip), ``"hof"``
-    the interpreted higher-order-function reference. The twin is
-    bit-identical (assign_clusters_pandas replicates F.round exactly,
-    boundary doubles included), so BOTH impls satisfy the same
-    unrolled-CTE oracle — the semantic_dedup / pq_ann_topk
-    default-to-throughput precedent."""
-    if impl not in ("pandas", "hof"):
-        raise ValueError(f"impl must be 'pandas' or 'hof', got {impl!r}")
-    assign = assign_clusters_pandas if impl == "pandas" else assign_clusters
-    return kmeans_fit(df, k, iters, id_col, vec_col, keep_vec, assign_fn=assign)[0]
-
-
-def kmeans_fit_predict_pandas(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """:func:`kmeans_fit_predict` with the Arrow/numpy assignment twin
-    on every Lloyd round — bit-identical output (integer-micro
-    distances are order-free), vectorized per-row cost. Since r7 this
-    is exactly the default (``impl="pandas"``); the name is kept as the
-    stable explicit-twin entry point (the emb_kmeans_pandas query and
-    prior callers), delegating so there is one implementation to
-    maintain."""
-    return kmeans_fit_predict(df, k, iters, id_col, vec_col, keep_vec, impl="pandas")
+    """Assignment-only wrapper of :func:`kmeans_fit`: every Lloyd round
+    runs the Arrow/numpy twin (~3× faster than the interpreted HOF
+    reference at sf0.1), which is bit-identical to
+    :func:`assign_clusters` (it replicates F.round exactly, boundary
+    doubles included), so it satisfies the unrolled-CTE oracle."""
+    return kmeans_fit(df, k, iters, id_col, vec_col, keep_vec)[0]
 
 
 def semantic_dedup(
@@ -327,7 +296,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """SemDeDup-style embedding dedup (Abbas et al. 2023, "SemDeDup:
     Data-efficient learning at web-scale through semantic
@@ -347,20 +315,9 @@ def semantic_dedup(
     the LOWEST id of each near-duplicate pair (deterministic,
     join-free) instead of the vector farthest from the centroid.
 
-    ``impl`` picks the k-means assignment kernel — ``"pandas"``
-    (default) runs the Arrow/numpy twin, ``"hof"`` the interpreted
-    higher-order-function reference; the twin is bit-identical
-    (assign_clusters_pandas replicates F.round exactly, boundary
-    doubles included), so BOTH impls satisfy the same oracle — the
-    pq_ann_topk default-to-throughput precedent.
-
     Returns ``(id, cluster_id, is_dropped)`` for every input row.
     """
-    if impl not in ("pandas", "hof"):
-        raise ValueError(f"impl must be 'pandas' or 'hof', got {impl!r}")
-    assigned = kmeans_fit_predict(
-        df, k, iters, id_col, vec_col, keep_vec=True, impl=impl
-    )
+    assigned = kmeans_fit_predict(df, k, iters, id_col, vec_col, keep_vec=True)
     # quantize + self-norm map-side, BEFORE the pair join: per-pair
     # work is then a bare integer dot product (same staging as
     # similarity.all_pairs_ann). |q| ≤ ~1e6 ⇒ dot ≤ dims·1e12 — int64-

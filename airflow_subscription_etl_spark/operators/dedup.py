@@ -49,16 +49,12 @@ def _check_banding(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def normalized_text(col: Column) -> Column:
-    return F.regexp_replace(F.lower(col), r"\s+", " ")
-
-
 def norm_tokens(col: Column) -> Column:
     """Whitespace tokens of the lowercased text.
 
-    ``split`` on ``\\s+`` already collapses whitespace runs, so the
-    extra ``normalized_text`` regex pass is redundant for tokenization
-    (one less full-text regex per row in every hot path).
+    ``split`` on ``\\s+`` already collapses whitespace runs, so no
+    separate whitespace-normalizing regex pass runs first (one less
+    full-text regex per row in every hot path).
     """
     return F.split(F.trim(F.lower(col)), r"\s+")
 
@@ -870,41 +866,6 @@ def _simhash_band_pairs(
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-# --- exact n-gram Jaccard ----------------------------------------------------
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    k_shingle: int = 3,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact Jaccard over word k-shingles for given candidate (id_a, id_b)
-    pairs — the verification stage behind MinHash/SimHash candidates.
-
-    |A∩B| / |A∪B| via array_intersect / array_union on the (distinct)
-    shingle arrays; the pair table is joined twice against the shingled
-    docs (broadcast when small).
-    """
-    sh = df.select(
-        F.col(id_col), norm_tokens(F.col(text_col)).alias("_toks")
-    ).select(
-        id_col, shingles_of_tokens(F.col("_toks"), k_shingle).alias("sh")
-    ).persist()
-    out = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-    return pin(out, sh)
 
 
 def span_dedup(

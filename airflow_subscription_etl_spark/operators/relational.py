@@ -1,4 +1,4 @@
-"""Relational operators (SURVEY.md §2.2–§2.5): P1–P6, J1–J4, A1–A3, E1–E6.
+"""Relational operators (SURVEY.md §2.2–§2.5): P1–P6, A1–A2, E1–E6.
 
 Each operator is a pure ``DataFrame -> DataFrame`` transform, composable
 via ``df.transform(...)``. Everything stays JVM-side (built-in
@@ -8,9 +8,10 @@ the hot path.
 Scale posture per operator family:
 - P* projections/filters: pushed to the scan by Catalyst (column
   pruning + predicate pushdown on parquet).
-- J* joins: catalog-sized build sides get an explicit
-  ``F.broadcast`` hint — zero shuffle; fact-fact joins shuffle on the
-  key and AQE handles skew.
+- J* lookups and the A3 existence check have no operator here:
+  ``plans.pipeline.run_intent`` resolves them as collected driver
+  values, and the ``j1_lookup``, ``j2_left_existence`` and
+  ``a3_existence_counts`` queries are plain DataFrame joins.
 - A1 top-1-per-key: a single shuffle on the partition key; at 1000
   executors this is the canonical window pattern.
 - A2 global max: a top-1 over the id column (``orderBy(desc)
@@ -79,51 +80,6 @@ def coalesce_default(col: str | Column, default) -> Column:
     return F.coalesce(c, F.lit(default))
 
 
-# --- J: joins ---------------------------------------------------------------
-
-
-def lookup_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """J1/J4: equi lookup join against a catalog-sized dimension
-    (subscription_flow.py:121 — the `next(...)` linear scan).
-
-    The dim side is broadcast: at 100 TB of fact data this is the only
-    sane plan (no shuffle of the fact table; hash map ships to every
-    executor).
-    """
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
-def lookup_required(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    error: str,
-) -> DataFrame:
-    """J2/J3: lookup that must match, with custom error parity
-    (subscription_flow.py:177–179, 207–209).
-
-    Left join + emptiness check preserves the reference's explicit
-    ``ValueError`` message instead of silently dropping rows.
-
-    The no-match probe is an explicit join-indicator column, not a
-    null test on the first dim attribute (r12 review): a matched dim
-    row whose first attribute is legitimately NULL is not a missing
-    match, and a key-only dim has no attribute to test at all — the
-    old probe raised on the former and silently skipped the required
-    check on the latter.
-    """
-    marked = dim.withColumn("__matched", F.lit(True))
-    joined = fact.join(F.broadcast(marked), on=on, how="left")
-    if joined.filter(F.col("__matched").isNull()).limit(1).count() > 0:
-        raise ValueError(error)
-    return joined.drop("__matched")
-
-
 # --- A: aggregations --------------------------------------------------------
 
 
@@ -166,15 +122,6 @@ def next_subscription_id(subs: DataFrame) -> int:
     )
     max_id = top[0][0] if top else None
     return int(1000 if max_id is None else max_id) + 1
-
-
-def is_empty(df: DataFrame) -> bool:
-    """A3: emptiness/existence check (subscription_flow.py:99–100 etc.).
-
-    ``limit(1)`` keeps the action O(first partition with a row), not a
-    full count.
-    """
-    return df.limit(1).count() == 0
 
 
 # --- E: scalar expressions --------------------------------------------------

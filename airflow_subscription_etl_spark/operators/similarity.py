@@ -938,76 +938,6 @@ def ivf_topk(
     return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
 
 
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: assignments written as parquet
-    PARTITIONED BY ``list_id`` plus a tiny centroids table — the
-    write-once/probe-many deployment the in-one-call :func:`ivf_topk`
-    docstring promises. At 100 TB this is the difference between
-    rebuilding k-means per query and a metadata-only partition-pruned
-    scan of ``nprobe``/``n_lists`` of the corpus per query.
-    """
-    assigned, centroids = ivf_assignments(
-        df, n_lists, lloyd_iters, id_col=id_col, vec_col=vec_col
-    )
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/assignments"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a materialized IVF index (:func:`build_ivf_index`).
-
-    The probe-list filter is an ``isin`` on the PARTITION column, so it
-    prunes at planning time — the scan touches only the ``nprobe``
-    chosen directories (assert-tested via PartitionFilters in
-    tests/test_ivf_index.py); everything else is the exact per-list
-    scorer. Centroids load driver-side (n_lists rows — KBs).
-    """
-    centroids = spark.read.parquet(f"{path}/centroids")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe_rows = (
-        centroids.withColumn(
-            "_d2",
-            F.aggregate(
-                F.zip_with(
-                    F.col("centroid"),
-                    q,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .orderBy(F.col("_d2").asc(), F.col("list_id").asc())
-        .limit(nprobe)
-        .select("list_id")
-        .collect()
-    )
-    probe_ids = [r["list_id"] for r in probe_rows]
-    candidates = (
-        spark.read.parquet(f"{path}/assignments")
-        .filter(F.col("list_id").isin(probe_ids))
-        .select(id_col, vec_col)
-    )
-    return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
-
-
 def centroid_per_label(
     df: DataFrame,
     dims: int = 64,
@@ -1527,9 +1457,9 @@ def write_rp_index(
 ) -> None:
     """Materialize the JL random-projection index — the "project once,
     probe many" deployment :func:`random_projection_topk`'s docstring
-    promises, delivered the way the family's other indexes are
-    (build_ivf_index: partitioned assignments; write_banded_signature
-    _index: bucketed bands). Writes two parquet tables under ``path``:
+    promises, delivered the way the family's other index is
+    (write_banded_signature_index: bucketed bands). Writes two parquet
+    tables under ``path``:
 
     - ``vectors``: ``(id, full vector, rp_proj array<bigint>)`` — the
       exact int64 projection every per-query call of the one-shot
@@ -2043,31 +1973,6 @@ def embedding_dim_stats(
     )
 
 
-def standardize_embeddings(
-    df: DataFrame,
-    stats: list[tuple[float, float]],
-    vec_col: str = "embedding",
-    out_col: str = "embedding_std",
-) -> DataFrame:
-    """Map-only (x−mean)/std per dimension against driver-held stats
-    (k·d doubles — the same bounded state as k-means centroids). Zero
-    shuffles; zero-variance dims pass through unscaled."""
-    means = F.array(*[F.lit(float(m)) for m, _ in stats])
-    stds = F.array(
-        *[F.lit(float(v) ** 0.5 if v > 0 else 1.0) for _, v in stats]
-    )
-    idx = F.transform(F.col(vec_col), lambda _, i: i)
-    return df.withColumn(
-        out_col,
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            idx,
-            lambda x, i: (x - F.element_at(means, i + 1))
-            / F.element_at(stds, i + 1),
-        ),
-    )
-
-
 # --- product quantization (IVF-PQ's compression half) ------------------------
 
 
@@ -2333,31 +2238,6 @@ def pq_topk_pandas(
     return scored.orderBy(
         F.col("approx_d2_micro").asc(), F.col(id_col).asc()
     ).limit(k)
-
-
-def pq_ann_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    impl: str = "pandas",
-) -> DataFrame:
-    """THE entry point for PQ retrieval. Dispatches to the Arrow/numpy
-    scorer by default (``impl="pandas"`` → :func:`pq_topk_pandas`, the
-    declared throughput path — ~3× faster than the interpreted-HOF
-    form at sf0.1) so a bulk-encode pipeline never lands on the
-    reference implementation by accident; ``impl="hof"`` selects
-    :func:`pq_topk`, the engine-portable pure-SQL reference both are
-    oracle-checked against. Results are bit-identical either way
-    (integer-micro distances, order-free sums)."""
-    if impl == "pandas":
-        return pq_topk_pandas(df, query_vec, k, m, n_codes, id_col, vec_col)
-    if impl == "hof":
-        return pq_topk(df, query_vec, k, m, n_codes, id_col, vec_col)
-    raise ValueError(f"unknown impl={impl!r} (expected 'pandas' or 'hof')")
 
 
 def ivfpq_topk(

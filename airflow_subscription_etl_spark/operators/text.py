@@ -198,16 +198,6 @@ SCRUB_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def scrub_text(col: Column) -> Column:
-    """Redact emails, URLs, and phone-shaped numbers — the standard
-    pre-training text-cleaning pass. Chained JVM regexp_replace:
-    map-only, whole-stage-codegen'd, trivially partition-parallel."""
-    out = col
-    for pat, repl in SCRUB_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def with_scrubbed(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Scrubbed text plus redaction counts for pipeline monitoring.
 
@@ -775,7 +765,7 @@ def write_nb_model(
     TRAINING frame — a split, or the whole labeled corpus) and persist
     it — the train-once/score-many deployment shape the engine's other
     learned artifacts follow (write_bpe_vocab, write_rp_index,
-    build_ivf_index). Layout: ``<path>/model`` (cand, bucket,
+    write_banded_signature_index). Layout: ``<path>/model`` (cand, bucket,
     lp_micro — dense classes×num_buckets), ``<path>/prior`` (cand,
     prior_micro), ``<path>/meta`` (num_buckets) — all catalog-sized."""
     feats = feature_hashing(
@@ -1412,12 +1402,11 @@ def write_bpe_vocab(
 ) -> None:
     """Train the BPE merges ONCE and persist them — the
     train-once/apply-many deployment shape every index in this engine
-    follows (write_rp_index, build_ivf_index,
-    write_banded_signature_index). A tokenizer is trained once per
-    corpus release and applied to every later ingest; re-learning per
-    encode call (what :func:`bpe_encode` does, correct for its
-    self-contained contract) would re-pay the corpus word-count scan
-    and the merge rounds every time.
+    follows (write_rp_index, write_banded_signature_index). A tokenizer
+    is trained once per corpus release and applied to every later
+    ingest; re-learning per encode call (what :func:`bpe_encode` does,
+    correct for its self-contained contract) would re-pay the corpus
+    word-count scan and the merge rounds every time.
 
     Layout: ``<path>/merges`` (the n_merges-row rule table, exactly
     :func:`bpe_merges`' output) + ``<path>/meta`` (top_words,

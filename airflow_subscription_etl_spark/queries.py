@@ -1592,8 +1592,8 @@ def q_approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct parts per supplier via the PORTABLE KMV
     sketch (operators/sketch.py) — md5-based, so the estimate is
     bit-identical in any engine and fully oracle-checkable, unlike
-    native HLL whose estimates are implementation-defined (the native
-    path is demonstrated by :func:`q_hll_native_distinct`, pytest-only).
+    native HLL (``approx_count_distinct``) whose estimates are
+    implementation-defined.
     The exact hash-distinct count rides along for error visibility."""
     from .operators.sketch import kmv_distinct  # noqa: PLC0415
 
@@ -1621,17 +1621,6 @@ SELECT l_suppkey,
        END AS kmv_estimate
 FROM r GROUP BY 1
 """
-
-
-def q_hll_native_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native HLL approx_count_distinct per supplier — kept as the
-    Spark-idiomatic fast path (pytest pins its error band against the
-    exact count; not registered: HLL estimates are engine-specific)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3298,7 +3287,7 @@ FROM u
 
 
 def q_doc_scrub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus cleaning (operators/text.py::scrub_text): redact
+    """Corpus cleaning (operators/text.py::with_scrubbed): redact
     email/URL/phone patterns, surface redaction counts. Map-only
     chained JVM regexp_replace. The synthetic corpus contains few or
     no such patterns — the md5 of the scrubbed text still pins that
@@ -3738,40 +3727,6 @@ SELECT CAST(est.regionkey AS BIGINT) AS regionkey, est.kmv_region_estimate,
        ex.exact_region_customers, ex.n_nations
 FROM est JOIN ex USING (regionkey)
 """
-
-
-def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native datasketches-HLL version of the rollup (hll_sketch_agg →
-    hll_union_agg) — the Spark-idiomatic fast path, pytest-only: HLL
-    estimates are implementation-defined, so it cannot hash-match a
-    cross-engine oracle (the registered KMV variant can).
-    """
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    per_nation = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_regionkey", "n_name")
-        .agg(
-            F.hll_sketch_agg("c_custkey").alias("sketch"),
-            F.countDistinct("c_custkey").alias("exact_nation"),
-        )
-    )
-    return (
-        per_nation.groupBy("n_regionkey")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
-                "approx_region_customers"
-            ),
-            F.sum("exact_nation").alias("exact_region_customers"),
-            F.count("*").alias("n_nations"),
-        )
-        .select(
-            F.col("n_regionkey").cast("bigint").alias("regionkey"),
-            "approx_region_customers",
-            "exact_region_customers",
-            "n_nations",
-        )
-    )
 
 
 def q_emb_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4405,12 +4360,12 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulators, so even this loop hash-matches a DuckDB oracle (the
     oracle unrolls the iterations as CTEs; see kmeans_oracle_sql).
 
-    Runs kmeans_fit_predict's DEFAULT kernel — since r7 the Arrow/numpy
-    assignment twin (bit-identical to the HOF reference on all inputs;
-    ~3× faster at sf0.1, previously the single most expensive headline
-    query). The interpreted-HOF reference kernel stays selectable
-    (impl="hof") and is pinned to the twin by the parity tests in
-    tests/test_clustering.py and tests/test_round6_fixes.py."""
+    kmeans_fit_predict runs the Arrow/numpy assignment twin
+    (bit-identical to the HOF reference on all inputs; ~3× faster at
+    sf0.1). The interpreted-HOF reference kernel,
+    ``kmeans_fit(..., assign_fn=assign_clusters)``, is pinned to the
+    twin by the parity tests in tests/test_clustering.py. The
+    ``emb_kmeans_pandas`` registry name runs this same function."""
     from .operators.clustering import (  # noqa: PLC0415
         kmeans_cluster_summary,
         kmeans_fit_predict,
@@ -8867,21 +8822,6 @@ SELECT '3_near_dedup', CAST(COUNT(*) AS BIGINT),
 
 
 
-def q_emb_kmeans_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy twin of emb_kmeans (clustering.py::
-    kmeans_fit_predict_pandas): every Lloyd assignment round runs as
-    vectorized batch math instead of interpreted HOFs — ~3× faster at
-    sf0.1, BIT-IDENTICAL output (integer-micro distances are
-    order-free), checked against the SAME unrolled-CTE oracle."""
-    from .operators.clustering import (  # noqa: PLC0415
-        kmeans_cluster_summary,
-        kmeans_fit_predict_pandas,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return kmeans_cluster_summary(kmeans_fit_predict_pandas(emb, k=8, iters=3))
-
-
 def q_emb_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss random-projection prefilter retrieval
     (similarity.random_projection_topk): micro-quantized vectors folded
@@ -8894,11 +8834,10 @@ def q_emb_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit.
 
     Runs the Arrow/numpy twin (random_projection_topk_pandas) — the
-    default-to-throughput pattern (pq_ann_topk, semantic_dedup,
-    kmeans): the prefilter is exact int64 arithmetic in both kernels,
-    so the twin and the interpreted-HOF reference
-    (random_projection_topk, pinned equal by tests/test_round7_ops.py)
-    satisfy the SAME oracle."""
+    default-to-throughput pattern (semantic_dedup, kmeans): the
+    prefilter is exact int64 arithmetic in both kernels, so the twin
+    and the interpreted-HOF reference (random_projection_topk, pinned
+    equal by tests/test_round7_ops.py) satisfy the SAME oracle."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = _query_vector(spark, sf_dir)
     return similarity.random_projection_topk_pandas(
@@ -8914,7 +8853,7 @@ def q_emb_rp_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``rp_proj array<bigint>`` column next to the vectors — the
     "project once, probe many" deployment the one-shot operator's
     docstring promises (VERDICT r7 #3), delivered like the family's
-    other indexes (build_ivf_index, write_banded_signature_index). The
+    other index (write_banded_signature_index). The
     probe projects only the query (driver-side exact ints) and scores
     the stored r-dim ints — no quantization, no sign fold, no validity
     pass at probe time (plan-pinned in tests/test_round8_ops.py: no
@@ -9677,7 +9616,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "doc_bigram_lm": (q_doc_bigram_lm, SQL_DOC_BIGRAM_LM),
     "doc_bm25_topk": (q_doc_bm25_topk, SQL_DOC_BM25),
     "emb_kmeans": (q_emb_kmeans, SQL_EMB_KMEANS),
-    "emb_kmeans_pandas": (q_emb_kmeans_pandas, SQL_EMB_KMEANS),
+    "emb_kmeans_pandas": (q_emb_kmeans, SQL_EMB_KMEANS),
     "graph_pagerank": (q_graph_pagerank, SQL_GRAPH_PAGERANK),
     "ev_resample_hourly": (q_ev_resample_hourly, SQL_EV_RESAMPLE),
     "ev_retention_cohorts": (q_ev_retention_cohorts, SQL_EV_RETENTION),

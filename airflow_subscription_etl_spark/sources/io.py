@@ -321,7 +321,7 @@ def write_json_table(
     collect the (catalog-sized, ≤ thousands of rows by construction)
     table to the driver and atomically replace the file — single-writer
     discipline, documented in SURVEY.md §7.4. Tables at 100 TB scale
-    use :func:`write_parquet_table` instead; this sink exists for
+    use ``DataFrame.write.parquet`` instead; this sink exists for
     byte-parity with the reference's storage format.
 
     The rows reach the driver as Arrow batches from one ``coalesce(1)``
@@ -371,7 +371,7 @@ def write_json_table(
     ``limit(max_rows+1)`` fetch both collects the rows and bounds the
     driver at one row past the guard. This sink is driver-materializing
     by design and the guard keeps it from being silently pointed at a
-    fact table. Use :func:`write_parquet_table` for anything big.
+    fact table. Use ``DataFrame.write.parquet`` for anything big.
     """
     for field in df.schema.fields:
         if not isinstance(field.dataType, _JSON_SINK_TYPES):
@@ -403,7 +403,7 @@ def write_json_table(
             _unpersist(rows)
         raise ValueError(
             f"write_json_table is a driver-materializing catalog sink; "
-            f"table has > {max_rows} rows — use write_parquet_table"
+            f"table has > {max_rows} rows — use DataFrame.write.parquet"
         )
     fd, tmp = tempfile.mkstemp(dir=os.path.dirname(key), suffix=".json.tmp")
     try:
@@ -428,16 +428,6 @@ def _nullable_col(field: T.StructField):
     if field.nullable:
         return col
     return F.when(col.isNotNull(), col).alias(field.name)
-
-
-def write_parquet_table(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Scale-path sink: partitioned parquet, overwrite."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def ensure_query_confs(spark: SparkSession) -> None:
@@ -483,129 +473,3 @@ def read_star_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def read_csv_table(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """CSV source with a PINNED schema — never ``inferSchema`` (a full
-    extra pass over 100 TB just to guess types)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", header)
-        .option("mode", "FAILFAST")
-        .csv(path)
-    )
-
-
-def write_csv_table(df: DataFrame, path: str, header: bool = True) -> None:
-    """CSV sink (directory of part files; splittable on read)."""
-    df.write.mode("overwrite").option("header", header).csv(path)
-
-
-def read_ndjson_table(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """NDJSON (one object per line) source — unlike the reference's
-    JSON-array files this is splittable, so a single huge file still
-    parallelizes across the cluster. Schema pinned for the same
-    no-inference-pass reason as CSV."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_ndjson_table(df: DataFrame, path: str) -> None:
-    """NDJSON sink: Spark's native JSON writer (one object per line,
-    one file per partition) — the scale-path JSON format."""
-    df.write.mode("overwrite").json(path)
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_files: int
-) -> int:
-    """Compact a parquet directory to ``target_files`` files — the
-    small-files maintenance op every long-running ingest needs (a 100 TB
-    table fed by streaming micro-batches accretes millions of tiny
-    files; NameNode/liststatus and task-scheduling costs scale with
-    file COUNT, not bytes).
-
-    Rewrites to a sibling temp dir then swaps via two renames through
-    the Hadoop FileSystem API (:mod:`..streaming.fsio` — r10, so the
-    swap works on whatever filesystem ``path`` names, not just POSIX).
-    NOT fully atomic: there is a window between the renames where
-    ``path`` does not exist, and a crash inside it strands the live
-    data in ``.compact.old`` — RECOVERED on the next call (the
-    drift-rotation convention: if ``path`` is missing but the old dir
-    exists, it is restored before any cleanup; a half-written
-    ``.compact.tmp`` is always safe to discard). On object stores the
-    renames are copy+delete — correct by the same invariant, just not
-    instantaneous; a zero-downtime swap needs the pointer-file pattern
-    of :mod:`..streaming.sinks`. ``coalesce`` (not ``repartition``)
-    avoids a shuffle — merging files is a narrow dependency. Returns
-    the file count after compaction.
-    """
-    from ..streaming import fsio  # noqa: PLC0415
-
-    tmp = path.rstrip("/") + ".compact.tmp"
-    old = path.rstrip("/") + ".compact.old"
-    # crash recovery BEFORE cleanup: between the two renames the live
-    # data sits in .compact.old — restore it rather than deleting it
-    if not fsio.is_dir(spark, path) and fsio.is_dir(spark, old):
-        fsio.rename(spark, old, path)
-    fsio.delete(spark, old)
-    fsio.delete(spark, tmp)
-    df = spark.read.parquet(path)
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    fsio.rename(spark, path, old)
-    fsio.rename(spark, tmp, path)
-    fsio.delete(spark, old)
-    return len(
-        [n for n in fsio.list_names(spark, path) if n.endswith(".parquet")]
-    )
-
-
-def read_orc_table(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC source — the other columnar format with predicate pushdown,
-    column pruning, and stripe-level min/max skipping (parity matters
-    for warehouses that standardized on ORC/Hive). Schema optional:
-    ORC files carry their schema, so no inference pass happens either
-    way; pass one to FAIL FAST on drift instead of at first action."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)
-
-
-def write_orc_table(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """ORC sink (snappy, overwrite), optionally hive-partitioned."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_ndjson_relaxed(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """PERMISSIVE NDJSON source: malformed lines land in a
-    ``_corrupt_record`` column instead of failing the job — the
-    real-world web-crawl ingestion posture where one broken line in
-    100 TB must not kill the pipeline (contrast ``read_ndjson_table``,
-    which is strict-by-schema, and CSV's FAILFAST).
-
-    Callers split the frame on ``_corrupt_record IS NULL``: clean rows
-    continue, corrupt ones go to a quarantine sink with full fidelity
-    (the raw line is preserved verbatim for replay after a parser fix).
-    """
-    s = T.StructType(
-        [*schema.fields, T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.schema(s)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )

@@ -1,17 +1,22 @@
 """k-means properties: assignment covers every vector, distortion is
 non-increasing across iterations, and results are partitioning-
-invariant (the determinism claim the DuckDB oracle relies on)."""
+invariant (the determinism claim the DuckDB oracle relies on); the
+Arrow/numpy twin's rounding matches Spark's HALF_UP at every
+magnitude."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from airflow_subscription_etl_spark.operators.clustering import (
+    _round_like_spark,
     assign_clusters,
     kmeans_cluster_summary,
     kmeans_fit_predict,
 )
+from airflow_subscription_etl_spark.oracles.lsh_ref import _round_half_up_spark
 from airflow_subscription_etl_spark.sources.io import read_star_table
 
 SF = "/root/testdata/sf0.001"
@@ -103,8 +108,8 @@ def test_kmeans_pandas_twin_bit_identical(spark):
     from airflow_subscription_etl_spark.operators.clustering import (
         assign_clusters,
         assign_clusters_pandas,
+        kmeans_fit,
         kmeans_fit_predict,
-        kmeans_fit_predict_pandas,
     )
 
     rows = [(i, [float((i * 7 + j * 3) % 11) / 11.0 for j in range(6)]) for i in range(60)]
@@ -113,6 +118,44 @@ def test_kmeans_pandas_twin_bit_identical(spark):
     a = sorted(map(tuple, assign_clusters(df, cents).collect()))
     b = sorted(map(tuple, assign_clusters_pandas(df, cents).collect()))
     assert a == b
-    fa = sorted(map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="hof").collect()))
-    fb = sorted(map(tuple, kmeans_fit_predict_pandas(df, k=4, iters=2).collect()))
+    fa = sorted(
+        map(tuple, kmeans_fit(df, 4, 2, assign_fn=assign_clusters)[0].collect())
+    )
+    fb = sorted(map(tuple, kmeans_fit_predict(df, 4, 2).collect()))
     assert fa == fb
+
+
+# --- _round_like_spark: large-magnitude boundary guard (ADVICE r6) ----------
+
+
+def test_round_like_spark_large_magnitude_parity():
+    """Once ulp(v) nears the ±5e-7 probe band (|v| ≳ 2^31) the two
+    probe additions can collapse to the same double and miss a true
+    boundary; the magnitude guard must route those through the exact
+    Decimal path. Parity vs the Decimal replica elementwise across
+    boundary-adjacent doubles at magnitudes 2^31..2^36."""
+    vals = []
+    for e in (31, 32, 33, 34, 36):
+        base = float(2**e) + 12345.0
+        for frac in (0.5, 0.49999999999999994, 0.499999, 0.500001):
+            v = base + frac
+            for _ in range(3):
+                vals.append(v)
+                v = np.nextafter(v, 0.0)
+            vals.append(np.nextafter(base + frac, np.inf))
+    raw = np.array(vals, dtype=np.float64)
+    got = _round_like_spark(raw.copy())
+    want = np.array([_round_half_up_spark(float(v)) for v in raw], dtype=np.int64)
+    mismatch = np.flatnonzero(got != want)
+    assert mismatch.size == 0, [
+        (repr(float(raw[i])), int(got[i]), int(want[i])) for i in mismatch[:5]
+    ]
+
+
+def test_round_like_spark_small_magnitude_unchanged():
+    """The guard must not perturb the normalized-embedding regime."""
+    rng = np.random.default_rng(7)
+    raw = rng.uniform(0.0, 4_000_000.0, size=10_000)
+    got = _round_like_spark(raw.copy())
+    want = np.array([_round_half_up_spark(float(v)) for v in raw], dtype=np.int64)
+    assert (got == want).all()

@@ -59,16 +59,6 @@ def test_simhash_near_pairs(docs):
     assert got.get((0, 1)) == 0  # identical docs → distance 0
 
 
-def test_ngram_jaccard_verification(docs, spark):
-    cand = spark.createDataFrame([(0, 1), (0, 4)], "id_a bigint, id_b bigint")
-    out = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, cand).collect()
-    }
-    assert out[(0, 1)] == 1.0
-    assert out[(0, 4)] == 0.0
-
-
 def test_brute_force_topk_self_first(spark):
     rows = [
         (0, [1.0, 0.0, 0.0]),

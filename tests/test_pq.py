@@ -1,8 +1,11 @@
 """Product quantization: codebook determinism, encode/score consistency,
-and ADC recall against the exact float path on real testdata vectors."""
+and ADC recall against the exact float path on real testdata vectors;
+the Arrow/numpy scorer's id types, plan shape and bit parity with the
+HOF reference on small synthetic corpora."""
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
 from airflow_subscription_etl_spark.operators import similarity as S
@@ -138,3 +141,91 @@ def test_pandas_twin_bit_exact_parity(emb):
         map(str, S.pq_topk_pandas(emb, qv, k=n, m=M, n_codes=CODES).collect())
     )
     assert hof == pnd
+
+
+# --- small synthetic corpus: the pandas scorer's id types and plan shape ---
+
+SMALL_DIMS, SMALL_M, SMALL_CODES = 8, 2, 4
+
+
+def _small_vec(i: int) -> list[float]:
+    return [float((i * 7 + j * 3) % 11) / 11.0 for j in range(SMALL_DIMS)]
+
+
+@pytest.fixture(scope="module")
+def small_emb(spark):
+    rows = [(i, _small_vec(i)) for i in range(40)]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").cache()
+
+
+def test_pq_topk_pandas_string_ids(spark, small_emb):
+    """The mapInPandas output schema must derive the id type from the
+    input schema — a hardcoded `long` miscast string ids."""
+    semb = small_emb.select(
+        F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "embedding",
+    )
+    qv = _small_vec(0)
+    out = S.pq_topk_pandas(semb, qv, k=5, m=SMALL_M, n_codes=SMALL_CODES).collect()
+    assert len(out) == 5
+    assert all(r["vec_id"].startswith("doc-") for r in out)
+    assert dict(S.pq_topk_pandas(semb, qv, k=5, m=SMALL_M, n_codes=SMALL_CODES).dtypes)[
+        "vec_id"
+    ] == "string"
+
+
+def test_pq_topk_pandas_int_ids_match_hof(spark, small_emb):
+    """Non-bigint integer ids keep their type and the results still
+    bit-match the HOF reference."""
+    iemb = small_emb.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
+    qv = _small_vec(3)
+    a = [
+        tuple(r)
+        for r in S.pq_topk(iemb, qv, k=8, m=SMALL_M, n_codes=SMALL_CODES).collect()
+    ]
+    b = [
+        tuple(r)
+        for r in S.pq_topk_pandas(
+            iemb, qv, k=8, m=SMALL_M, n_codes=SMALL_CODES
+        ).collect()
+    ]
+    assert a == b
+
+
+def test_pq_topk_pandas_scores_in_mapinpandas(spark, small_emb):
+    plan = (
+        S.pq_topk_pandas(small_emb, _small_vec(1), k=5, m=SMALL_M, n_codes=SMALL_CODES)
+        ._jdf.queryExecution()
+        .toString()
+    )
+    assert "MapInPandas" in plan
+
+
+def test_pq_topk_stays_jvm_side(spark, small_emb):
+    plan = (
+        S.pq_topk(small_emb, _small_vec(1), k=5, m=SMALL_M, n_codes=SMALL_CODES)
+        ._jdf.queryExecution()
+        .toString()
+    )
+    assert "MapInPandas" not in plan
+
+
+def test_pq_pandas_parity_with_hof_twin(spark):
+    """Both PQ kernels must agree exactly — codes and integer scores —
+    now that the pandas side routes through _round_like_spark."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = [0.1] * 8
+    a = sorted(
+        tuple(r) for r in S.pq_topk(df, q, k=40, m=4, n_codes=8).collect()
+    )
+    b = sorted(
+        tuple(r)
+        for r in S.pq_topk_pandas(df, q, k=40, m=4, n_codes=8).collect()
+    )
+    assert a == b

@@ -56,28 +56,6 @@ def test_p4_validate_intent():
         R.validate_intent("refund")
 
 
-def test_j1_lookup_join(subs, plans):
-    out = R.lookup_join(subs, plans, "subscription_plan_id")
-    assert out.count() == 2
-    assert "subscription_plan_name" in out.columns
-
-
-def test_j2_lookup_required_raises_on_orphan(spark, plans):
-    """J2/D8: a fact row whose key has no catalog match is an error
-    with the reference's message, not a silent drop."""
-    orphan = spark.createDataFrame(
-        [(1, 101, 99, "active", "2025-01-01", "2025-12-31", None)],
-        USER_SUBSCRIPTIONS_SCHEMA,
-    )
-    with pytest.raises(ValueError, match="Selected plan not found"):
-        R.lookup_required(orphan, plans, "subscription_plan_id", "Selected plan not found")
-
-
-def test_j2_lookup_required_passes_on_match(subs, plans):
-    out = R.lookup_required(subs, plans, "subscription_plan_id", "unused")
-    assert out.count() == 2
-
-
 def test_a1_top1_per_key_tiebreak(spark):
     rows = [
         (1, 101, 1, "active", "2025-01-01", "2025-12-31", None),
@@ -101,11 +79,6 @@ def test_a2_next_id_empty_table_floor(spark, subs):
     empty = spark.createDataFrame([], USER_SUBSCRIPTIONS_SCHEMA)
     # D4: empty table → 1001
     assert R.next_subscription_id(empty) == 1001
-
-
-def test_a3_is_empty(subs):
-    assert not R.is_empty(subs)
-    assert R.is_empty(subs.filter(F.col("user_id") == 999))
 
 
 def test_e2_payment_status(spark, plans):

@@ -299,36 +299,6 @@ def test_contamination_eval_cap_fails_loudly(spark):
     ).collect()
 
 
-# ------------------------------------------- compact_parquet recovery
-
-
-def test_compact_parquet_recovers_stranded_old(spark, tmp_path):
-    """Crash window between compact_parquet's two renames: path gone,
-    live data stranded in .compact.old. The next call must RESTORE it
-    (the previous cleanup-first code deleted the only copy)."""
-    from airflow_subscription_etl_spark.sources import io as IO
-
-    p = str(tmp_path / "t")
-    spark.range(100).write.parquet(p)
-    # simulate the mid-swap crash
-    fsio.rename(spark, p, p + ".compact.old")
-    assert not fsio.is_dir(spark, p)
-    n = IO.compact_parquet(spark, p, target_files=2)
-    assert n <= 2
-    assert spark.read.parquet(p).count() == 100
-    assert not fsio.is_dir(spark, p + ".compact.old")
-
-
-def test_compact_parquet_on_file_uri(spark, tmp_path):
-    from airflow_subscription_etl_spark.sources import io as IO
-
-    p = f"file:{tmp_path}/t2"
-    spark.range(50).repartition(8).write.parquet(p)
-    n = IO.compact_parquet(spark, p, target_files=1)
-    assert n == 1
-    assert spark.read.parquet(p).count() == 50
-
-
 # ------------------------------------- snapshot time travel + pruning
 
 

@@ -3,22 +3,19 @@ by the r12 structured review of ``operators/``:
 
 - asof_join stitched together right rows that never existed (per-column
   last(ignorenulls) reached past a NULL attribute of the newest row);
-- lookup_required probed the first dim attribute for NULL instead of a
-  join indicator (false error on legit-NULL attrs, no check at all for
-  key-only dims);
 - sampled_quantile_sketch indexed the null-free sorted array with
   positions from the null-including row count;
 - salted_join silently duplicated unmatched small-side rows ×salt under
   right/full joins;
 - brute_force_topk_pandas hardcoded the id column as bigint;
-- pq_topk_pandas rounded with floor(x+0.5) where the HOF twin uses
-  Spark HALF_UP (boundary-double divergence);
 - banded LSH silently dropped trailing signature slots on non-divisible
   (num_hashes, bands) and degenerated to one global bucket for
   bands > num_hashes;
 - ivf_assignments returned assignments computed against the PREVIOUS
   centroid table (probe geometry disagreed with the binning);
 - pack_sequences/binned_interval_join/bm25 missing argument guards.
+
+The pq_topk_pandas HALF_UP rounding fix is pinned in tests/test_pq.py.
 """
 
 from __future__ import annotations
@@ -31,7 +28,6 @@ from pyspark.sql import functions as F
 from airflow_subscription_etl_spark.operators import (
     dedup,
     packing,
-    relational,
     scale,
     similarity,
     sketch,
@@ -73,29 +69,6 @@ def test_asof_join_normal_fill_unchanged(spark):
         left, right, "k", "lts", "rts", ["price", "qty"]
     ).collect()[0]
     assert (row["price_asof"], row["qty_asof"]) == (10.0, 5)
-
-
-def test_lookup_required_tolerates_null_dim_attribute(spark):
-    """A MATCHED dim row whose first attribute is legitimately NULL is
-    not a missing match."""
-    fact = spark.createDataFrame([(1, "x")], "pid int, payload string")
-    dim = spark.createDataFrame([(1, None)], "pid int, pname string")
-    out = relational.lookup_required(fact, dim, "pid", "boom")
-    assert out.collect()[0]["pname"] is None
-    assert "__matched" not in out.columns
-
-
-def test_lookup_required_enforces_match_on_key_only_dim(spark):
-    """A key-only dim previously SKIPPED the required check entirely."""
-    fact = spark.createDataFrame([(1,), (2,)], "pid int")
-    dim = spark.createDataFrame([(1,)], "pid int")
-    with pytest.raises(ValueError, match="boom"):
-        relational.lookup_required(fact, dim, "pid", "boom")
-    # all-matched key-only dim passes
-    ok = relational.lookup_required(
-        spark.createDataFrame([(1,)], "pid int"), dim, "pid", "boom"
-    )
-    assert ok.count() == 1
 
 
 def test_sampled_quantiles_ignore_null_values_correctly(spark):
@@ -144,27 +117,6 @@ def test_brute_force_pandas_handles_string_ids(spark):
         for r in similarity.brute_force_topk(df, [1.0, 0.0], k=2).collect()
     ]
     assert ids == hof
-
-
-def test_pq_pandas_parity_with_hof_twin(spark):
-    """Both PQ kernels must agree exactly — codes and integer scores —
-    now that the pandas side routes through _round_like_spark."""
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = [0.1] * 8
-    a = sorted(
-        tuple(r) for r in similarity.pq_topk(df, q, k=40, m=4, n_codes=8).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in similarity.pq_topk_pandas(df, q, k=40, m=4, n_codes=8).collect()
-    )
-    assert a == b
 
 
 def test_banding_validation(spark):

@@ -181,34 +181,6 @@ def test_plan_lint_representative_queries(spark):
         assert not flags, (name, flags)
 
 
-def test_standardize_embeddings_round_trip(spark):
-    from airflow_subscription_etl_spark.operators.similarity import (
-        embedding_dim_stats,
-        standardize_embeddings,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 10.0]), (2, [3.0, 10.0]), (3, [5.0, 10.0])],
-        "vec_id int, embedding array<double>",
-    )
-    stats_rows = embedding_dim_stats(df).orderBy("dim").collect()
-    assert [r["mean"] for r in stats_rows] == [3.0, 10.0]
-    # dim 1 is constant → variance 0 → passes through unscaled
-    assert stats_rows[1]["variance"] == 0.0
-    stats = [(r["mean"], r["variance"]) for r in stats_rows]
-    out = {
-        r["vec_id"]: r["embedding_std"]
-        for r in standardize_embeddings(df, stats).collect()
-    }
-    import math
-
-    sd0 = math.sqrt(stats_rows[0]["variance"])
-    assert abs(out[1][0] - (1.0 - 3.0) / sd0) < 1e-9
-    assert abs(out[3][0] - (5.0 - 3.0) / sd0) < 1e-9
-    assert out[2][0] == 0.0
-    assert out[2][1] == 0.0  # (10-10)/1.0 for the zero-variance dim
-
-
 def test_enforce_expectations_split_and_diagnosis(spark):
     from airflow_subscription_etl_spark.operators.relational import (
         enforce_expectations,

@@ -1,91 +1,13 @@
-"""Round-5 fixes: the six ADVICE r4 findings + the PQ default-path
-change (VERDICT r4 #3). Each test pins the failure mode the advice
-described, so a regression re-introducing it is loud."""
+"""Round-5 fixes: the ADVICE r4 findings on dedup, scale, graph and
+minhash. Each test pins the failure mode the advice described, so a
+regression re-introducing it is loud. (The PQ id-dtype findings are
+pinned in tests/test_pq.py.)"""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-import pytest
 
 from airflow_subscription_etl_spark.operators import dedup as D
 from airflow_subscription_etl_spark.operators import graph as G
 from airflow_subscription_etl_spark.operators import scale as SC
-from airflow_subscription_etl_spark.operators import similarity as S
-
-DIMS = 8
-M = 2
-CODES = 4
-
-
-def _vec(i: int) -> list[float]:
-    return [float((i * 7 + j * 3) % 11) / 11.0 for j in range(DIMS)]
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    rows = [(i, _vec(i)) for i in range(40)]
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").cache()
-
-
-# --- pq_topk_pandas id dtype derivation (ADVICE similarity.py:1034) ---------
-
-
-def test_pq_topk_pandas_string_ids(spark, emb):
-    """The mapInPandas output schema must derive the id type from the
-    input schema — a hardcoded `long` miscast string ids."""
-    semb = emb.select(
-        F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("vec_id"),
-        "embedding",
-    )
-    qv = _vec(0)
-    out = S.pq_topk_pandas(semb, qv, k=5, m=M, n_codes=CODES).collect()
-    assert len(out) == 5
-    assert all(r["vec_id"].startswith("doc-") for r in out)
-    assert dict(S.pq_topk_pandas(semb, qv, k=5, m=M, n_codes=CODES).dtypes)[
-        "vec_id"
-    ] == "string"
-
-
-def test_pq_topk_pandas_int_ids_match_hof(spark, emb):
-    """Non-bigint integer ids keep their type and the results still
-    bit-match the HOF reference."""
-    iemb = emb.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
-    qv = _vec(3)
-    a = [tuple(r) for r in S.pq_topk(iemb, qv, k=8, m=M, n_codes=CODES).collect()]
-    b = [
-        tuple(r)
-        for r in S.pq_topk_pandas(iemb, qv, k=8, m=M, n_codes=CODES).collect()
-    ]
-    assert a == b
-
-
-# --- pq_ann_topk single entry point (VERDICT r4 #3) --------------------------
-
-
-def test_pq_ann_topk_default_dispatches_to_mapinpandas(spark, emb):
-    plan = S.pq_ann_topk(emb, _vec(1), k=5, m=M, n_codes=CODES)._jdf.queryExecution().toString()
-    assert "MapInPandas" in plan
-
-
-def test_pq_ann_topk_hof_impl_stays_jvm_side(spark, emb):
-    plan = (
-        S.pq_ann_topk(emb, _vec(1), k=5, m=M, n_codes=CODES, impl="hof")
-        ._jdf.queryExecution()
-        .toString()
-    )
-    assert "MapInPandas" not in plan
-
-
-def test_pq_ann_topk_impls_agree_and_bad_impl_raises(spark, emb):
-    qv = _vec(2)
-    a = [tuple(r) for r in S.pq_ann_topk(emb, qv, k=6, m=M, n_codes=CODES).collect()]
-    b = [
-        tuple(r)
-        for r in S.pq_ann_topk(emb, qv, k=6, m=M, n_codes=CODES, impl="hof").collect()
-    ]
-    assert a == b
-    with pytest.raises(ValueError, match="unknown impl"):
-        S.pq_ann_topk(emb, qv, impl="numpy")
 
 
 # --- survivor_selection checksum overflow (ADVICE dedup.py:740) -------------

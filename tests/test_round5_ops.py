@@ -404,27 +404,6 @@ def test_bm25_topk_unchanged_by_refactor(spark):
     assert top == manual and len(top) == 3
 
 
-# --- hll_sketch_rollup (pytest-only capability; no cross-engine oracle) ------
-
-
-def test_hll_sketch_rollup_estimates_track_exact(spark):
-    """The datasketches-HLL rollup can't hash-match DuckDB (estimates
-    are implementation-defined) — so THIS test is its coverage: the
-    region-level union estimate must track the exact distinct count
-    within HLL's error envelope, and the exact columns must be exact."""
-    from airflow_subscription_etl_spark.queries import q_hll_sketch_rollup
-    from tests.conftest import SF_DIR
-
-    rows = {r["regionkey"]: r for r in q_hll_sketch_rollup(spark, SF_DIR).collect()}
-    assert len(rows) == 5  # one per region
-    for r in rows.values():
-        exact = r["exact_region_customers"]
-        approx = r["approx_region_customers"]
-        assert exact > 0 and r["n_nations"] == 5
-        # default lgK=12 HLL: relative error well under 5% at these sizes
-        assert abs(approx - exact) <= max(2.0, 0.05 * exact), r
-
-
 # --- banded signature index (bucketed, co-located incremental join) ---------
 
 

@@ -1,5 +1,5 @@
 """Round-6 operator work: the plan-lint broadcast-miss rule (VERDICT
-r5 #6), semantic_dedup impl dispatch and the indexed minhash query."""
+r5 #6) and the indexed minhash query."""
 
 from __future__ import annotations
 
@@ -70,32 +70,6 @@ def test_broadcast_idiom_stays_clean(spark):
     agg = df.groupBy().agg(F.max("k").alias("mx"))
     plan = plan_lint.render_plan(df.crossJoin(F.broadcast(agg)))
     assert "broadcast-miss" not in plan_lint.lint_plan(plan)
-
-
-# --- semantic_dedup impl dispatch (r5 verdict perf note) --------------------
-
-
-def test_semantic_dedup_impls_bit_identical(spark):
-    from airflow_subscription_etl_spark.operators.clustering import semantic_dedup
-
-    rows = [
-        (i, [float((i * 13 + j * 5) % 17) / 17.0 for j in range(8)])
-        for i in range(60)
-    ] + [(1000 + i, [float((i * 13 + j * 5) % 17) / 17.0 for j in range(8)])
-         for i in range(10)]  # planted near-identical copies
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    a = sorted(map(tuple, semantic_dedup(df, k=4, threshold=0.45, impl="hof").collect()))
-    b = sorted(map(tuple, semantic_dedup(df, k=4, threshold=0.45).collect()))
-    assert a == b
-    assert any(r[2] for r in b)  # some vector actually dropped
-
-
-def test_semantic_dedup_bad_impl_raises(spark):
-    from airflow_subscription_etl_spark.operators.clustering import semantic_dedup
-
-    df = spark.createDataFrame([(1, [0.0] * 8)], "vec_id bigint, embedding array<float>")
-    with pytest.raises(ValueError, match="impl"):
-        semantic_dedup(df, impl="numpy")
 
 
 def test_broadcast_miss_not_fooled_by_bound_below_join(_nobroadcast):

@@ -1,21 +1,14 @@
-"""Round-7 fixes: the r6 verdict's evidence-pipeline items and the
-ADVICE r6 findings. Each test pins the exact failure mode described,
-so a regression re-introducing it is loud."""
+"""Round-7 fixes: the r6 verdict's evidence-pipeline items (bench.py).
+Each test pins the exact failure mode described, so a regression
+re-introducing it is loud. The ADVICE r6 ``_round_like_spark``
+boundary guard is pinned in tests/test_clustering.py."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 
-import numpy as np
-import pytest
-
 import bench
-from airflow_subscription_etl_spark.operators.clustering import (
-    _round_like_spark,
-    kmeans_fit_predict,
-)
-from airflow_subscription_etl_spark.oracles.lsh_ref import _round_half_up_spark
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -87,61 +80,3 @@ def test_bench_stdout_line_stays_compact():
     assert "BENCH_DETAIL.json" in src
     # runs_per_query numeric again (ADVICE r6): find the literal
     assert '"runs_per_query": 2,' in src
-
-
-# --- _round_like_spark: large-magnitude boundary guard (ADVICE r6) ----------
-
-
-def test_round_like_spark_large_magnitude_parity():
-    """Once ulp(v) nears the ±5e-7 probe band (|v| ≳ 2^31) the two
-    probe additions can collapse to the same double and miss a true
-    boundary; the magnitude guard must route those through the exact
-    Decimal path. Parity vs the Decimal replica elementwise across
-    boundary-adjacent doubles at magnitudes 2^31..2^36."""
-    vals = []
-    for e in (31, 32, 33, 34, 36):
-        base = float(2**e) + 12345.0
-        for frac in (0.5, 0.49999999999999994, 0.499999, 0.500001):
-            v = base + frac
-            for _ in range(3):
-                vals.append(v)
-                v = np.nextafter(v, 0.0)
-            vals.append(np.nextafter(base + frac, np.inf))
-    raw = np.array(vals, dtype=np.float64)
-    got = _round_like_spark(raw.copy())
-    want = np.array([_round_half_up_spark(float(v)) for v in raw], dtype=np.int64)
-    mismatch = np.flatnonzero(got != want)
-    assert mismatch.size == 0, [
-        (repr(float(raw[i])), int(got[i]), int(want[i])) for i in mismatch[:5]
-    ]
-
-
-def test_round_like_spark_small_magnitude_unchanged():
-    """The guard must not perturb the normalized-embedding regime."""
-    rng = np.random.default_rng(7)
-    raw = rng.uniform(0.0, 4_000_000.0, size=10_000)
-    got = _round_like_spark(raw.copy())
-    want = np.array([_round_half_up_spark(float(v)) for v in raw], dtype=np.int64)
-    assert (got == want).all()
-
-
-# --- kmeans_fit_predict impl dispatch (verdict r6 #4) -----------------------
-
-
-def test_kmeans_fit_predict_default_is_pandas_and_hof_matches(spark):
-    rows = [(i, [float((i * 7 + d * 3) % 11) / 10.0 for d in range(4)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    default = sorted(map(tuple, kmeans_fit_predict(df, k=4, iters=2).collect()))
-    hof = sorted(
-        map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="hof").collect())
-    )
-    pandas = sorted(
-        map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="pandas").collect())
-    )
-    assert default == pandas == hof
-
-
-def test_kmeans_fit_predict_rejects_unknown_impl(spark):
-    df = spark.createDataFrame([(1, [0.0])], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="impl"):
-        kmeans_fit_predict(df, impl="arrow")

@@ -58,15 +58,6 @@ def test_kmv_partitioning_invariant(spark, li):
     }
 
 
-def test_hll_native_error_band(spark, li):
-    from airflow_subscription_etl_spark.queries import q_hll_native_distinct
-
-    out = q_hll_native_distinct(spark, SF).collect()
-    assert len(out) > 0
-    for r in out:
-        assert r["approx_parts"] == pytest.approx(r["exact_parts"], rel=0.15)
-
-
 def test_exact_jaccard_pairs_vs_bruteforce(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),

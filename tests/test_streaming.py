@@ -3,7 +3,8 @@
 One real Structured Streaming run (file source → memory sink) proves
 the streaming path; the rest exercise the shared batch/stream
 transform bodies on batch frames (the bodies are identical by
-construction).
+construction). The stream-stream attribution join is checked on both
+faces: batch semantics and real two-watermark streaming runs.
 """
 
 from __future__ import annotations
@@ -15,6 +16,9 @@ from pyspark.sql import functions as F
 
 from airflow_subscription_etl_spark.schemas import EVENTS_SCHEMA
 from airflow_subscription_etl_spark.streaming import events as EV
+from airflow_subscription_etl_spark.streaming.events import (
+    purchase_attribution_join,
+)
 
 
 def _ts(minute: float, base_hour: int = 10) -> dt.datetime:
@@ -286,3 +290,119 @@ def test_streaming_checkpoint_restart_resumes_state(spark, ev, tmp_path):
     assert first[1] == 3
     assert resumed[1] == 4
     assert resumed[2] == first.get(2, resumed[2])
+
+
+# --- stream-stream attribution join -----------------------------------------
+
+
+@pytest.fixture()
+def attrib_events(spark):
+    rows = [
+        # user 1: clicks at :00 and :25, purchase at :30 → both attach
+        (1, _ts(0), 1, "click", 0.0, "{}"),
+        (2, _ts(25), 1, "click", 0.0, "{}"),
+        (3, _ts(30), 1, "purchase", 99.0, "{}"),
+        # user 2: click 40 min before purchase → outside window
+        (4, _ts(0), 2, "click", 0.0, "{}"),
+        (5, _ts(45), 2, "purchase", 10.0, "{}"),
+        # user 3: click AFTER purchase → never attaches
+        (6, _ts(50), 3, "purchase", 5.0, "{}"),
+        (7, _ts(55), 3, "click", 0.0, "{}"),
+    ]
+    return spark.createDataFrame(rows, EVENTS_SCHEMA)
+
+
+def test_attribution_join_batch_semantics(attrib_events):
+    out = purchase_attribution_join(attrib_events, "30 minutes")
+    got = sorted(
+        (r["purchase_id"], r["click_id"]) for r in out.collect()
+    )
+    assert got == [(3, 1), (3, 2)]  # inclusive 30-min band, same user only
+
+
+def test_attribution_join_streaming_end_to_end(spark, attrib_events, tmp_path):
+    """Real two-sided watermarked stream-stream join via availableNow."""
+    src = str(tmp_path / "ev_src")
+    attrib_events.write.parquet(src)
+    stream = (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    joined = purchase_attribution_join(stream, "30 minutes")
+    assert joined.isStreaming
+    q = (
+        joined.writeStream.format("memory")
+        .queryName("t_attrib")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        (r["purchase_id"], r["click_id"])
+        for r in spark.sql("SELECT * FROM t_attrib").collect()
+    )
+    assert got == [(3, 1), (3, 2)]
+
+
+def test_attribution_left_join_streaming_emits_unmatched(
+    spark, attrib_events, tmp_path
+):
+    """Stream-stream LEFT OUTER interval join: organic purchases (no
+    click in window) emit with null click columns — but ONLY once a
+    LATER batch's watermark proves no matching click can still arrive.
+    Two far-future heartbeat batches advance the watermark so the
+    unmatched state flushes within the run (the latency-for-correctness
+    trade outer stream joins make)."""
+    import time as _time
+
+    from airflow_subscription_etl_spark.streaming.events import (
+        purchase_attribution_left,
+        read_events_stream,
+    )
+
+    src = str(tmp_path / "events_left")
+    attrib_events.coalesce(1).write.parquet(src)
+    # heartbeats: watermark computed from batch N's max ts applies in
+    # batch N+1 — two advancing batches flush all earlier state
+    # each heartbeat advances BOTH sides: the global watermark is the
+    # MIN over the two per-side watermarks, so a click-only heartbeat
+    # would leave the purchase watermark (and thus eviction) stuck
+    for i, hour in enumerate([13, 16]):
+        _time.sleep(1.1)  # file-source batches follow modification time
+        hb = spark.createDataFrame(
+            [
+                (100 + i, dt.datetime(2024, 1, 1, hour, 0), 99, "click", 0.0, "{}"),
+                (200 + i, dt.datetime(2024, 1, 1, hour, 0), 99, "purchase", 0.0, "{}"),
+            ],
+            EVENTS_SCHEMA,
+        )
+        hb.coalesce(1).write.mode("append").parquet(src)
+    stream = read_events_stream(spark, src, max_files_per_trigger=1)
+    q = (
+        purchase_attribution_left(stream, "30 minutes", watermark="10 minutes")
+        .writeStream.format("memory")
+        .queryName("t_left")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    rows = spark.sql("SELECT * FROM t_left WHERE user_id != 99").collect()
+    batch = purchase_attribution_left(attrib_events, "30 minutes")
+    got_matched = {
+        (r["purchase_id"], r["click_id"]) for r in rows if r["click_id"] is not None
+    }
+    exp_matched = {
+        (r["purchase_id"], r["click_id"])
+        for r in batch.collect()
+        if r["click_id"] is not None
+    }
+    assert got_matched == exp_matched
+    exp_organic = {
+        r["purchase_id"] for r in batch.collect() if r["click_id"] is None
+    }
+    got_organic = {r["purchase_id"] for r in rows if r["click_id"] is None}
+    assert exp_organic and got_organic == exp_organic
