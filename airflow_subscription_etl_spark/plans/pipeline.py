@@ -21,11 +21,14 @@ intents, both tables are read through ``sources.io``'s file-version
 snapshots: the sink's fetch job leaves the written rows cached for the
 next intent, and a frame over a superseded version raises on its next
 action, so the read-overwrite-reread trap is an error, not a silent
-re-read of the new file. A one-intent process reads each table once,
-as a plain scan, and caches nothing. The result row of a write comes
-from the Arrow table the sink returns: ``pyarrow.compute`` finds the
-first row holding the max ``subscription_id`` (create) or the target
-id (change/cancel), and only that one row becomes a dict.
+re-read of the new file. The catalog rows are collected once per
+snapshot frame of the plans file: while ``read_plans`` returns the same
+frame, a create or change reuses them, so a warm process runs 1/2/2/2
+jobs per view/create/change/cancel. A one-intent process reads each
+table once, as a plain scan, and caches nothing. The result row of a
+write comes from the Arrow table the sink returns: ``pyarrow.compute``
+finds the first row holding the max ``subscription_id`` (create) or the
+target id (change/cancel), and only that one row becomes a dict.
 
 Error-message parity with the reference's ``ValueError``s:
 - invalid intent            (:62–63)
@@ -40,11 +43,12 @@ retaining retries (C6) at the task level.
 from __future__ import annotations
 
 import json
+import weakref
 from dataclasses import dataclass, field
 from typing import Any
 
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mutations import (
@@ -94,6 +98,28 @@ def _latest_active(subs: DataFrame, user_id: int) -> DataFrame:
     )
 
 
+#: plans frame → its collected, labelled catalog rows. ``read_plans``
+#: returns the same snapshot frame for as long as it serves one version
+#: of the file in one session, so a warm process collects each version
+#: once; an entry goes with its frame, when the snapshot is superseded.
+#: A plain scan (a path's first read) is a new frame on every read.
+_CATALOGS: weakref.WeakKeyDictionary[DataFrame, tuple[Row, ...]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _catalog(plans: DataFrame) -> tuple[Row, ...]:
+    """P1+P2 (subscription_flow.py:84–91, 127–134): the plan rows with
+    their labels, collected once per plans frame."""
+    catalog = _CATALOGS.get(plans)
+    if catalog is None:
+        catalog = tuple(
+            with_label(plans, "subscription_plan_name", "subscription_price").collect()
+        )
+        _CATALOGS[plans] = catalog
+    return catalog
+
+
 def run_intent(
     spark: SparkSession,
     conf: dict[str, Any],
@@ -125,14 +151,11 @@ def run_intent(
             target_id = current["subscription_id"]
 
         if intent in ("create", "change"):
-            # fetch_subscription_plans / fetch_available…: P1+P2 labels
-            # (subscription_flow.py:84–91, 127–134). The same catalog rows
-            # resolve the selected plan and the current plan's price. Only
-            # these two intents open the catalog.
+            # fetch_subscription_plans / fetch_available…: the same catalog
+            # rows resolve the selected plan and the current plan's price.
+            # Only these two intents open the catalog.
             plans = read_plans(spark, plans_path)
-            catalog = with_label(
-                plans, "subscription_plan_name", "subscription_price"
-            ).collect()
+            catalog = _catalog(plans)
             res.plan_labels = [p["label"] for p in catalog]
             sel = next(
                 (p for p in catalog if p["subscription_plan_name"] == selected_name),

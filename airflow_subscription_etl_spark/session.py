@@ -60,6 +60,18 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging wraps every `F.col` and Column
+        # method to record its Python call site: a stack walk and extra
+        # py4j round trips per call. Building the lifecycle's
+        # latest-active lookup took 34 ms with it and 21 ms without
+        # (4-core host, median of 50). Off, an analysis or runtime
+        # error's query context no longer names the Python line that
+        # built the failing expression; the error class and message are
+        # unchanged. The conf is static and PySpark reads it once per
+        # process, at the first Column call, so to debug, start the
+        # process with
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

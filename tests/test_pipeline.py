@@ -310,3 +310,104 @@ def test_json_parsed_once_per_file_version(spark, seed_tables, plan_log):
             misses += 1
     assert misses == 2 and len(json.load(open(subs_path))) == 6
     assert plan_log.json_parses() == 0, plan_log.plans()
+
+
+def _warm(spark, plans_path, subs_path):
+    """Read both tables twice, as a process serving many intents does:
+    from here on each is served from its file-version snapshot."""
+    run_intent(spark, {"user_id": 101, "intent": "create"}, plans_path, subs_path)
+    run_intent(
+        spark,
+        {"user_id": 102, "intent": "change", "selected_plan_name": "Team"},
+        plans_path,
+        subs_path,
+    )
+
+
+def test_warm_jobs_per_intent(spark, seed_tables):
+    """Once the plans snapshot exists, create and change reuse the
+    catalog rows collected for it: a warm process launches 1/2/2/2/1
+    jobs per view/create/change/cancel/miss."""
+    plans_path, subs_path = seed_tables
+    _warm(spark, plans_path, subs_path)
+    confs = {
+        "view": {"user_id": 101, "intent": "view"},
+        "create": {"user_id": 103, "intent": "create"},
+        "change": {"user_id": 102, "intent": "change", "selected_plan_name": "Pro"},
+        "cancel": {"user_id": 101, "intent": "cancel"},
+        "change_miss": {"user_id": 999, "intent": "change"},
+    }
+    jobs = {}
+    for kind, conf in confs.items():
+
+        def run():
+            try:
+                return run_intent(spark, conf, plans_path, subs_path)
+            except ValueError as e:
+                return e
+
+        out, stages = _run_in_group(spark.sparkContext, f"warm-jobs-{kind}", run)
+        assert isinstance(out, ValueError) == kind.endswith("_miss"), out
+        jobs[kind] = len(stages)
+    assert jobs == {"view": 1, "create": 2, "change": 2, "cancel": 2, "change_miss": 1}
+
+
+def test_rewritten_catalog_is_collected_again(spark, seed_tables):
+    """A new version of ``plans.json`` is a new snapshot: the next
+    change collects the catalog again and prices with the new rows."""
+    plans_path, subs_path = seed_tables
+    _warm(spark, plans_path, subs_path)
+    plans = json.load(open(plans_path))
+    plans[2]["subscription_price"] = 149
+    with open(plans_path, "w") as f:
+        json.dump(plans, f, indent=2)
+    sc = spark.sparkContext
+    for n, (name, diff, jobs) in enumerate(
+        [("Pro", -120.0, 3), ("Team", 120.0, 2)]
+    ):
+        conf = {"user_id": 102, "intent": "change", "selected_plan_name": name}
+        res, stages = _run_in_group(
+            sc,
+            f"catalog-rewrite-{n}",
+            lambda: run_intent(spark, conf, plans_path, subs_path),
+        )
+        assert res.price_difference == diff and len(stages) == jobs
+    assert res.plan_labels[2] == "Team - $149.0"
+
+
+def test_other_session_collects_its_own_catalog(spark, seed_tables):
+    """The catalog rows belong to one session's snapshot frame: another
+    session collects afresh."""
+    plans_path, subs_path = seed_tables
+    _warm(spark, plans_path, subs_path)
+    other = spark.newSession()
+    conf = {"user_id": 102, "intent": "change", "selected_plan_name": "Pro"}
+    res, stages = _run_in_group(
+        spark.sparkContext,
+        "catalog-other-session",
+        lambda: run_intent(other, conf, plans_path, subs_path),
+    )
+    assert res.price_difference == -70.0 and len(stages) == 3
+
+
+@pytest.mark.parametrize(
+    ("conf", "message"),
+    [
+        ({"intent": "refund"}, "Invalid intent: refund"),
+        (
+            {"user_id": 999, "intent": "cancel"},
+            "No active subscription for user_id 999",
+        ),
+        (
+            {"user_id": 101, "intent": "create", "selected_plan_name": "Gold"},
+            "Selected plan not found: Gold",
+        ),
+    ],
+)
+def test_error_messages_are_the_references(spark, seed_tables, conf, message):
+    """Each lifecycle ``ValueError`` carries exactly the reference's
+    text, with nothing appended."""
+    plans_path, subs_path = seed_tables
+    with pytest.raises(ValueError) as err:
+        run_intent(spark, conf, plans_path, subs_path)
+    assert str(err.value) == message

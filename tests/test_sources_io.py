@@ -1,19 +1,26 @@
 """sources.io JSON source and sink: size guard, byte parity with
 ``json.dumps(indent=2)``, row order, type contract, the columnar
-encoder's parity on random Arrow tables, and the file-version
-snapshots the source and sink share."""
+encoder's parity on random Arrow tables and on chains of versions it
+re-encodes in part, and the file-version snapshots the source and sink
+share."""
 
 from __future__ import annotations
 
 import json
 import math
+import struct
 
 import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from airflow_subscription_etl_spark.sources.io import _json_array_bytes
+from airflow_subscription_etl_spark.sources.io import (
+    _json_join,
+    _json_records,
+    _json_records_since,
+    _Snapshot,
+)
 
 
 def _expected_bytes(table: pa.Table) -> bytes:
@@ -415,18 +422,22 @@ _COLUMNS = [
 ]
 
 
+def _table(cols, rows):
+    return pa.table(
+        {
+            name: pa.array([r[i] for r in rows], type_)
+            for i, (name, type_, _) in enumerate(cols)
+        }
+    )
+
+
 @st.composite
 def _flat_tables(draw):
     cols = draw(st.permutations(_COLUMNS))
     row = st.tuples(*(st.none() | values for _, _, values in cols))
     all_null = st.just(tuple(None for _ in cols))
     rows = draw(st.lists(row | all_null, max_size=12))
-    table = pa.table(
-        {
-            name: pa.array([r[i] for r in rows], type_)
-            for i, (name, type_, _) in enumerate(cols)
-        }
-    )
+    table = _table(cols, rows)
     # Spark hands the sink several record batches: split into two chunks
     cut = draw(st.integers(0, table.num_rows))
     return pa.concat_tables([table.slice(0, cut), table.slice(cut)])
@@ -435,5 +446,213 @@ def _flat_tables(draw):
 @settings(max_examples=400, deadline=None)
 @given(_flat_tables())
 def test_json_array_bytes_matches_json_dumps(table):
-    assert _json_array_bytes(table) == _expected_bytes(table)
+    assert _json_join(_json_records(table)) == _expected_bytes(table)
 
+
+@st.composite
+def _table_versions(draw):
+    """Two versions of one flat table: the second keeps a prefix of the
+    first's rows, edits some of them and appends others."""
+    cols = draw(st.permutations(_COLUMNS))
+    row = st.tuples(*(st.none() | values for _, _, values in cols))
+    old = draw(st.lists(row, max_size=10))
+    kept = old[: draw(st.integers(0, len(old)))]
+    new = [draw(st.just(r) | row) for r in kept] + draw(st.lists(row, max_size=4))
+    return _table(cols, old), _table(cols, new)
+
+
+@settings(max_examples=300, deadline=None)
+@example(versions=(pa.table({"x": [0.0, 1.0]}), pa.table({"x": [-0.0, 1.0]})))
+@given(versions=_table_versions())
+def test_json_records_since_matches_json_dumps(versions):
+    """Re-encoding only the rows that differ from the previous version
+    gives the bytes a full encode gives."""
+    old, new = versions
+    identity = (0, 0, 0, 0)
+    prev = _Snapshot(identity, None, None, old, _json_records(old))
+    assert _json_join(_json_records_since(new, prev, identity)) == _expected_bytes(new)
+
+
+def _bits(v):
+    """A float as its bit pattern: ``0.0 == -0.0`` and ``nan != nan``,
+    but the sink must keep each exactly."""
+    return struct.pack(">d", v) if isinstance(v, float) else v
+
+
+_CHAIN_TYPES = {"id": "long", "price": "double", "name": "string", "extra": "int"}
+_CHAIN_VALUES = {
+    "id": st.integers(-(2**63), 2**63 - 1),
+    "price": _DOUBLES,
+    "name": st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)
+    | st.sampled_from(_SPECIAL_TEXT),
+    "extra": st.integers(-(2**31), 2**31 - 1),
+}
+
+
+def _chain_row(cols):
+    return st.fixed_dictionaries({c: st.none() | _CHAIN_VALUES[c] for c in cols})
+
+
+def _edit(version, op, arg):
+    """The next version of ``version``: ``set`` a cell to ``arg = (row,
+    column, value)``, ``append`` the row ``arg``, ``truncate`` to ``arg``
+    rows or ``add`` the column ``arg``."""
+    cols, rows = list(version[0]), [dict(r) for r in version[1]]
+    if op == "set":
+        i, col, value = arg
+        rows[i][col] = value
+    elif op == "append":
+        rows.append(arg)
+    elif op == "truncate":
+        rows = rows[:arg]
+    else:
+        cols.append(arg)
+        for k, r in enumerate(rows):
+            r[arg] = k or None
+    return cols, rows
+
+
+@st.composite
+def _version_chains(draw):
+    """5–10 successive versions ``(columns, rows)`` of one table, each
+    one edit away from the last."""
+    cols = ["id", "price", "name"]
+    chain = [(cols, draw(st.lists(_chain_row(cols), min_size=1, max_size=6)))]
+    for _ in range(draw(st.integers(4, 9))):
+        cols, rows = chain[-1]
+        op = draw(st.sampled_from(["set", "set", "append", "truncate", "add"]))
+        if op == "set" and rows:
+            col = draw(st.sampled_from(cols))
+            value = draw(st.none() | _CHAIN_VALUES[col])
+            arg = (draw(st.integers(0, len(rows) - 1)), col, value)
+        elif op == "append":
+            arg = draw(_chain_row(cols))
+        elif op == "add" and "extra" not in cols:
+            arg = "extra"
+        else:
+            op, arg = "truncate", draw(st.integers(0, len(rows)))
+        chain.append(_edit(chain[-1], op, arg))
+    return chain
+
+
+def _covering_chain():
+    """A chain with every edit the sink must get right: an update, an
+    append, NULL → value → NULL, a string that needs escaping, 0.0 →
+    -0.0 → NaN, a truncation and an added column."""
+    chain = [
+        (
+            ["id", "price", "name"],
+            [
+                {"id": 1, "price": 29.0, "name": "a"},
+                {"id": 2, "price": 0.0, "name": None},
+                {"id": 3, "price": 1.5, "name": "c"},
+            ],
+        )
+    ]
+    for op, arg in (
+        ("set", (0, "price", 39.0)),
+        ("append", {"id": 4, "price": 2.0, "name": "d"}),
+        ("set", (1, "name", "x")),
+        ("set", (1, "name", None)),
+        ("set", (2, "name", 'say "hi"\\\n東京')),
+        ("set", (1, "price", -0.0)),
+        ("set", (1, "price", math.nan)),
+        ("truncate", 2),
+        ("add", "extra"),
+    ):
+        chain.append(_edit(chain[-1], op, arg))
+    return chain
+
+
+@settings(max_examples=3, deadline=None)
+@example(chain=_covering_chain())
+@given(chain=_version_chains())
+def test_version_chain_bytes_match_json_dumps(spark, tmp_path_factory, chain):
+    """Successive writes of one path in snapshot mode, each re-encoding
+    only what changed since the last, leave exactly the bytes of
+    ``json.dumps(rows, indent=2)``, and return the written rows with
+    every float's bits intact."""
+    from airflow_subscription_etl_spark.sources.io import (
+        _SNAPSHOTS,
+        read_json_table,
+        write_json_table,
+    )
+
+    path = str(tmp_path_factory.mktemp("chain") / "t.json")
+
+    def frame(cols, rows):
+        schema = ", ".join(f"{c} {_CHAIN_TYPES[c]}" for c in cols)
+        return spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], schema)
+
+    first = frame(*chain[0])
+    write_json_table(first, path)
+    read_json_table(spark, path, first.schema)
+    read_json_table(spark, path, first.schema)  # the path now has a snapshot
+    for cols, rows in chain:
+        table = write_json_table(frame(cols, rows), path)
+        expected = [{c: r[c] for c in cols if r[c] is not None} for r in rows]
+        with open(path, "rb") as f:
+            assert f.read() == json.dumps(expected, indent=2).encode()
+        assert table.column_names == cols
+        assert [tuple(map(_bits, r.values())) for r in table.to_pylist()] == [
+            tuple(_bits(r[c]) for c in cols) for r in rows
+        ]
+        assert _SNAPSHOTS[path].records is not None
+
+
+def test_sink_re_encodes_only_changed_rows(spark, tmp_path, monkeypatch):
+    """With the sink's own snapshot of the file at the path, a write
+    encodes only the rows that differ from it or are new; after another
+    writer rewrites the file, the next write encodes every row."""
+    from pyspark.sql import functions as F
+
+    from airflow_subscription_etl_spark.sources import io
+
+    path = str(tmp_path / "t.json")
+    base = spark.range(50).selectExpr(
+        "id", "CAST(id AS DOUBLE) * 1.5 AS x", "CAST(id AS STRING) AS s"
+    )
+    io.write_json_table(base, path)
+    io.read_json_table(spark, path, base.schema)
+    io.read_json_table(spark, path, base.schema)
+    encoded = []
+    encode = io._json_records
+    monkeypatch.setattr(
+        io, "_json_records", lambda t: encoded.append(t.num_rows) or encode(t)
+    )
+    io.write_json_table(base, path)  # the snapshot was parsed, not written
+    one = base.withColumn("s", F.when(F.col("id") == 7, "seven").otherwise(F.col("s")))
+    io.write_json_table(one, path)
+    new = spark.range(50, 52).selectExpr("id", "0.0 AS x", "'n' AS s")
+    longer = one.unionByName(new)
+    io.write_json_table(longer, path)
+    io.write_json_table(longer.limit(10), path)
+    assert encoded == [50, 1, 2, 0]
+    with open(path, "w") as f:
+        json.dump([{"id": 0}], f, indent=2)
+    io.write_json_table(one, path)
+    assert encoded[-1] == 50
+    rows = [
+        {"id": i, "x": i * 1.5, "s": "seven" if i == 7 else str(i)} for i in range(50)
+    ]
+    with open(path, "rb") as f:
+        assert f.read() == json.dumps(rows, indent=2).encode()
+
+
+def test_read_once_paths_of_deleted_files_are_forgotten(spark, tmp_path):
+    """A path read once is remembered only while its file exists: the
+    next registration forgets it once the file is deleted."""
+    from airflow_subscription_etl_spark.sources.io import (
+        _READ_ONCE,
+        read_json_table,
+        write_json_table,
+    )
+
+    gone, kept = tmp_path / "gone.json", tmp_path / "kept.json"
+    for path in (gone, kept):
+        path.write_text(json.dumps([{"id": 1}]))
+        read_json_table(spark, str(path), _ids_schema())
+    assert {str(gone), str(kept)} <= _READ_ONCE
+    gone.unlink()
+    write_json_table(spark.range(1), str(tmp_path / "other.json"))
+    assert str(gone) not in _READ_ONCE and str(kept) in _READ_ONCE
