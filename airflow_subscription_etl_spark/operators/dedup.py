@@ -85,28 +85,21 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
 # --- shingling ---------------------------------------------------------------
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """Word k-shingles of the normalized text → array<string> (distinct).
+def shingles_of_tokens(toks: Column, k: int = 3) -> Column:
+    """Word k-shingles (array<string>, distinct) from an ALREADY-BOUND
+    token-array column, e.g. :func:`norm_tokens` staged in its own
+    projection.
 
-    Built from ``split`` + ``transform`` + ``slice`` — all JVM
-    higher-order functions, no UDF. String shingles exist for the
-    oracle-checkable exact-Jaccard path; the MinHash path uses
+    Built from ``transform`` + ``slice`` — JVM higher-order functions,
+    no UDF. String shingles exist for the oracle-checkable
+    exact-Jaccard path; the MinHash path uses
     :func:`with_shingle_hashes` (bigint shingles, ~5× cheaper).
 
-    NOTE (r14): the transform lambda captures the token array, and a
-    HOF lambda re-evaluates its captured expression tree per ELEMENT —
-    passing raw text here re-tokenizes the document once per shingle.
-    Prefer staging the tokens in their own projection and calling
-    :func:`shingles_of_tokens` (what every in-repo caller now does);
-    this wrapper remains for tiny/one-shot frames.
-    """
-    return shingles_of_tokens(norm_tokens(col), k)
-
-
-def shingles_of_tokens(toks: Column, k: int = 3) -> Column:
-    """K-shingles from an ALREADY-BOUND token-array column — the
-    staged form of :func:`shingles` (see its r14 note; the
-    with_shingle_hashes staging rationale applies verbatim)."""
+    The transform lambda captures ``toks``, and a HOF lambda
+    re-evaluates its captured expression tree per ELEMENT: passing an
+    unstaged ``norm_tokens(text)`` re-tokenizes the document once per
+    shingle (the with_shingle_hashes staging rationale applies
+    verbatim)."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     sh = F.transform(

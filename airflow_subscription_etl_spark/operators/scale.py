@@ -8,17 +8,17 @@ runtime; these helpers cover the cases AQE cannot:
   AQE skew handling doesn't apply).
 - ``salted_distribution_agg`` — two-phase aggregation for hot grouping
   keys where a single reducer would own a mega-group.
-- ``write_bucketed`` / ``read_bucketed`` — persistently co-located
-  tables: repeated joins/aggregations on the bucket key run with NO
-  shuffle at all (the classic "pay the shuffle once" move for fact
-  tables that join on the same key every day).
+- ``write_bucketed`` — persistently co-located tables (read back
+  with ``spark.table``): repeated joins/aggregations on the bucket key
+  run with NO shuffle at all (the classic "pay the shuffle once" move
+  for fact tables that join on the same key every day).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -106,10 +106,6 @@ def write_bucketed(
     if sort_key:
         w = w.sortBy(sort_key)
     w.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 #: measure ops whose states merge by re-applying themselves (sum of

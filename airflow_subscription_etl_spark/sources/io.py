@@ -369,16 +369,20 @@ def _json_records_since(
     return pc.replace_with_mask(kept, changed, _json_records(table.filter(changed)))
 
 
-def _json_join(records: pa.Array) -> bytes:
-    """``json.dumps(rows, indent=2)``, byte for byte, from the rows'
-    record texts."""
+def _json_join(records: pa.Array, f) -> None:
+    """Write ``json.dumps(rows, indent=2)``, byte for byte, from the
+    rows' record texts to the binary file ``f``. The joined text goes
+    out as the Arrow buffer itself, between the brackets, so the file's
+    bytes are never copied into a Python ``bytes``."""
     if len(records) == 0:
-        return b"[]"
+        f.write(b"[]")
+        return
     whole = pa.ListArray.from_arrays(
         pa.array([0, len(records)], pa.int32()), records
     )
-    text = pc.binary_join(whole, ",\n")[0].as_buffer().to_pybytes()
-    return b"[\n" + text + b"\n]"
+    f.write(b"[\n")
+    f.write(pc.binary_join(whole, ",\n")[0].as_buffer())
+    f.write(b"\n]")
 
 
 def write_json_table(
@@ -491,7 +495,7 @@ def write_json_table(
     fd, tmp = tempfile.mkstemp(dir=os.path.dirname(key), suffix=".json.tmp")
     try:
         with os.fdopen(fd, "wb") as f:
-            f.write(_json_join(records))
+            _json_join(records, f)
             f.flush()
             identity = _identity(os.fstat(f.fileno()))
         shutil.move(tmp, path)

@@ -17,7 +17,8 @@ Exactly-once follows the module discipline (rp_stream / dedup_stream /
 drift_stream): per epoch, the admitted rows land in their own
 ``admitted/batch=<id>`` directory with OVERWRITE, and the state
 snapshot — per-source tokens admitted SO FAR, a ≤|sources|-row table —
-lands in ``state/batch=<id>``. A replayed epoch re-reads the PREVIOUS
+lands in ``state/batch=<id>`` (a plain snapshot chain of
+:mod:`.bucketed_state`). A replayed epoch re-reads the PREVIOUS
 epoch's snapshot (never its own possibly-crash-torn one) and
 overwrites both directories with identical rows. No keyed stream
 state: the snapshot is catalog-sized and rebuilt per epoch, so state
@@ -30,36 +31,12 @@ the state read/write is ≤|sources| rows."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import fsio
+from . import bucketed_state as bst
 
-
-def _latest_state(
-    spark, state_root: str, before_batch: int
-) -> dict[str, int]:
-    """Per-source admitted-token totals from the newest snapshot with
-    batch id < ``before_batch`` (a replayed epoch must never read its
-    own torn snapshot). Empty dict when no prior epoch exists.
-    Discovery goes through the Hadoop FileSystem API (:mod:`.fsio`),
-    so ``state_root`` on HDFS/object storage is listed for real —
-    driver-local ``os.listdir`` would silently return nothing there
-    and reset every source's remaining budget each epoch (ADVICE r9)."""
-    prev = [
-        int(m.group(1))
-        for m in (
-            re.fullmatch(r"batch=(\d+)", name)
-            for name in fsio.list_names(spark, state_root)
-        )
-        if m and int(m.group(1)) < before_batch
-    ]
-    if not prev:
-        return {}
-    rows = spark.read.parquet(f"{state_root}/batch={max(prev)}").collect()
-    return {r["source"]: int(r["admitted_tokens"]) for r in rows}
+_STATE_SCHEMA = "source string, admitted_tokens bigint"
 
 
 def process_budget_batch(
@@ -82,7 +59,16 @@ def process_budget_batch(
 
     spark = batch.sparkSession
     state_root = f"{out_root}/state"
-    so_far = _latest_state(spark, state_root, int(batch_id))
+    # the newest snapshot strictly below this epoch: a replayed epoch
+    # must never read its own possibly-torn one
+    prev = bst.latest_plain_snapshot(
+        spark, state_root, int(batch_id), _STATE_SCHEMA
+    )
+    so_far = (
+        {r["source"]: int(r["admitted_tokens"]) for r in prev.collect()}
+        if prev is not None
+        else {}
+    )
     remaining = {
         s: max(b - so_far.get(s, 0), 0) for s, b in budgets.items()
     }
@@ -104,39 +90,21 @@ def process_budget_batch(
     new_state = [
         (s, so_far.get(s, 0) + batch_tokens.get(s, 0)) for s in sorted(budgets)
     ]
-    spark.createDataFrame(
-        new_state, "source string, admitted_tokens bigint"
-    ).write.mode("overwrite").parquet(f"{state_root}/batch={int(batch_id)}")
+    spark.createDataFrame(new_state, _STATE_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(f"{state_root}/batch={int(batch_id)}")
 
 
 def prune_budget_state(spark, out_root: str, keep_last: int = 2) -> int:
     """Drop all but the ``keep_last`` newest ``state/batch=<id>``
-    snapshot dirs — the bounded-history maintenance every other state
-    family ships (``sinks.compact_snapshots``, ``prune_bucketed_state``,
-    the span/matrix prunes); budget_stream was the one without (r12
-    review), so a continuous admission stream accumulated one
-    ≤|sources|-row dir per micro-batch forever and ``_latest_state``'s
-    listing walk grew O(epochs). ``keep_last ≥ 2`` keeps an in-flight
-    epoch's predecessor readable under it; the ``admitted/batch=<id>``
-    OUTPUT dirs are the operator's product, not state, and are never
-    touched. SINGLE-WRITER discipline: run between epochs. Returns the
-    number of snapshot dirs removed."""
-    if keep_last < 2:
-        raise ValueError(f"keep_last must be >= 2, got {keep_last}")
-    state_root = f"{out_root}/state"
-    ids = sorted(
-        int(m.group(1))
-        for m in (
-            re.fullmatch(r"batch=(\d+)", name)
-            for name in fsio.list_names(spark, state_root)
-        )
-        if m
-    )
-    removed = 0
-    for b_id in ids[:-keep_last]:
-        fsio.delete(spark, f"{state_root}/batch={b_id}")
-        removed += 1
-    return removed
+    snapshot dirs (:func:`.bucketed_state.prune_plain_chain`): without
+    it a continuous admission stream accumulates one ≤|sources|-row dir
+    per micro-batch forever and the ledger lookup's listing grows
+    O(epochs). The ``admitted/batch=<id>`` OUTPUT dirs are the
+    operator's product, not state, and are never touched.
+    SINGLE-WRITER discipline: run between epochs. Returns the number of
+    snapshot dirs removed."""
+    return bst.prune_plain_chain(spark, f"{out_root}/state", keep_last)
 
 
 def start_budget_admission(

@@ -8,16 +8,15 @@ whole corpus per batch (that is the history×history rescan); it keeps
 the signature INDEX as state and runs delta-sided band joins only.
 Structured Streaming's file/stateful sinks don't fit (the index is a
 keyed snapshot, pairs are an append log), so this composes
-``foreachBatch`` with the repo's pointer-swap snapshot
-(:mod:`.sinks`):
+``foreachBatch`` with the package's keyed-state store
+(:mod:`.bucketed_state`):
 
 - ``index/batch=<id>/bucket=<b>`` — keyed signature snapshot
-  (doc_id → minhash), upserted per batch through the unified face
-  :func:`.sinks.upsert_keyed_state` with ``layout="bucketed"`` (r13 —
-  one caller style across streaming/): the index is CORPUS-sized (one
-  row per document), so a batch reads and rewrites only the key
-  buckets its delta touches — delta-sized IO, not the full-snapshot
-  pointer swap's O(corpus) rewrite per micro-batch;
+  (doc_id → minhash), upserted per batch by
+  :func:`.bucketed_state.upsert_keyed_buckets`: the index is
+  CORPUS-sized (one row per document), so a batch reads and rewrites
+  only the key buckets its delta touches — delta-sized IO, not an
+  O(corpus) rewrite per micro-batch;
 - ``pairs/batch_<id>/`` — this batch's NEW pairs, written with
   overwrite so a foreachBatch REPLAY rewrites the same directory
   (idempotent), never double-appends.
@@ -41,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_minhash_pairs, portable_signatures
-from . import fsio, sinks
+from . import bucketed_state, fsio
 
 
 def _empty_sigs(batch: DataFrame, id_col: str) -> DataFrame:
@@ -71,8 +70,8 @@ def process_dedup_batch(
     spark = batch.sparkSession
     # snapshots strictly below this batch id: a replayed epoch must
     # never read the index state its own previous run wrote
-    index = sinks.read_keyed_state(
-        spark, f"{root}/index", layout="bucketed", before_batch=int(batch_id)
+    index = bucketed_state.read_keyed_state(
+        spark, f"{root}/index", int(batch_id)
     )
     corpus_sigs = (
         index.select(id_col, "minhash")
@@ -100,16 +99,12 @@ def process_dedup_batch(
         pairs.write.mode("overwrite").parquet(
             f"{root}/pairs/batch_{batch_id}"
         )
-        # the unified keyed-state face (VERDICT r11 #5 / r12 #5): the
-        # signature index is corpus-keyed last-writer-wins state, so it
-        # routes layout="bucketed" — delta-sized IO per micro-batch
-        sinks.upsert_keyed_state(
+        bucketed_state.upsert_keyed_buckets(
             sigs.withColumn("_b", F.lit(batch_id)),
             f"{root}/index",
-            keys=[id_col],
-            order_col="_b",
-            batch_id=batch_id,
-            layout="bucketed",
+            id_col,
+            "_b",
+            batch_id,
         )
     finally:
         sigs.unpersist()

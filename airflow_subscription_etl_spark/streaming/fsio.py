@@ -3,40 +3,36 @@ compaction / rotation state, routed through the **Hadoop FileSystem
 API** (via the session's JVM gateway) instead of driver-local
 ``os``/``shutil``.
 
-Why this exists (VERDICT r9 #2 / ADVICE r9): the four streaming
-modules (:mod:`.budget_stream`, :mod:`.dedup_stream`,
-:mod:`.drift_stream`, :mod:`.rp_stream`) and the keyed snapshot sink
-(:mod:`.sinks`) keep small out-of-band state next to their parquet
-output — batch-numbered snapshot directories, the ``_CURRENT`` pointer
-file, write-aside rotation directories. The data itself always went
+Why this exists (VERDICT r9 #2 / ADVICE r9): the streaming modules
+(:mod:`.budget_stream`, :mod:`.dedup_stream`, :mod:`.drift_stream`,
+:mod:`.rp_stream`) and the keyed-state store (:mod:`.bucketed_state`)
+keep small out-of-band state next to their parquet output —
+batch-numbered snapshot directories, the ``_META`` control file,
+write-aside rotation directories. The data itself always went
 through ``spark.read/write`` (any URI works), but the state discovery
 and swaps used ``os.listdir`` / ``shutil.move``, which on a non-local
 ``out_root`` (``hdfs://``, ``s3a://``) silently see an empty directory
 — e.g. the budget admission controller would reset every source's
 remaining budget each micro-batch and over-admit WITHOUT any error.
-Routing every list/rename/delete/pointer-IO through
+Routing every list/rename/delete/control-file IO through
 ``Path.getFileSystem(hadoopConf)`` makes the exactly-once discipline
 hold on whatever filesystem the URI names; a bare local path resolves
 to ``RawLocalFileSystem`` and behaves exactly as before.
 
 Semantics notes:
 
-- :func:`rename_overwrite` is the pointer/rotation swap primitive.
+- :func:`rename_overwrite` is the control-file swap primitive.
   On the local filesystem Hadoop's ``rename`` is POSIX ``rename(2)``
   (atomic replace). On HDFS, ``rename`` onto an existing destination
   returns false, so the helper deletes the destination and renames —
-  a small non-atomic window. Pointer READERS must not mistake that
-  window for a cold start: ``sinks._current_dir`` retries with
-  backoff and RAISES when the pointer stays unreadable while
-  snapshots exist (ADVICE r10 — a single 50 ms retry was best-effort
-  only); the drift monitor falls back to the complete ``_old``
-  baseline instead. On
-  object stores rename is copy+delete and never atomic; the
-  write-aside + pointer discipline is exactly the pattern that stays
+  a small non-atomic window, which :func:`read_text`'s retry absorbs;
+  the drift monitor falls back to the complete ``_old`` baseline
+  instead. On object stores rename is copy+delete and never atomic;
+  the write-aside discipline is exactly the pattern that stays
   CORRECT there (a torn observer sees the previous complete state or
   retries), even though it stops being instantaneous.
 - Everything here is driver-side control-plane IO on catalog-sized
-  state (≤ a handful of paths / one-line pointer files per batch);
+  state (≤ a handful of paths / one-line control files per batch);
   per-call py4j overhead is irrelevant next to a micro-batch.
 """
 
@@ -102,11 +98,9 @@ def replace_dir(spark, src: str, dst: str) -> None:
     portable form. NOT :func:`rename_overwrite`: Hadoop rename ONTO an
     existing directory can NEST src inside dst (HDFS moves src under a
     dst dir and returns true) instead of replacing it. The two metadata
-    ops are the swap's only reader-visible window; both write-aside
-    replay paths (:func:`.sinks.upsert_batch`,
-    :func:`.bucketed_state.upsert_keyed_buckets`) route their swaps
-    here so the invariant and its caveat live in one place (r14
-    review)."""
+    ops are the swap's only reader-visible window; the write-aside
+    replay of :func:`.bucketed_state.upsert_keyed_buckets` routes its
+    swap here."""
     fs, s = _fs_path(spark, src)
     _, d = _fs_path(spark, dst)
     if fs.exists(d):
@@ -134,7 +128,7 @@ def rename_overwrite(spark, src: str, dst: str) -> None:
 def read_text(spark, path: str, retries: int = 1) -> str | None:
     """UTF-8 contents of a (small) file, ``None`` when missing.
     ``retries`` re-checks after a short sleep — a reader that lands
-    inside a non-atomic pointer swap (HDFS delete-then-rename) sees
+    inside a non-atomic control-file swap (HDFS delete-then-rename) sees
     the file again on the next look."""
     fs, p = _fs_path(spark, path)
     for attempt in range(retries + 1):
@@ -159,7 +153,7 @@ def read_text(spark, path: str, retries: int = 1) -> str | None:
 
 def write_text_atomic(spark, path: str, text: str) -> None:
     """Write a small control file via tmp + rename-overwrite (the
-    ``os.replace`` pointer discipline, filesystem-portable)."""
+    ``os.replace`` discipline, filesystem-portable)."""
     fs, _ = _fs_path(spark, path)
     tmp = f"{path}.tmp"
     _, tp = _fs_path(spark, tmp)

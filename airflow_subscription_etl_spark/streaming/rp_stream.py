@@ -21,9 +21,10 @@ so exactly-once reduces to idempotent output:
 The index is an APPEND-ONLY vector log keyed by nothing: a document
 re-ingested under the same id appears twice and scores twice
 (identically). Streams that re-deliver ids should dedup upstream or
-maintain the keyed pointer-swap snapshot (:mod:`.sinks`) instead —
-last-writer-wins upsert is that sink's contract, at the cost of a
-snapshot rewrite per batch that this log deliberately avoids.
+maintain keyed state (:mod:`.bucketed_state`) instead —
+last-writer-wins upsert is that store's contract, at the cost of
+rewriting the touched buckets per batch, which this log deliberately
+avoids.
 
 At 100 TB the per-batch work is the delta's scan + matmul only;
 periodic compaction of small ``batch=`` directories is the same
@@ -212,9 +213,7 @@ def compact_rp_index(spark, path: str) -> int:
     collide with the new ``batch=0``. Returns the number of rows
     folded into ``batch=0`` (0 = nothing to fold; one 1-row meta read
     + one count — both bounded)."""
-    import re  # noqa: PLC0415
-
-    from . import fsio  # noqa: PLC0415
+    from . import bucketed_state, fsio  # noqa: PLC0415
 
     vectors_dir = f"{path}/vectors"
     old_dir = f"{path}/vectors_old"
@@ -226,14 +225,7 @@ def compact_rp_index(spark, path: str) -> int:
         fsio.rename(spark, old_dir, vectors_dir)
     fsio.delete(spark, old_dir)
 
-    batches = sorted(
-        int(m.group(1))
-        for m in (
-            re.fullmatch(r"batch=(\d+)", name)
-            for name in fsio.list_names(spark, vectors_dir)
-        )
-        if m
-    )
+    batches = bucketed_state.batch_ids(spark, vectors_dir)
     # nothing to fold: base only, a single partition, or an
     # already-compacted layout ({0, tail} with nothing between) — a
     # rewrite would re-copy the whole corpus for zero consolidation

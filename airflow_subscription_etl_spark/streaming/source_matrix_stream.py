@@ -47,13 +47,10 @@ directory counts."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import bucketed_state as bst
-from . import fsio
 
 N_STATE_BUCKETS = bst.DEFAULT_BUCKETS
 
@@ -324,20 +321,7 @@ def prune_source_matrix_state(spark, out_root: str, keep_last: int = 2) -> int:
     via :func:`bucketed_state.prune_bucketed_state`, plus keep-last
     pruning of the plain pairs/totals/matrix snapshot chains. Returns
     total dirs removed. SINGLE-WRITER discipline: run between epochs."""
-    if keep_last < 2:
-        raise ValueError(f"keep_last must be >= 2, got {keep_last}")
     removed = bst.prune_bucketed_state(spark, f"{out_root}/state", keep_last)
     for family in ("pairs", "totals", "matrix"):
-        root = f"{out_root}/{family}"
-        ids = sorted(
-            int(m.group(1))
-            for m in (
-                re.fullmatch(r"batch=(\d+)", name)
-                for name in fsio.list_names(spark, root)
-            )
-            if m
-        )
-        for b_id in ids[:-keep_last]:
-            fsio.delete(spark, f"{root}/batch={b_id}")
-            removed += 1
+        removed += bst.prune_plain_chain(spark, f"{out_root}/{family}", keep_last)
     return removed

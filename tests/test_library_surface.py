@@ -44,13 +44,9 @@ ALLOWED_TEST_ONLY = {
     ),
     "cache.pinned_count": "introspection the cache-pinning tests assert on",
     "operators.scale.write_bucketed": _DEMO,
-    "operators.scale.read_bucketed": _DEMO,
     "operators.scale.zorder_repartition": _DEMO,
     "operators.similarity.centroid_per_label": _DEMO,
     "operators.sketch.cms_merge": _DEMO,
-    "operators.dedup.shingles": (
-        "one-shot wrapper over shingles_of_tokens for small frames"
-    ),
     "streaming.budget_stream.start_budget_admission": _STREAM,
     "streaming.budget_stream.prune_budget_state": _STREAM_STATE,
     "streaming.dedup_stream.start_dedup_index_sink": _STREAM,
@@ -64,8 +60,6 @@ ALLOWED_TEST_ONLY = {
     "streaming.rp_stream.start_rp_index_append": _STREAM,
     "streaming.rp_stream.start_rp_knn_stream": _STREAM,
     "streaming.rp_stream.compact_rp_index": _STREAM_STATE,
-    "streaming.sinks.start_keyed_snapshot_sink": _STREAM,
-    "streaming.sinks.compact_snapshots": _STREAM_STATE,
     "streaming.source_matrix_stream.start_source_matrix_stream": _STREAM,
     "streaming.source_matrix_stream.prune_source_matrix_state": _STREAM_STATE,
     "streaming.span_stream.start_span_dedup_stream": _STREAM,

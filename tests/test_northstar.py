@@ -34,7 +34,11 @@ def test_exact_dedup(docs):
 
 def test_shingles(spark):
     df = spark.createDataFrame([("a b c d",)], "t string")
-    out = df.select(dedup.shingles(F.col("t"), 3).alias("sh")).collect()[0]["sh"]
+    out = (
+        df.select(dedup.norm_tokens(F.col("t")).alias("toks"))
+        .select(dedup.shingles_of_tokens(F.col("toks"), 3).alias("sh"))
+        .collect()[0]["sh"]
+    )
     assert sorted(out) == ["a b c", "b c d"]
 
 

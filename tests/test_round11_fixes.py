@@ -10,9 +10,6 @@
   the global-agg / keyed-window shapes stay clean; the two EXEMPT
   entries are pinned LIVE (the flag fires on those queries before
   exemption — an exemption for a flag that can't fire is dead weight).
-- :mod:`streaming.fsio`: a pointer read that misses mid-swap is
-  retried with backoff, and callers can distinguish "cold start" from
-  "pointer vanished under me" (ADVICE r10).
 - ``scale._monotone_id_key``: the string-key expression depends on
   Spark >= 3.3 byte-wise ``rpad`` over BINARY; older versions fall
   back to ``None`` (one fine partition per tie class) instead of
@@ -189,26 +186,6 @@ def test_span_stream_hot_digest_no_window(spark, tmp_path):
 
 
 # --------------------------------------------------- ADVICE r10 fixes
-
-
-def test_snapshot_pointer_miss_with_state_raises(spark, tmp_path):
-    """A vanished _CURRENT pointer while snapshots exist must RAISE,
-    never read as a cold start (the HDFS delete-then-rename swap
-    window) — a fresh root still reads as None."""
-    from airflow_subscription_etl_spark.streaming import fsio
-    from airflow_subscription_etl_spark.streaming.sinks import (
-        read_snapshot,
-        upsert_batch,
-    )
-
-    root = str(tmp_path / "snap")
-    assert read_snapshot(spark, root) is None  # genuine cold start
-    df = spark.createDataFrame([(1, 10)], "k int, v int")
-    upsert_batch(df, root, ["k"], "v", 0)
-    assert read_snapshot(spark, root) is not None
-    fsio.delete(spark, f"{root}/_CURRENT")  # simulate the swap window
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        read_snapshot(spark, root)
 
 
 def test_monotone_id_key_falls_back_on_old_spark(spark, monkeypatch):

@@ -1,4 +1,4 @@
-"""Round-12 hardening — VERDICT r11 #3/#4/#5 + ADVICE r11:
+"""Round-12 hardening — VERDICT r11 #3/#4 + ADVICE r11:
 
 - ``tools/plan_lint``'s ``single-partition-window`` walk no longer
   stops at the FIRST aggregate: a grouped aggregate over
@@ -10,18 +10,9 @@
   batch-dir walk once every bucket (``_META``'s pinned count) has its
   newest snapshot — with prune deferred, the driver listing stays
   O(n_buckets), not O(retained epochs).
-- ``sinks.upsert_batch`` self-heals a pointer miss with snapshots
-  present (the crash window between snapshot write and pointer flip):
-  the writer knows its batch id and re-merges against the newest
-  snapshot STRICTLY below it, so replays recover instead of wedging on
-  the read guard's RuntimeError (ADVICE r11).
 - ``bucketed_state.write_buckets`` pins ``partitionOverwriteMode`` to
   static on the write, so replay cleanup survives a session-level
   ``dynamic`` setting (ADVICE r11).
-- One unified keyed-state face (``sinks.upsert_keyed_state`` /
-  ``sinks.read_keyed_state``) dispatches between the full-snapshot and
-  bucketed disciplines, with the catalog-vs-corpus trade documented in
-  one place (VERDICT r11 #5).
 """
 
 from __future__ import annotations
@@ -37,7 +28,6 @@ sys.path.insert(0, "tools")
 import plan_lint  # noqa: E402
 
 from airflow_subscription_etl_spark.streaming import bucketed_state, fsio
-from airflow_subscription_etl_spark.streaming import sinks
 
 
 # ------------------------------------ plan-lint blind spot (VERDICT #3)
@@ -134,47 +124,6 @@ def test_bucket_snapshots_without_meta_still_full_walk(spark, tmp_path):
     assert len(snaps) == 1
 
 
-# --------------------- writer-side pointer-miss self-heal (ADVICE r11)
-
-
-def test_upsert_replay_self_heals_missing_pointer(spark, tmp_path):
-    """Crash window: snapshot_1 written, pointer flip lost. The replay
-    of batch 1 must merge against snapshot_0 (the state the original
-    attempt saw), rewrite snapshot_1, and restore the pointer — not
-    wedge on the read guard's RuntimeError."""
-    root = str(tmp_path / "heal")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    df1 = spark.createDataFrame([(2, 25), (3, 30)], "k int, v int")
-    sinks.upsert_batch(df1, root, ["k"], "v", 1)
-    # simulate the crash: pointer vanished after snapshot_1 was written
-    fsio.delete(spark, f"{root}/_CURRENT")
-    with pytest.raises(RuntimeError, match="recreate the pointer"):
-        sinks.read_snapshot(spark, root)
-    sinks.upsert_batch(df1, root, ["k"], "v", 1)  # the foreachBatch replay
-    got = {
-        r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()
-    }
-    assert got == {1: 10, 2: 25, 3: 30}
-    # pointer restored to the replayed snapshot
-    assert fsio.read_text(spark, f"{root}/_CURRENT") == "snapshot_1"
-
-
-def test_upsert_batch0_replay_with_torn_snapshot_is_cold_start(spark, tmp_path):
-    """Batch 0's replay after a pointer-less crash sees NO prior state
-    (snapshot_0 itself may be torn) — it must rebuild from the batch
-    alone, not read its own torn write."""
-    root = str(tmp_path / "heal0")
-    df0 = spark.createDataFrame([(1, 10)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    fsio.delete(spark, f"{root}/_CURRENT")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    got = {
-        r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()
-    }
-    assert got == {1: 10}
-
-
 # ------------------- static partition overwrite on replay (ADVICE r11)
 
 
@@ -206,214 +155,6 @@ def test_write_buckets_replay_clears_stale_buckets_under_dynamic(
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-# ----------------------------- unified keyed-state face (VERDICT #5)
-
-
-def test_unified_face_snapshot_layout_matches_direct_calls(spark, tmp_path):
-    root = str(tmp_path / "u1")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    df1 = spark.createDataFrame([(2, 25)], "k int, v int")
-    sinks.upsert_keyed_state(df0, root, ["k"], "v", 0)
-    sinks.upsert_keyed_state(df1, root, ["k"], "v", 1)
-    got = {
-        r["k"]: r["v"]
-        for r in sinks.read_keyed_state(spark, root).collect()
-    }
-    assert got == {1: 10, 2: 25}
-    # strictly-below bound: epoch 1's reader view is epoch 0's state
-    before = {
-        r["k"]: r["v"]
-        for r in sinks.read_keyed_state(
-            spark, root, before_batch=1
-        ).collect()
-    }
-    assert before == {1: 10, 2: 20}
-
-
-def test_unified_face_bucketed_layout_matches_direct_calls(spark, tmp_path):
-    root = str(tmp_path / "u2")
-    df0 = spark.createDataFrame([("a", 10), ("b", 20)], "k string, v long")
-    df1 = spark.createDataFrame([("b", 25)], "k string, v long")
-    sinks.upsert_keyed_state(
-        df0, root, ["k"], "v", 0, layout="bucketed", n_buckets=4
-    )
-    sinks.upsert_keyed_state(
-        df1, root, ["k"], "v", 1, layout="bucketed", n_buckets=4
-    )
-    got = {
-        r["k"]: r["v"]
-        for r in sinks.read_keyed_state(
-            spark, root, layout="bucketed"
-        ).collect()
-    }
-    assert got == {"a": 10, "b": 25}
-    before = {
-        r["k"]: r["v"]
-        for r in sinks.read_keyed_state(
-            spark, root, layout="bucketed", before_batch=1
-        ).collect()
-    }
-    assert before == {"a": 10, "b": 20}
-    # cold start is None under both layouts
-    assert sinks.read_keyed_state(
-        spark, str(tmp_path / "void"), layout="bucketed"
-    ) is None
-
-
-def test_streaming_sink_drives_bucketed_layout_end_to_end(spark, tmp_path):
-    """A REAL readStream through start_keyed_snapshot_sink with
-    layout='bucketed': two micro-batches land as bucket chains (batch=
-    dirs, _META pinned), and the current state is last-writer-wins —
-    the same wiring the snapshot layout has always had."""
-    import datetime as dt
-
-    from airflow_subscription_etl_spark.schemas import EVENTS_SCHEMA
-
-    def ts(minute):
-        return dt.datetime(2024, 1, 1, 10, minute)
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, ts(0), 1, "click", 1.0, "{}"), (2, ts(1), 2, "click", 2.0, "{}")],
-        EVENTS_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(3, ts(9), 1, "purchase", 5.0, "{}")], EVENTS_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    root = str(tmp_path / "bsnap")
-    q = sinks.start_keyed_snapshot_sink(
-        stream,
-        root,
-        keys=["user_id"],
-        order_col="ts",
-        checkpoint=str(tmp_path / "ckpt"),
-        layout="bucketed",
-        n_buckets=4,
-    )
-    q.awaitTermination(120)
-    state = sinks.read_keyed_state(spark, root, layout="bucketed")
-    got = {r["user_id"]: r["event_id"] for r in state.collect()}
-    assert got == {1: 3, 2: 2}  # later batch won for user 1
-    # bucketed physical layout, not pointer snapshots
-    names = fsio.list_names(spark, root)
-    assert "_META" in names
-    assert any(n.startswith("batch=") for n in names)
-    assert not any(n.startswith("snapshot_") for n in names)
-
-
-# ----------------------- r12 review: same-id replay + state hardening
-
-
-def test_same_id_replay_preserves_state_aqe_off(spark, tmp_path):
-    """The REAL foreachBatch retry contract re-delivers a failed batch
-    under the SAME id. The old pointer-based merge read
-    snapshot_<id> and overwrote the directory being read mid-job —
-    REPRODUCED destroying committed state with AQE off. The id-based
-    merge (newest snapshot STRICTLY below the batch id) never reads
-    the dir it writes."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    root = str(tmp_path / "replay")
-    try:
-        spark.conf.set(key, "false")
-        df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-        sinks.upsert_batch(df0, root, ["k"], "v", 0)
-        df1 = spark.createDataFrame([(2, 25), (3, 30)], "k int, v int")
-        sinks.upsert_batch(df1, root, ["k"], "v", 1)
-        # the retry: same content, SAME id — must be a no-op, and rows
-        # only present in prior state (k=1) must survive
-        sinks.upsert_batch(df1, root, ["k"], "v", 1)
-        got = {
-            r["k"]: r["v"]
-            for r in sinks.read_snapshot(spark, root).collect()
-        }
-        assert got == {1: 10, 2: 25, 3: 30}
-    finally:
-        spark.conf.set(key, old)
-
-
-def test_upsert_rejects_ids_from_the_roots_future(spark, tmp_path):
-    """Monotonic-id lineage guard: a fresh checkpoint restarting ids
-    at 0 over an EXISTING root would silently orphan the accumulated
-    state (merge base 'strictly below 0' is empty) — raise instead."""
-    root = str(tmp_path / "lineage")
-    df = spark.createDataFrame([(1, 10)], "k int, v int")
-    sinks.upsert_batch(df, root, ["k"], "v", 5)
-    with pytest.raises(RuntimeError, match="monotonic"):
-        sinks.upsert_batch(df, root, ["k"], "v", 3)
-    # same id (replay) and higher id both stay legal
-    sinks.upsert_batch(df, root, ["k"], "v", 5)
-    sinks.upsert_batch(df, root, ["k"], "v", 6)
-
-
-def test_empty_keys_rejected_everywhere(spark, tmp_path):
-    df = spark.createDataFrame([(1, 10)], "k int, v int")
-    with pytest.raises(ValueError, match="non-empty"):
-        sinks.upsert_batch(df, str(tmp_path / "x"), [], "v", 0)
-    with pytest.raises(ValueError, match="non-empty"):
-        sinks.upsert_keyed_state(df, str(tmp_path / "x"), [], "v", 0)
-    with pytest.raises(ValueError, match="non-empty"):
-        sinks.start_keyed_snapshot_sink(
-            None, str(tmp_path / "x"), keys=[], order_col="v",
-            checkpoint=str(tmp_path / "c"),
-        )
-
-
-def test_null_keys_round_trip_through_bucketed_state(spark, tmp_path):
-    """crc32(NULL) is NULL, which partitionBy routes to the hive
-    default-partition dir that the bucket=(\\d+) walk never matches —
-    null-keyed rows were written once then SILENTLY DROPPED from every
-    read. The null-safe bucket map keeps them round-tripping."""
-    root = str(tmp_path / "nullk")
-    df = spark.createDataFrame(
-        [("a", 1), (None, 2)], "k string, v long"
-    )
-    bucketed_state.upsert_keyed_buckets(df, root, "k", "v", 0, n_buckets=4)
-    got = {
-        r["k"]: r["v"]
-        for r in bucketed_state.read_keyed_state(spark, root).collect()
-    }
-    assert got == {"a": 1, None: 2}
-    # and the null key merges as ONE key across epochs
-    df2 = spark.createDataFrame([(None, 9)], "k string, v long")
-    bucketed_state.upsert_keyed_buckets(df2, root, "k", "v", 1, n_buckets=4)
-    got = {
-        r["k"]: r["v"]
-        for r in bucketed_state.read_keyed_state(spark, root).collect()
-    }
-    assert got == {"a": 1, None: 9}
-
-
-def test_prune_removes_empty_epoch_dirs(spark, tmp_path):
-    """An empty micro-batch's write leaves a bucket-less batch=<id>
-    shell (_SUCCESS only); the old `buckets and ...` guard made such
-    dirs permanently unprunable, defeating the ~n_buckets+keep_last
-    listing bound."""
-    root = str(tmp_path / "empty")
-    full = spark.createDataFrame([("a", 1)], "k string, v long")
-    empty = spark.createDataFrame([], "k string, v long")
-    bucketed_state.upsert_keyed_buckets(full, root, "k", "v", 0, n_buckets=2)
-    bucketed_state.upsert_keyed_buckets(empty, root, "k", "v", 1, n_buckets=2)
-    bucketed_state.upsert_keyed_buckets(full, root, "k", "v", 2, n_buckets=2)
-    names = fsio.list_names(spark, root)
-    assert "batch=1" in names  # the empty shell exists pre-prune
-    removed = bucketed_state.prune_bucketed_state(spark, root, keep_last=2)
-    assert removed >= 1
-    assert "batch=1" not in fsio.list_names(spark, root)
-    # state unaffected
-    got = {
-        r["k"]: r["v"]
-        for r in bucketed_state.read_keyed_state(spark, root).collect()
-    }
-    assert got == {"a": 1}
 
 
 def test_budget_state_prune(spark, tmp_path):
@@ -480,83 +221,3 @@ def test_drift_score_immune_to_baseline_swap_after_read(spark, tmp_path):
     )
     rows = scored.collect()  # must not raise
     assert rows and rows[0]["n_tokens"] == 5
-
-
-def test_unified_face_rejects_bad_args(spark, tmp_path):
-    df = spark.createDataFrame([(1, 1)], "k int, v int")
-    with pytest.raises(ValueError, match="unknown layout"):
-        sinks.upsert_keyed_state(df, str(tmp_path / "x"), ["k"], "v", 0, layout="delta")
-    with pytest.raises(ValueError, match="unknown layout"):
-        sinks.read_keyed_state(spark, str(tmp_path / "x"), layout="delta")
-    with pytest.raises(ValueError, match="n_buckets"):
-        sinks.upsert_keyed_state(
-            df, str(tmp_path / "x"), ["k"], "v", 0, n_buckets=8
-        )
-    # composite keys must be REFUSED by the bucketed layout: its merge
-    # is keyed on one column, so keys[0]-bucketing would also DEDUP by
-    # keys[0] alone, silently collapsing distinct composite keys
-    dfc = spark.createDataFrame([(1, 2, 1)], "a int, b int, v int")
-    with pytest.raises(ValueError, match="one key column"):
-        sinks.upsert_keyed_state(
-            dfc, str(tmp_path / "x"), ["a", "b"], "v", 0, layout="bucketed"
-        )
-
-
-def test_sink_starter_validates_synchronously(tmp_path):
-    """r12 review: argument errors must raise AT WIRING TIME — before
-    any checkpoint/root dir is created and before a StreamingQuery
-    exists to bury them in an async StreamingQueryException. The
-    stream object is never touched on the error path, so a None
-    placeholder proves the raise is synchronous."""
-    import os
-
-    root = str(tmp_path / "never")
-    for kwargs in (
-        {"layout": "deltaa"},
-        {"layout": "bucketed"},  # composite keys below
-        {"layout": "snapshot", "n_buckets": 8},
-    ):
-        with pytest.raises(ValueError):
-            sinks.start_keyed_snapshot_sink(
-                None,  # would AttributeError if the path touched it
-                root,
-                keys=["a", "b"],
-                order_col="v",
-                checkpoint=str(tmp_path / "ckpt"),
-                **kwargs,
-            )
-    assert not os.path.exists(root)
-
-
-def test_layouts_agree_on_final_state(spark, tmp_path):
-    """Cross-layout equivalence: the two disciplines implement the SAME
-    last-writer-wins semantics, so any epoch sequence must converge to
-    the same keyed state under both. Deterministic pseudo-random
-    batches with key collisions within and across epochs, ties
-    included (ties → later batch wins under both)."""
-    snap_root = str(tmp_path / "snap")
-    buck_root = str(tmp_path / "buck")
-    # 4 epochs x 12 rows over 8 keys, order values with deliberate
-    # repeats so tie-handling is exercised
-    for e in range(4):
-        rows = [
-            (f"k{(e * 5 + i * 3) % 8}", (i * 7 + e) % 5, e * 100 + i)
-            for i in range(12)
-        ]
-        df = spark.createDataFrame(rows, "k string, ord int, payload int")
-        sinks.upsert_keyed_state(df, snap_root, ["k"], "ord", e)
-        sinks.upsert_keyed_state(
-            df, buck_root, ["k"], "ord", e, layout="bucketed", n_buckets=4
-        )
-    snap = {
-        (r["k"], r["ord"])
-        for r in sinks.read_keyed_state(spark, snap_root).collect()
-    }
-    buck = {
-        (r["k"], r["ord"])
-        for r in sinks.read_keyed_state(
-            spark, buck_root, layout="bucketed"
-        ).collect()
-    }
-    assert snap == buck
-    assert len(snap) == 8  # one row per key

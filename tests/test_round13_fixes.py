@@ -1,177 +1,13 @@
-"""Round-13 fixes (VERDICT r12 #5/#6 + ADVICE r12): the snapshot
-sink's replay write-aside + folded listing, inprogress-dir GC in
-compaction, hive-default-partition GC in the bucketed prune, and the
-narrowed drift baseline-read retry."""
+"""Round-13 fixes (VERDICT r12 #5/#6 + ADVICE r12): the
+negative-samples descending-sequence guard and the narrowed drift
+baseline-read retry."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.errors import AnalysisException
 
-from airflow_subscription_etl_spark.streaming import (
-    bucketed_state,
-    drift_stream,
-    fsio,
-    sinks,
-)
-
-# ----------------------------- replay write-aside (ADVICE r12 / #6)
-
-
-def test_replay_write_aside_state_and_layout(spark, tmp_path):
-    """A completed same-id replay must leave exactly the same state as
-    the first attempt, point _CURRENT at the replayed snapshot, and
-    leave no hidden .inprogress aside dir behind (the write-aside is
-    renamed into place)."""
-    root = str(tmp_path / "replay")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    df1 = spark.createDataFrame([(2, 25), (3, 30)], "k int, v int")
-    sinks.upsert_batch(df1, root, ["k"], "v", 1)
-    # the retry: snapshot_1 already exists → write-aside path
-    sinks.upsert_batch(df1, root, ["k"], "v", 1)
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 25, 3: 30}
-    names = fsio.list_names(spark, root)
-    assert not any(".inprogress" in n for n in names)
-    assert fsio.read_text(spark, f"{root}/{sinks._POINTER}") == "snapshot_1"
-
-
-def test_replay_of_batch_zero_write_aside(spark, tmp_path):
-    """Replaying batch 0 has no merge base: the pointer PARKS on the
-    completed write-aside for the duration of the swap (so no instant
-    exists where readers see pointer-missing with zero snapshot dirs —
-    a silent cold start), then is re-set to the swapped-in snapshot."""
-    root = str(tmp_path / "replay0")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 20}
-    names = fsio.list_names(spark, root)
-    assert not any(".inprogress" in n for n in names)
-    assert fsio.read_text(spark, f"{root}/{sinks._POINTER}") == "snapshot_0"
-
-
-def test_batch0_replay_crash_state_stays_readable_and_heals(
-    spark, tmp_path
-):
-    """r13 review: replaying the root's ONLY snapshot must never leave
-    an instant (or a crash state) where readers see pointer-missing
-    with zero snapshot dirs — a silent cold start. The fix parks the
-    pointer on the completed aside during the swap; this test builds
-    that exact crash state (aside written, dest deleted, rename never
-    ran) and checks: readers still see the state, compaction keeps the
-    pointer-named aside, and the same-id re-delivery heals the layout."""
-    root = str(tmp_path / "crash0")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    # construct the mid-swap crash state by hand
-    aside = f"{root}/.snapshot_0.inprogress"
-    sinks.read_snapshot(spark, root).write.parquet(aside)
-    fsio.write_text_atomic(
-        spark, f"{root}/{sinks._POINTER}", ".snapshot_0.inprogress"
-    )
-    fsio.delete(spark, f"{root}/snapshot_0")
-    # readers: NOT a cold start — the pointer resolves to the aside
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 20}
-    # maintenance: compaction must not GC the pointer-named aside
-    sinks.compact_snapshots(spark, root, keep_last=2)
-    assert fsio.exists(spark, aside)
-    assert sinks.read_snapshot(spark, root).count() == 2
-    # the stream restarts and re-delivers batch 0: layout heals
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    assert sinks.list_snapshots(spark, root) == [0]
-    assert (
-        fsio.read_text(spark, f"{root}/{sinks._POINTER}") == "snapshot_0"
-    )
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 20}
-    # the no-longer-referenced aside is GC'd by the next compaction
-    sinks.compact_snapshots(spark, root, keep_last=2)
-    assert not fsio.exists(spark, aside)
-
-
-def test_compact_gcs_orphaned_inprogress_dirs(spark, tmp_path):
-    """A crash between the replay's aside write and its rename leaves
-    a hidden .snapshot_<id>.inprogress dir that list_snapshots and all
-    readers ignore — compaction is its only GC."""
-    root = str(tmp_path / "compact")
-    df = spark.createDataFrame([(1, 10)], "k int, v int")
-    for i in range(3):
-        sinks.upsert_batch(df, root, ["k"], "v", i)
-    orphan = f"{root}/.snapshot_9.inprogress"
-    fsio.mkdirs(spark, orphan)
-    assert sinks.list_snapshots(spark, root) == [0, 1, 2]  # invisible
-    removed = sinks.compact_snapshots(spark, root, keep_last=2)
-    assert removed == 1  # snapshot_0
-    assert not fsio.exists(spark, orphan)
-    assert sinks.list_snapshots(spark, root) == [1, 2]
-    # and the compacted root still reads correctly
-    assert sinks.read_snapshot(spark, root).count() == 1
-
-
-# ------------------- bucketed prune: hive-default partition GC (ADVICE)
-
-
-def test_prune_gcs_hive_default_partition_dirs(spark, tmp_path):
-    """Roots written before the r12 null-key coalesce hold null-keyed
-    rows under bucket=__HIVE_DEFAULT_PARTITION__ — invisible to the
-    bucket=(\\d+) walk, previously undeletable inside retained batch
-    dirs. The prune now removes them explicitly (removable dirs take
-    theirs along wholesale)."""
-    root = str(tmp_path / "hive")
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
-    for i in range(4):
-        bucketed_state.upsert_keyed_buckets(
-            df.withColumn("v", df["v"] + i), root, "k", "v", i, n_buckets=4
-        )
-    before = {
-        r["k"]: r["v"]
-        for r in bucketed_state.read_keyed_state(spark, root).collect()
-    }
-    # simulate a pre-fix root: hive dirs inside a retained (newest) and
-    # an old (removable) batch dir
-    for b_id in (0, 3):
-        hive = f"{root}/batch={b_id}/bucket=__HIVE_DEFAULT_PARTITION__"
-        spark.createDataFrame([(None, 99)], "k string, v long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(hive)
-    bucketed_state.prune_bucketed_state(spark, root, keep_last=2)
-    leftovers = [
-        f"batch={name}/{sub}"
-        for name in fsio.list_names(spark, root)
-        if name.startswith("batch=")
-        for sub in fsio.list_names(spark, f"{root}/{name}")
-        if "HIVE_DEFAULT" in sub
-    ]
-    assert leftovers == []
-    # numbered buckets and the visible state are untouched
-    after = {
-        r["k"]: r["v"]
-        for r in bucketed_state.read_keyed_state(spark, root).collect()
-    }
-    assert after == before
-
-
-def test_prune_removes_batch_dir_holding_only_hive_partition(
-    spark, tmp_path
-):
-    """A batch dir whose ONLY content is the hive-default partition
-    has no numbered buckets — it prunes as an empty shell (r12 rule),
-    hive dir and all."""
-    root = str(tmp_path / "hiveonly")
-    df = spark.createDataFrame([("a", 1)], "k string, v long")
-    for i in (1, 2, 3):
-        bucketed_state.upsert_keyed_buckets(df, root, "k", "v", i, n_buckets=2)
-    hive = f"{root}/batch=0/bucket=__HIVE_DEFAULT_PARTITION__"
-    spark.createDataFrame([(None, 9)], "k string, v long").write.mode(
-        "overwrite"
-    ).parquet(hive)
-    bucketed_state.prune_bucketed_state(spark, root, keep_last=2)
-    assert not fsio.exists(spark, f"{root}/batch=0")
-
+from airflow_subscription_etl_spark.streaming import drift_stream
 
 # ------------------------- negative_samples: descending-sequence guard
 
@@ -240,97 +76,3 @@ def test_missing_baseline_still_raises_rotation_runtimeerror(
     raises the rotation-shaped error with the cause chained."""
     with pytest.raises(RuntimeError, match="unreadable after retry"):
         drift_stream._read_baseline(spark, str(tmp_path / "nope"))
-
-
-# ------------------- model-based sink lifecycle (seeded random walks)
-
-
-def test_sink_lifecycle_random_walk_matches_dict_model(spark, tmp_path):
-    """Drive upsert_batch through seeded random sequences of batches,
-    SAME-ID replays, and interleaved compactions; the snapshot must
-    equal a driver-side dict model (last-writer-wins by (order, new))
-    after every step. Replays re-deliver the ORIGINAL batch content
-    (the foreachBatch contract: same id, same data) so the model is
-    unchanged by them; compaction must never change the readable
-    state."""
-    import random
-
-    for seed in (13, 101):
-        rng = random.Random(seed)
-        root = str(tmp_path / f"walk{seed}")
-        model: dict[int, int] = {}
-        history: dict[int, list[tuple[int, int]]] = {}
-        for bid in range(6):
-            rows = [
-                (rng.randrange(5), rng.randrange(100))
-                for _ in range(rng.randrange(1, 4))
-            ]
-            history[bid] = rows
-            df = spark.createDataFrame(rows, "k int, v int")
-            sinks.upsert_batch(df, root, ["k"], "v", bid)
-            # model: per key keep greatest v; ties -> incoming wins,
-            # and within one batch row_number picks ONE max-v row
-            for k, v in rows:
-                if k not in model or v >= model[k]:
-                    model[k] = v
-            if rng.random() < 0.5 and bid > 0:
-                # same-id replay of a RANDOM past batch id is illegal
-                # (monotonicity) — only the newest id replays
-                df_r = spark.createDataFrame(history[bid], "k int, v int")
-                sinks.upsert_batch(df_r, root, ["k"], "v", bid)
-            if rng.random() < 0.4:
-                sinks.compact_snapshots(spark, root, keep_last=2)
-            got = {
-                r["k"]: r["v"]
-                for r in sinks.read_snapshot(spark, root).collect()
-            }
-            assert got == model, (seed, bid, got, model)
-        # a replayed OLD id must still be refused after the walk
-        with pytest.raises(RuntimeError, match="monotonic"):
-            sinks.upsert_batch(
-                spark.createDataFrame(history[0], "k int, v int"),
-                root,
-                ["k"],
-                "v",
-                0,
-            )
-
-
-def test_bucketed_face_random_walk_matches_dict_model(spark, tmp_path):
-    """The same seeded walk through the unified face's BUCKETED layout
-    (upsert_keyed_state/read_keyed_state, prune interleaved instead of
-    compaction): both layouts must realize identical last-writer-wins
-    semantics, differing only in IO shape."""
-    import random
-
-    rng = random.Random(13)
-    root = str(tmp_path / "bwalk")
-    model: dict[int, int] = {}
-    history: dict[int, list[tuple[int, int]]] = {}
-    for bid in range(6):
-        rows = [
-            (rng.randrange(5), rng.randrange(100))
-            for _ in range(rng.randrange(1, 4))
-        ]
-        history[bid] = rows
-        df = spark.createDataFrame(rows, "k int, v int")
-        sinks.upsert_keyed_state(
-            df, root, ["k"], "v", bid, layout="bucketed", n_buckets=4
-        )
-        for k, v in rows:
-            if k not in model or v >= model[k]:
-                model[k] = v
-        if rng.random() < 0.5 and bid > 0:
-            df_r = spark.createDataFrame(history[bid], "k int, v int")
-            sinks.upsert_keyed_state(
-                df_r, root, ["k"], "v", bid, layout="bucketed", n_buckets=4
-            )
-        if rng.random() < 0.4:
-            bucketed_state.prune_bucketed_state(spark, root, keep_last=2)
-        got = {
-            r["k"]: r["v"]
-            for r in sinks.read_keyed_state(
-                spark, root, layout="bucketed"
-            ).collect()
-        }
-        assert got == model, (bid, got, model)

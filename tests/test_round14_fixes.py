@@ -1,7 +1,6 @@
 """Round-14 fixes (VERDICT r13 #5 + ADVICE r13): the bucketed-state
-same-id replay write-aside (decision: MITIGATE, mirroring the snapshot
-layout), the snapshot pointer's rename-to-flip window absorbed at read
-time, and the widened AnalysisException missing-file classifier."""
+same-id replay write-aside (decision: MITIGATE) and the widened
+AnalysisException missing-file classifier."""
 
 from __future__ import annotations
 
@@ -12,52 +11,7 @@ from airflow_subscription_etl_spark.streaming import (
     bucketed_state,
     drift_stream,
     fsio,
-    sinks,
 )
-
-# ---------------- snapshot pointer: rename-to-flip window (ADVICE r13)
-
-
-def test_pointer_on_gone_aside_resolves_to_rename_destination(
-    spark, tmp_path
-):
-    """The batch-0 replay's ONE remaining crash window: between the
-    aside's rename onto snapshot_<id> and the final pointer flip,
-    _CURRENT still names the aside the rename just moved away. The only
-    operation that removes an aside is that rename, so the reader
-    resolves the gone name to its destination instead of dangling."""
-    root = str(tmp_path / "gone_aside")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    # construct the post-rename / pre-flip crash state by hand:
-    # snapshot_0 is complete (the rename landed), pointer still names
-    # the aside, and the aside directory no longer exists.
-    fsio.write_text_atomic(
-        spark, f"{root}/{sinks._POINTER}", ".snapshot_0.inprogress"
-    )
-    assert not fsio.exists(spark, f"{root}/.snapshot_0.inprogress")
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 20}
-    # the next replay heals the pointer itself
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    assert fsio.read_text(spark, f"{root}/{sinks._POINTER}") == "snapshot_0"
-
-
-def test_pointer_on_existing_aside_still_reads_the_aside(spark, tmp_path):
-    """While the aside EXISTS (crash before its rename) the pointer
-    name resolves to itself — the aside is the complete snapshot then,
-    and rerouting to the not-yet-renamed destination would be wrong."""
-    root = str(tmp_path / "live_aside")
-    df0 = spark.createDataFrame([(1, 10)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    aside = f"{root}/.snapshot_0.inprogress"
-    spark.createDataFrame([(1, 11)], "k int, v int").write.parquet(aside)
-    fsio.write_text_atomic(
-        spark, f"{root}/{sinks._POINTER}", ".snapshot_0.inprogress"
-    )
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 11}  # the aside's content, not snapshot_0's
-
 
 # -------- bucketed same-id replay: write-aside (VERDICT r13 #5, r14)
 
@@ -168,119 +122,3 @@ def test_missing_file_classifier_non_analysis_shapes():
         RuntimeError("java.io.FileNotFoundException: gone")
     )
     assert not drift_stream._is_missing_file_error(RuntimeError("boom"))
-
-
-def test_bucketed_replay_crash_walk_matches_dict_model(
-    spark, tmp_path, monkeypatch
-):
-    """Seeded walk over the bucketed layout where every replay is hit
-    by an injected crash at one of the swap's two boundaries (before
-    the delete — aside written, dest intact; before the rename — dest
-    gone, aside complete), then re-delivered. Invariants at every
-    step: a crash before the delete leaves readers on the CURRENT
-    state; a crash before the rename leaves readers on the consistent
-    PRE-BATCH state (each touched bucket falls back to its previous
-    epoch — never torn, never an error); the re-delivery always heals
-    to the dict model; prune GCs any orphan aside without changing
-    state."""
-    import random
-
-    def read_state():
-        df = bucketed_state.read_keyed_state(spark, root)
-        return {r["k"]: r["v"] for r in df.collect()} if df is not None else {}
-
-    rng = random.Random(14)
-    root = str(tmp_path / "crashwalk")
-    model: dict[int, int] = {}
-    for bid in range(5):
-        rows = [
-            (rng.randrange(5), rng.randrange(100))
-            for _ in range(rng.randrange(1, 4))
-        ]
-        prev_model = dict(model)
-        df = spark.createDataFrame(rows, "k int, v int")
-        bucketed_state.upsert_keyed_buckets(df, root, "k", "v", bid, n_buckets=4)
-        for k, v in rows:
-            if k not in model or v >= model[k]:
-                model[k] = v
-        assert read_state() == model, ("apply", bid)
-
-        # every batch replays, and every replay crashes once inside the
-        # shared swap (fsio.replace_dir): "before" = nothing swapped
-        # yet (aside written, dest intact); "mid" = between the swap's
-        # delete and rename (dest gone, aside complete)
-        crash_at = rng.choice(["before", "mid"])
-        real_replace = fsio.replace_dir
-
-        def crasher(spark_, src, dst, _mode=crash_at):
-            if _mode == "mid":
-                fsio.delete(spark_, dst)
-            raise IOError("injected crash")
-
-        monkeypatch.setattr(fsio, "replace_dir", crasher)
-        with pytest.raises(IOError, match="injected"):
-            bucketed_state.upsert_keyed_buckets(
-                df, root, "k", "v", bid, n_buckets=4
-            )
-        monkeypatch.setattr(fsio, "replace_dir", real_replace)
-
-        if crash_at == "before":
-            # aside written, dest intact: readers unaffected
-            assert read_state() == model, ("crash-before", bid)
-        else:
-            # dest deleted, rename never ran: readers see the
-            # consistent pre-batch state, loudly NOT a torn one
-            assert read_state() == prev_model, ("crash-mid", bid)
-
-        # the stream restarts and re-delivers the same batch: heals
-        bucketed_state.upsert_keyed_buckets(df, root, "k", "v", bid, n_buckets=4)
-        assert read_state() == model, ("heal", bid)
-        assert not any(
-            ".inprogress" in n for n in fsio.list_names(spark, root)
-        ), ("aside-left", bid)
-
-        if rng.random() < 0.5:
-            bucketed_state.prune_bucketed_state(spark, root, keep_last=2)
-            assert read_state() == model, ("prune", bid)
-
-
-def test_batch0_redelivery_reparks_pointer_before_rewriting_aside(
-    spark, tmp_path, monkeypatch
-):
-    """r14 review: a crashed prior batch-0 replay leaves the pointer
-    PARKED on the aside; the re-delivered replay then rewrites that
-    exact directory with mode("overwrite"), which deletes it at job
-    START — so without a re-park, readers resolve into a half-written
-    aside for the whole write job (a silent partial read). The fix
-    re-points _CURRENT at the complete dest BEFORE the aside rewrite;
-    this test builds the crash state and pins the full pointer-write
-    sequence of the re-delivery plus the healed end state."""
-    root = str(tmp_path / "repark")
-    df0 = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    # crash state: aside complete, pointer parked on it, dest intact
-    aside = f"{root}/.snapshot_0.inprogress"
-    sinks.read_snapshot(spark, root).write.parquet(aside)
-    fsio.write_text_atomic(
-        spark, f"{root}/{sinks._POINTER}", ".snapshot_0.inprogress"
-    )
-    writes: list[str] = []
-    real = fsio.write_text_atomic
-
-    def recorder(spark_, path, value):
-        if path.endswith(sinks._POINTER):
-            writes.append(value)
-        return real(spark_, path, value)
-
-    monkeypatch.setattr(fsio, "write_text_atomic", recorder)
-    sinks.upsert_batch(df0, root, ["k"], "v", 0)
-    monkeypatch.setattr(fsio, "write_text_atomic", real)
-    # ordering: re-park on the complete dest FIRST (before the aside
-    # rewrite), then the swap's park on the completed aside, then the
-    # final flip
-    assert writes == ["snapshot_0", ".snapshot_0.inprogress", "snapshot_0"]
-    # healed end state
-    assert fsio.read_text(spark, f"{root}/{sinks._POINTER}") == "snapshot_0"
-    got = {r["k"]: r["v"] for r in sinks.read_snapshot(spark, root).collect()}
-    assert got == {1: 10, 2: 20}
-    assert not any(".inprogress" in n for n in fsio.list_names(spark, root))

@@ -59,8 +59,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         )
         scale.write_bucketed(facts, "bucketdemo.facts", "k", num_buckets=8)
         scale.write_bucketed(dims, "bucketdemo.dims", "k", num_buckets=8)
-        f = scale.read_bucketed(spark, "bucketdemo.facts")
-        d = scale.read_bucketed(spark, "bucketdemo.dims")
+        f = spark.table("bucketdemo.facts")
+        d = spark.table("bucketdemo.dims")
         # disable broadcast so the join would normally shuffle both sides
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:

@@ -9,7 +9,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from airflow_subscription_etl_spark.operators import sketch as SK
-from airflow_subscription_etl_spark.operators.dedup import exact_jaccard_pairs, shingles
+from airflow_subscription_etl_spark.operators.dedup import (
+    exact_jaccard_pairs,
+    norm_tokens,
+    shingles_of_tokens,
+)
 from airflow_subscription_etl_spark.sources.io import read_star_table
 
 SF = "/root/testdata/sf0.001"
@@ -73,7 +77,9 @@ def test_exact_jaccard_pairs_vs_bruteforce(spark):
     # brute force over the same shingle sets
     sh = {
         r["doc_id"]: set(r["sh"])
-        for r in df.select("doc_id", shingles(F.col("text")).alias("sh")).collect()
+        for r in df.select("doc_id", norm_tokens(F.col("text")).alias("toks"))
+        .select("doc_id", shingles_of_tokens(F.col("toks")).alias("sh"))
+        .collect()
     }
     expect = {}
     ids = sorted(sh)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import math
 import struct
+from io import BytesIO
 
 import pyarrow as pa
 import pytest
@@ -21,6 +22,12 @@ from airflow_subscription_etl_spark.sources.io import (
     _json_records_since,
     _Snapshot,
 )
+
+
+def _joined(records: pa.Array) -> bytes:
+    buf = BytesIO()
+    _json_join(records, buf)
+    return buf.getvalue()
 
 
 def _expected_bytes(table: pa.Table) -> bytes:
@@ -446,7 +453,7 @@ def _flat_tables(draw):
 @settings(max_examples=400, deadline=None)
 @given(_flat_tables())
 def test_json_array_bytes_matches_json_dumps(table):
-    assert _json_join(_json_records(table)) == _expected_bytes(table)
+    assert _joined(_json_records(table)) == _expected_bytes(table)
 
 
 @st.composite
@@ -470,7 +477,7 @@ def test_json_records_since_matches_json_dumps(versions):
     old, new = versions
     identity = (0, 0, 0, 0)
     prev = _Snapshot(identity, None, None, old, _json_records(old))
-    assert _json_join(_json_records_since(new, prev, identity)) == _expected_bytes(new)
+    assert _joined(_json_records_since(new, prev, identity)) == _expected_bytes(new)
 
 
 def _bits(v):

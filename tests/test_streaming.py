@@ -247,51 +247,6 @@ def test_streaming_tws_user_totals(spark, ev, tmp_path):
     assert a == b == {1: 4, 2: 1}
 
 
-def test_streaming_checkpoint_restart_resumes_state(spark, ev, tmp_path):
-    """A stateful streaming query stopped and RESTARTED from its
-    checkpoint continues accumulating (state survives process
-    boundaries) — the recovery contract a 1000-executor job relies on.
-    Sink is the repo's foreachBatch snapshot (memory sinks don't
-    support checkpoint recovery)."""
-    from airflow_subscription_etl_spark.streaming import sinks as SK
-
-    src = str(tmp_path / "events_ckpt_src")
-    ckpt = str(tmp_path / "events_ckpt")
-    root = str(tmp_path / "events_ckpt_snap")
-    ev.filter(F.col("event_id") <= 3).write.parquet(src)
-
-    def run_round():
-        stream = EV.read_events_stream(spark, src, max_files_per_trigger=1)
-        q = SK.start_keyed_snapshot_sink(
-            EV.stateful_user_totals(stream),
-            root,
-            keys=["user_id"],
-            order_col="n_events",
-            checkpoint=ckpt,
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    run_round()
-    first = {
-        r["user_id"]: r["n_events"]
-        for r in SK.read_snapshot(spark, root).collect()
-    }
-    # second batch of data lands AFTER the first query stopped
-    ev.filter(F.col("event_id") > 3).write.mode("append").parquet(src)
-    run_round()
-    resumed = {
-        r["user_id"]: r["n_events"]
-        for r in SK.read_snapshot(spark, root).collect()
-    }
-    # user 1 had 3 events pre-stop; post-restart the 4th arrives and the
-    # checkpointed state continues from 3 -> 4 (not a fresh 1); the
-    # restarted source also does NOT re-emit already-committed files
-    assert first[1] == 3
-    assert resumed[1] == 4
-    assert resumed[2] == first.get(2, resumed[2])
-
-
 # --- stream-stream attribution join -----------------------------------------
 
 

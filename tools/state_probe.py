@@ -1,27 +1,24 @@
 """Empirical probe: per-epoch keyed-state upsert cost vs ACCUMULATED
-state size, for both layouts of the unified face
-(:mod:`airflow_subscription_etl_spark.streaming.sinks`).
+state size, for the keyed-state store
+(:mod:`airflow_subscription_etl_spark.streaming.bucketed_state`).
 
-The scale claim under test (SCALE.md §Streaming): the BUCKETED layout's
-per-epoch IO is DELTA-sized — a fixed-size micro-batch costs the same
-against a small state as against an 8× one, because only the bucket
-chains the batch's keys hash into are read and rewritten — while the
-SNAPSHOT layout's per-epoch cost grows with the state (each epoch
-rewrites the full snapshot), which is exactly why corpus-keyed state
-routes ``layout="bucketed"`` and catalog-sized state may keep the
-pointer-swap's time travel.
+The scale claim under test (SCALE.md §Streaming): the per-epoch IO of
+:func:`bucketed_state.upsert_keyed_buckets` is DELTA-sized — a
+fixed-size micro-batch costs the same against a small state as against
+an 8× one, because only the bucket chains the batch's keys hash into
+are read and rewritten.
 
-Method: build two state roots per layout by replaying ``n_epochs``
-seed batches of ``state_rows``/``n_epochs`` keyed rows (1× and 8×
-``state_rows``), then time ONE further fixed-size delta batch
-(``delta_rows``, keys drawn from the existing key space so buckets are
-genuinely dirtied) against each. Warm pass first, min of 2 timed
-passes, same discipline as bench.py. Driver-side IO only — no query
-code touched.
+Method: build two state roots by replaying ``n_epochs`` seed batches
+of ``state_rows``/``n_epochs`` keyed rows (1× and 8× ``state_rows``),
+then time ONE further fixed-size delta batch (``delta_rows``, keys
+drawn from the existing key space so buckets are genuinely dirtied)
+against each. Warm pass first, min of 2 timed passes, same discipline
+as bench.py. Driver-side IO only — no query code touched.
 
 Usage: python tools/state_probe.py [state_rows] [delta_rows]
 Defaults: 40_000 / 1_000. Prints a small human table; exits nonzero if
-the bucketed growth ratio exceeds 1.5× (the flatness claim).
+the growth ratio exceeds 1.5× (the flatness claim) or a same-id replay
+costs more than 2× a first apply.
 """
 
 from __future__ import annotations
@@ -34,33 +31,31 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_subscription_etl_spark import get_spark  # noqa: E402
-from airflow_subscription_etl_spark.streaming import sinks  # noqa: E402
+from airflow_subscription_etl_spark.streaming import bucketed_state  # noqa: E402
 
 N_EPOCHS = 4
 N_BUCKETS = 64
 
 
-def build_state(spark, root: str, layout: str, n_rows: int) -> None:
+def build_state(spark, root: str, n_rows: int) -> None:
     per = n_rows // N_EPOCHS
     for e in range(N_EPOCHS):
         df = (
             spark.range(e * per, (e + 1) * per)
             .selectExpr("id AS k", f"id * 10 + {e} AS v")
         )
-        sinks.upsert_keyed_state(
-            df, root, ["k"], "v", e, layout=layout,
-            n_buckets=N_BUCKETS if layout == "bucketed" else None,
+        bucketed_state.upsert_keyed_buckets(
+            df, root, "k", "v", e, n_buckets=N_BUCKETS
         )
 
 
 def time_delta_upsert(
-    spark, root: str, layout: str, n_state: int, delta_rows: int
+    spark, root: str, n_state: int, delta_rows: int
 ) -> tuple[float, float]:
     """(apply_sec, replay_sec) for one fixed delta batch: pass 0
     first-applies epoch N_EPOCHS, passes 1–2 re-deliver the SAME id —
     identical merge work routed through the replay path (write-aside +
-    delete+rename since r14 for the bucketed layout, r13 for the
-    snapshot layout), so the pair separates the swap overhead from the
+    delete+rename), so the pair separates the swap overhead from the
     merge itself. replay_sec is the MIN of the two replay passes (r14
     review: a single unaveraged sample let one host stall falsely fail
     the replay-overhead gate; a stall in the APPLY sample only shrinks
@@ -76,9 +71,8 @@ def time_delta_upsert(
             )
         )
         t0 = time.time()
-        sinks.upsert_keyed_state(
-            delta, root, ["k"], "v", N_EPOCHS, layout=layout,
-            n_buckets=N_BUCKETS if layout == "bucketed" else None,
+        bucketed_state.upsert_keyed_buckets(
+            delta, root, "k", "v", N_EPOCHS, n_buckets=N_BUCKETS
         )
         times.append(time.time() - t0)
     return times[0], min(times[1:])
@@ -92,60 +86,52 @@ def main() -> int:
     spark = get_spark("state-probe")
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm
     base = tempfile.mkdtemp(prefix="state_probe_")
-    results: dict[tuple[str, int], float] = {}
-    pairs: dict[tuple[str, int], tuple[float, float]] = {}
+    results: dict[int, float] = {}
+    pairs: dict[int, tuple[float, float]] = {}
     try:
-        for layout in ("bucketed", "snapshot"):
-            for mult in (1, 8):
-                n = state_rows * mult
-                root = f"{base}/{layout}_{mult}x"
-                build_state(spark, root, layout, n)
-                pair = time_delta_upsert(
-                    spark, root, layout, n, delta_rows
-                )
-                pairs[(layout, mult)] = pair
-                results[(layout, mult)] = min(pair)
-                print(
-                    f"# {layout:9s} {mult}x state ({n} keys): "
-                    f"apply {pair[0]:.2f}s, same-id replay {pair[1]:.2f}s",
-                    file=sys.stderr,
-                )
+        for mult in (1, 8):
+            n = state_rows * mult
+            root = f"{base}/state_{mult}x"
+            build_state(spark, root, n)
+            pair = time_delta_upsert(spark, root, n, delta_rows)
+            pairs[mult] = pair
+            results[mult] = min(pair)
+            print(
+                f"# {mult}x state ({n} keys): "
+                f"apply {pair[0]:.2f}s, same-id replay {pair[1]:.2f}s",
+                file=sys.stderr,
+            )
     finally:
-        # four state roots (up to 9x state_rows of parquet) must not
+        # two state roots (up to 9x state_rows of parquet) must not
         # accumulate under /tmp across probe runs
         shutil.rmtree(base, ignore_errors=True)
-    b1, b8 = results[("bucketed", 1)], results[("bucketed", 8)]
-    s1, s8 = results[("snapshot", 1)], results[("snapshot", 8)]
+    b1, b8 = results[1], results[8]
     print(
         f"state_rows={state_rows} delta_rows={delta_rows} "
         f"epochs={N_EPOCHS} buckets={N_BUCKETS}"
     )
     print(
-        f"bucketed: 1x {b1:.2f}s  8x {b8:.2f}s  growth {b8 / b1:.2f}x  "
+        f"delta upsert: 1x {b1:.2f}s  8x {b8:.2f}s  growth {b8 / b1:.2f}x  "
         "(claim: ~flat — delta-sized IO)"
     )
+    # the same-id replay routes through the write-aside swap; its
+    # overhead over a first apply should be the aside's extra
+    # existence-check + delete + rename — metadata ops, not data-sized
+    # work. Reported at 8x state where a data-sized regression would
+    # show largest.
+    ba, br = pairs[8]
     print(
-        f"snapshot: 1x {s1:.2f}s  8x {s8:.2f}s  growth {s8 / s1:.2f}x  "
-        "(expected: grows with state — full rewrite per epoch)"
-    )
-    # r14: the same-id replay routes through the write-aside swap for
-    # BOTH layouts now; its overhead over a first apply should be the
-    # aside's extra existence-check + delete + rename — metadata ops,
-    # not data-sized work. Reported at 8x state where a data-sized
-    # regression would show largest.
-    ba, br = pairs[("bucketed", 8)]
-    print(
-        f"bucketed replay-vs-apply at 8x: {br / ba:.2f}x  "
+        f"replay-vs-apply at 8x: {br / ba:.2f}x  "
         "(claim: ~1x — write-aside adds metadata ops, not data IO)"
     )
     spark.stop()
     if b8 / b1 > 1.5:
-        print("FAIL: bucketed delta upsert grew >1.5x with 8x state")
+        print("FAIL: delta upsert grew >1.5x with 8x state")
         return 1
     if br / ba > 2.0:
-        print("FAIL: bucketed same-id replay costs >2x a first apply")
+        print("FAIL: same-id replay costs >2x a first apply")
         return 1
-    print("OK: bucketed per-epoch cost flat in accumulated state size")
+    print("OK: per-epoch upsert cost flat in accumulated state size")
     return 0
 
 
