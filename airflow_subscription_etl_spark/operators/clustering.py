@@ -1,9 +1,10 @@
 """Distributed k-means (Lloyd's algorithm) with ENGINE-EXACT arithmetic.
 
 The canonical distributed k-means shape (same as Spark MLlib's): the
-k·d centroid matrix is driver state broadcast into a map-only
-assignment pass; the update is one (cluster, dim) aggregation shuffle
-per iteration. What this implementation adds is bit-determinism:
+k·d centroid matrix is driver state shipped into a map-only pass; each
+update is that one pass emitting per-batch partial sums, added up on
+the driver — one job per iteration, no shuffle. What this
+implementation adds is bit-determinism:
 
 - distances are per-dimension squared diffs ROUNDED TO INTEGER MICROS
   and summed as bigints — the fold order (and the engine) cannot
@@ -22,9 +23,10 @@ equidistant between centroids — the points where k-means assignment is
 arbitrary anyway.
 
 At scale: assignment is embarrassingly parallel (k·d flops per row, no
-shuffle); the update shuffles (cluster, dim, partial-sum) triples with
-map-side combine — k·d·partitions rows, never vectors. Driver traffic
-per iteration is the k·d centroid matrix: kilobytes.
+shuffle); the update assigns and sums in the same pass, so each Arrow
+batch sends the driver at most k (cluster, n, d partial sums) rows,
+never vectors. Driver traffic per iteration is k·d integers per batch:
+kilobytes per batch.
 """
 
 from __future__ import annotations
@@ -150,6 +152,22 @@ def _round_like_spark(raw):
     return r
 
 
+def _nearest(vectors, C):
+    """The numpy assignment kernel: ``vectors`` (a pandas Series of
+    arrays) as an (n, d) float64 matrix, each row's 0-based nearest
+    centroid of ``C`` (k, d) and its integer-micro distance, with ties
+    going to the lowest centroid (numpy's first minimum)."""
+    import numpy as np  # noqa: PLC0415
+
+    X = np.stack(vectors.to_numpy()).astype(np.float64)
+    D = np.empty((len(X), C.shape[0]), dtype=np.int64)
+    for j in range(C.shape[0]):
+        d = X - C[j][None, :]
+        D[:, j] = _round_like_spark(d * d * 1_000_000.0).sum(axis=1)
+    cid = D.argmin(axis=1)
+    return X, cid, D[np.arange(len(X)), cid]
+
+
 def assign_clusters_pandas(
     df: DataFrame,
     centroids: list[list[float]],
@@ -185,17 +203,11 @@ def assign_clusters_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # per-centroid integer-micro distances, argmin ties → col 0
-            D = np.empty((len(pdf), C.shape[0]), dtype=np.int64)
-            for j in range(C.shape[0]):
-                d = X - C[j][None, :]
-                D[:, j] = _round_like_spark(d * d * 1_000_000.0).sum(axis=1)
-            cid = D.argmin(axis=1)
+            X, cid, dist = _nearest(pdf[vec_col], C)
             out = {
                 id_col: pdf[id_col].to_numpy(),
                 "cluster_id": (cid + 1).astype("int32"),
-                "dist_micro": D[np.arange(len(pdf)), cid],
+                "dist_micro": dist,
             }
             if keep_vec:
                 out[vec_col] = pdf[vec_col]
@@ -209,6 +221,54 @@ def assign_clusters_pandas(
     return df.select(id_col, vec_col).mapInPandas(score, schema)
 
 
+def _lloyd_update(
+    df: DataFrame, cents: list[list[float]], vec_col: str
+) -> list[list[float]]:
+    """One Lloyd update in one map-side pass, one job: each Arrow batch
+    of ``df`` is assigned with the :func:`_nearest` kernel and yields
+    one ``(cluster_id, n, s)`` row per non-empty cluster, where
+    ``s_d = Σ floor(x_d·1e6 + 0.5)`` over the batch's members. The
+    driver adds the rows as Python ints and does ONE double division
+    per component. Empty clusters keep their previous centroid."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    C = np.asarray(cents, dtype=np.float64)
+
+    def partial_sums(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X, cid, _ = _nearest(pdf[vec_col], C)
+            Q = np.floor(X * float(_SCALE) + 0.5).astype(np.int64)
+            present = np.unique(cid)
+            yield pd.DataFrame(
+                {
+                    "cluster_id": (present + 1).astype("int32"),
+                    "n": np.bincount(cid)[present].astype("int64"),
+                    "s": [Q[cid == c].sum(axis=0) for c in present],
+                }
+            )
+
+    rows = (
+        df.select(vec_col)
+        .mapInPandas(partial_sums, "cluster_id int, n bigint, s array<bigint>")
+        .collect()
+    )
+    n = [0] * len(cents)
+    s = [[0] * len(cents[0]) for _ in cents]
+    for r in rows:
+        c = r["cluster_id"] - 1
+        n[c] += r["n"]
+        s[c] = [a + v for a, v in zip(s[c], r["s"])]
+    return [
+        [float(v) / (float(n[c]) * float(_SCALE)) for v in s[c]]
+        if n[c]
+        else cents[c]
+        for c in range(len(cents))
+    ]
+
+
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -216,27 +276,24 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    assign_fn=None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means, ``iters`` rounds from a deterministic init (the
     k lowest-id vectors, micro-quantized). Returns the FINAL-round
     assignment ``(id, cluster_id, dist_micro)`` AND the centroid matrix
     that produced it (the driver-held k·d state — callers like IVF
-    probe against it).
+    probe against it). An input of n < k vectors gives n clusters, as
+    in the unrolled-CTE oracle; an empty input gives an empty
+    assignment and no centroids.
 
-    The per-iteration driver collect is the k·d centroid matrix only —
-    the same driver state every distributed k-means keeps; data-sized
-    frames never leave the cluster. Empty clusters keep their previous
-    centroid. The input is cached for the iterations (the standard
-    iterative-ML posture — MLlib does the same; at 100 TB you cache a
-    sample or accept the re-scan).
-
-    ``assign_fn`` defaults to the Arrow/numpy twin
+    The per-iteration driver collect is per-batch k·d partial sums
+    (:func:`_lloyd_update`) — data-sized frames never leave the
+    cluster. Empty clusters keep their previous centroid. The input is
+    cached for the iterations (the standard iterative-ML posture —
+    MLlib does the same; at 100 TB you cache a sample or accept the
+    re-scan). The final assignment runs the Arrow/numpy twin
     :func:`assign_clusters_pandas`, bit-identical to the HOF reference
-    on all inputs (see ``_round_like_spark``); pass ``assign_clusters``
-    for the interpreted reference kernel, as the parity tests do.
+    :func:`assign_clusters` on all inputs (see ``_round_like_spark``).
     """
-    assign = assign_fn or assign_clusters_pandas
     # cached for the Lloyd iterations (standard iterative-ML posture);
     # pin()-ed to the returned assignment so library callers can free
     # it via cache.release / cache.released — the harnesses' clearCache
@@ -244,33 +301,12 @@ def kmeans_fit(
     df = df.select(id_col, vec_col).cache()
     init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
     cents = [[_quant(float(x)) for x in r[vec_col]] for r in init_rows]
-    dim = len(cents[0])
     # iters assignments interleaved with iters-1 updates:
     # a_i = assign(c_{i-1}); c_i = update(a_i); return a_iters
-    for _ in range(iters - 1):
-        assigned = assign(df, cents, id_col, vec_col, keep_vec=True)
-        sums = (
-            assigned
-            .select("cluster_id", F.posexplode(F.col(vec_col)).alias("dim0", "x"))
-            .groupBy("cluster_id", "dim0")
-            .agg(
-                F.sum(
-                    F.floor(
-                        F.col("x").cast("double") * F.lit(float(_SCALE)) + F.lit(0.5)
-                    ).cast("bigint")
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        new: dict[int, list[float]] = {}
-        for r in sums:
-            new.setdefault(r["cluster_id"], [0.0] * dim)[r["dim0"]] = float(
-                r["s"]
-            ) / (float(r["n"]) * float(_SCALE))
-        # empty clusters (absent from `new`) keep their previous centroid
-        cents = [new.get(cid, cents[cid - 1]) for cid in range(1, k + 1)]
-    return pin(assign(df, cents, id_col, vec_col, keep_vec=keep_vec), df), cents
+    for _ in range(iters - 1 if cents else 0):
+        cents = _lloyd_update(df, cents, vec_col)
+    assigned = assign_clusters_pandas(df, cents, id_col, vec_col, keep_vec=keep_vec)
+    return pin(assigned, df), cents
 
 
 def kmeans_fit_predict(
@@ -282,8 +318,8 @@ def kmeans_fit_predict(
     keep_vec: bool = False,
 ) -> DataFrame:
     """Assignment-only wrapper of :func:`kmeans_fit`: every Lloyd round
-    runs the Arrow/numpy twin (~3× faster than the interpreted HOF
-    reference at sf0.1), which is bit-identical to
+    runs the Arrow/numpy kernel (:func:`_nearest`, ~3× faster than the
+    interpreted HOF reference at sf0.1), which is bit-identical to
     :func:`assign_clusters` (it replicates F.round exactly, boundary
     doubles included), so it satisfies the unrolled-CTE oracle."""
     return kmeans_fit(df, k, iters, id_col, vec_col, keep_vec)[0]
@@ -305,7 +341,7 @@ def semantic_dedup(
 
     The clustering is the scale move: pairwise work is Σ_c |c|² instead
     of n² — the paper's trick for running dedup over web-scale
-    embedding sets, here as k-means (one shuffle per Lloyd round) plus
+    embedding sets, here as k-means (one map-side job per Lloyd round) plus
     one within-cluster self-join keyed on cluster_id. Everything is
     engine-exact: assignments come from the micro-quantized
     :func:`kmeans_fit_predict`, and cosine is computed over

@@ -4360,12 +4360,12 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulators, so even this loop hash-matches a DuckDB oracle (the
     oracle unrolls the iterations as CTEs; see kmeans_oracle_sql).
 
-    kmeans_fit_predict runs the Arrow/numpy assignment twin
+    kmeans_fit_predict runs the Arrow/numpy assignment kernel
     (bit-identical to the HOF reference on all inputs; ~3× faster at
-    sf0.1). The interpreted-HOF reference kernel,
-    ``kmeans_fit(..., assign_fn=assign_clusters)``, is pinned to the
-    twin by the parity tests in tests/test_clustering.py. The
-    ``emb_kmeans_pandas`` registry name runs this same function."""
+    sf0.1), fused with the partial sums in each Lloyd update. A
+    reference fit over the interpreted-HOF kernel ``assign_clusters``
+    is pinned to it by the parity tests in tests/test_clustering.py.
+    The ``emb_kmeans_pandas`` registry name runs this same function."""
     from .operators.clustering import (  # noqa: PLC0415
         kmeans_cluster_summary,
         kmeans_fit_predict,

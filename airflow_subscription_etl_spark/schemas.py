@@ -55,8 +55,10 @@ USER_SUBSCRIPTIONS_SEED = [
 ]
 
 # --- Driver star schema (TESTDATA.md / FIXTURES.md §2) ----------------------
-# Parquet footers carry these; listed for documentation and for
-# schema-pinned streaming reads (streaming sources can't infer).
+# Batch reads take each table's schema from its own parquet footer
+# (sources.io.read_star_table), so nothing here pins them. These are the
+# normalized shapes those reads return, for schema-pinned streaming
+# reads (streaming sources can't infer) and test frames.
 
 EVENTS_SCHEMA = T.StructType(
     [

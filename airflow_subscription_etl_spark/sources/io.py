@@ -59,6 +59,7 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -524,42 +525,130 @@ def ensure_query_confs(spark: SparkSession) -> None:
     """Pin the semantic SQL confs every query depends on, on THE PASSED
     session — never assume :func:`..session.get_spark` built it.  The
     correctness driver runs queries under its own default-config
-    SparkSession; both confs below are runtime-settable, so setting them
+    SparkSession; the confs below are runtime-settable, so setting them
     here (the chokepoint every query reads through) makes the whole
     query surface session-proof:
 
-    - ``nanosAsLong``: events.parquet stores TIMESTAMP(NANOS), which
-      Spark's vectorized reader otherwise rejects (PARQUET_TYPE_ILLEGAL).
+    - ``nanosAsLong``: a parquet TIMESTAMP(NANOS) column reads as a
+      nanos-since-epoch long; Spark's vectorized reader otherwise
+      rejects it (PARQUET_TYPE_ILLEGAL).
+    - ``inferTimestampNTZ``: a TIMESTAMP(MICROS/MILLIS) column without
+      a UTC adjustment is a ``timestamp_ntz``, the type
+      :func:`_footer_schema` gives it.
     - ``timeZone=UTC``: timestamp rendering (``date_format``) must agree
       with the DuckDB oracle regardless of host timezone.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+#: Parquet leaf encodings of the star tables → the Spark type Spark's
+#: footer inference gives them, keyed by (physical type, logical type).
+#: Timestamps and INT96 are resolved in :func:`_leaf_type`.
+_LEAF_TYPES = {
+    ("INT32", "None"): T.IntegerType(),
+    ("INT64", "None"): T.LongType(),
+    ("FLOAT", "None"): T.FloatType(),
+    ("DOUBLE", "None"): T.DoubleType(),
+    ("BYTE_ARRAY", "String"): T.StringType(),
+}
+
+
+def _leaf_type(col: pq.ColumnSchema) -> T.DataType | None:
+    """The Spark type of one parquet leaf column under the confs
+    :func:`ensure_query_confs` pins, or None outside the mapping."""
+    if col.physical_type == "INT96":
+        # the legacy timestamp encoding (int96AsTimestamp); pyarrow reports
+        # it as timestamp[ns] too, so only the physical type tells it apart
+        return T.TimestampType()
+    logical = json.loads(col.logical_type.to_json())
+    if logical["Type"] == "Timestamp":
+        if logical["timeUnit"] == "nanoseconds":
+            return T.LongType()  # nanosAsLong
+        if logical["isAdjustedToUTC"]:
+            return T.TimestampType()
+        return T.TimestampNTZType()  # inferTimestampNTZ
+    return _LEAF_TYPES.get((col.physical_type, logical["Type"]))
+
+
+def _footer_file(path: str) -> str:
+    """``path`` itself, or for a directory (a Spark-written table) its
+    first data file by name — the file Spark's inference reads."""
+    if not os.path.isdir(path):
+        return path
+    names = sorted(
+        n for n in os.listdir(path) if not n.startswith(("_", "."))
+    )
+    if not names:
+        raise ValueError(f"read_star_table: {path} holds no parquet data file")
+    return os.path.join(path, names[0])
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, derived on the
+    driver from the parquet footer: no Spark job. Every field is
+    nullable, as in Spark's read schema. The arrow view of the footer
+    gives the list nesting; each leaf's Spark type comes from its
+    parquet physical and logical type, visited in column order. A type
+    outside the mapping raises, naming the column."""
+    file = _footer_file(path)
+    footer = pq.read_metadata(file).schema
+    leaves = iter(range(len(footer)))
+
+    def refuse(name: str, desc: str) -> ValueError:
+        return ValueError(
+            f"read_star_table cannot read {file}: column {name!r} has "
+            f"parquet type {desc}, which has no Spark type mapping"
+        )
+
+    def convert(field: pa.Field, name: str) -> T.DataType:
+        if pa.types.is_list(field.type):
+            return T.ArrayType(convert(field.type.value_field, name), True)
+        if pa.types.is_nested(field.type):
+            raise refuse(name, str(field.type))
+        col = footer.column(next(leaves))
+        leaf = _leaf_type(col)
+        if leaf is None:
+            raise refuse(name, f"{col.physical_type} {col.logical_type}")
+        return leaf
+
+    return T.StructType(
+        [
+            T.StructField(f.name, convert(f, f.name), True)
+            for f in footer.to_arrow_schema()
+        ]
+    )
+
+
 def read_star_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md).
+    """Read one driver testdata table (TESTDATA.md) with no Spark job.
+
+    The read schema is the file's own, derived from its parquet footer
+    on the driver (:func:`_footer_schema`); it equals the one Spark's
+    inference returns, without the inference job. A column whose type
+    has no mapping raises ``ValueError`` naming it.
 
     ``events.ts`` has been observed in two physical encodings across
-    driver testdata generations: parquet TIMESTAMP(NANOS) (reads as a
+    driver testdata generations: parquet TIMESTAMP(NANOS) (a
     nanos-since-epoch long under ``nanosAsLong``) and TIMESTAMP(MICROS,
-    isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ).  Normalize both to
-    a session-TZ TIMESTAMP here so every downstream consumer
+    isAdjustedToUTC=false) (a TIMESTAMP_NTZ).  Normalize both to a
+    session-TZ TIMESTAMP here so every downstream consumer
     (``unix_micros``, range frames, window()) sees one stable type
     regardless of which generation of testdata — or whose SparkSession —
     is in play.  With the UTC session timezone pinned above, the
     NTZ→TZ cast is an identity reinterpretation of the instant.
     """
-    from pyspark.sql import functions as F
-
     ensure_query_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _footer_schema(path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and "ts" in schema.fieldNames():
+        ts_type = schema["ts"].dataType
+        if isinstance(ts_type, T.LongType):
             # integer `div` (not `/`): float division of an int64 epoch-nanos
             # loses precision past 2^53 and can shift the microsecond value
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
+        elif isinstance(ts_type, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df

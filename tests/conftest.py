@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import json
 import os
 
@@ -93,6 +94,30 @@ class PlanLog:
 @pytest.fixture()
 def plan_log(spark):
     return PlanLog(spark)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), n)``: n is the number of Spark jobs
+    ``fn`` launched, counted through a job group and the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture()

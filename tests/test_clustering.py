@@ -2,7 +2,8 @@
 non-increasing across iterations, and results are partitioning-
 invariant (the determinism claim the DuckDB oracle relies on); the
 Arrow/numpy twin's rounding matches Spark's HALF_UP at every
-magnitude."""
+magnitude; the fit matches a reference fit over the HOF kernel; each
+Lloyd update is one job; inputs smaller than k (or empty) fit."""
 
 from __future__ import annotations
 
@@ -11,9 +12,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from airflow_subscription_etl_spark.operators.clustering import (
+    _lloyd_update,
+    _quant,
     _round_like_spark,
     assign_clusters,
+    assign_clusters_pandas,
     kmeans_cluster_summary,
+    kmeans_fit,
     kmeans_fit_predict,
 )
 from airflow_subscription_etl_spark.oracles.lsh_ref import _round_half_up_spark
@@ -101,28 +106,86 @@ def test_semantic_dedup_partitioning_invariant(spark):
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
+def _reference_fit(df, k, iters):
+    """The Lloyd loop over the interpreted HOF kernel
+    :func:`assign_clusters`, each update a posexplode into (cluster,
+    dim) rows and a groupBy of their integer-micro sums."""
+    df = df.select("vec_id", "embedding")
+    init = df.orderBy("vec_id").limit(k).select("embedding").collect()
+    cents = [[_quant(float(x)) for x in r["embedding"]] for r in init]
+    dim = len(cents[0])
+    for _ in range(iters - 1):
+        sums = (
+            assign_clusters(df, cents, keep_vec=True)
+            .select("cluster_id", F.posexplode("embedding").alias("dim0", "x"))
+            .groupBy("cluster_id", "dim0")
+            .agg(
+                F.sum(
+                    F.floor(F.col("x").cast("double") * F.lit(1e6) + F.lit(0.5)).cast(
+                        "bigint"
+                    )
+                ).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        )
+        new: dict[int, list[float]] = {}
+        for r in sums:
+            new.setdefault(r["cluster_id"], [0.0] * dim)[r["dim0"]] = float(
+                r["s"]
+            ) / (float(r["n"]) * 1e6)
+        cents = [new.get(c, cents[c - 1]) for c in range(1, len(cents) + 1)]
+    return assign_clusters(df, cents), cents
+
+
 def test_kmeans_pandas_twin_bit_identical(spark):
     """assign_clusters_pandas must reproduce the HOF path EXACTLY —
     integer-micro distances are order-free, so any mismatch is a
-    rounding/tiebreak bug, not float noise."""
-    from airflow_subscription_etl_spark.operators.clustering import (
-        assign_clusters,
-        assign_clusters_pandas,
-        kmeans_fit,
-        kmeans_fit_predict,
-    )
-
+    rounding/tiebreak bug, not float noise. The same holds for the
+    whole fit: kmeans_fit's fused assign-and-sum updates against a
+    reference fit over the HOF kernel and a (cluster, dim) groupBy."""
     rows = [(i, [float((i * 7 + j * 3) % 11) / 11.0 for j in range(6)]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     cents = [[0.1] * 6, [0.5] * 6, [0.9] * 6]
     a = sorted(map(tuple, assign_clusters(df, cents).collect()))
     b = sorted(map(tuple, assign_clusters_pandas(df, cents).collect()))
     assert a == b
-    fa = sorted(
-        map(tuple, kmeans_fit(df, 4, 2, assign_fn=assign_clusters)[0].collect())
-    )
-    fb = sorted(map(tuple, kmeans_fit_predict(df, 4, 2).collect()))
-    assert fa == fb
+    ref, ref_cents = _reference_fit(df, 4, 3)
+    got, got_cents = kmeans_fit(df, 4, 3)
+    assert got_cents == ref_cents
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+
+
+def test_lloyd_update_runs_one_job(emb, count_jobs):
+    """Each Lloyd update is one map-side job: no shuffle stage, no
+    second pass over the assignment."""
+    df = emb.select("vec_id", "embedding")
+    cents = [
+        [_quant(float(x)) for x in r["embedding"]]
+        for r in df.orderBy("vec_id").limit(4).collect()
+    ]
+    new, n = count_jobs(lambda: _lloyd_update(df, cents, "embedding"))
+    assert n == 1
+    assert len(new) == 4 and all(len(c) == len(cents[0]) for c in new)
+
+
+def test_kmeans_fewer_vectors_than_k(spark):
+    """n < k vectors give n clusters (the unrolled-CTE oracle's answer),
+    each vector its own centroid."""
+    rows = [(i, [float(i), float(-i)]) for i in range(3)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    assigned, cents = kmeans_fit(df, k=8, iters=2)
+    assert cents == [[0.0, 0.0], [1.0, -1.0], [2.0, -2.0]]
+    got = sorted((r["vec_id"], r["cluster_id"]) for r in assigned.collect())
+    assert got == [(0, 1), (1, 2), (2, 3)]
+
+
+def test_kmeans_empty_input(spark):
+    df = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+    assigned, cents = kmeans_fit(df, k=8, iters=3)
+    assert cents == []
+    assert assigned.collect() == []
+    assert assigned.columns == ["vec_id", "cluster_id", "dist_micro"]
 
 
 # --- _round_like_spark: large-magnitude boundary guard (ADVICE r6) ----------

@@ -2,25 +2,39 @@
 ``json.dumps(indent=2)``, row order, type contract, the columnar
 encoder's parity on random Arrow tables and on chains of versions it
 re-encodes in part, and the file-version snapshots the source and sink
-share."""
+share. The parquet star-table source: footer-derived schemas that
+match Spark's inference, no job to open a table, both ``events.ts``
+encodings, and the refusal of unmapped column types."""
 
 from __future__ import annotations
 
+import datetime
+import glob
 import json
 import math
+import os
 import struct
 from io import BytesIO
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from airflow_subscription_etl_spark.sources.io import (
+    _footer_schema,
     _json_join,
     _json_records,
     _json_records_since,
     _Snapshot,
+    ensure_query_confs,
+    read_star_table,
+)
+
+SF = "/root/testdata/sf0.001"
+STAR_TABLES = sorted(
+    os.path.basename(p)[: -len(".parquet")] for p in glob.glob(f"{SF}/*.parquet")
 )
 
 
@@ -125,21 +139,18 @@ def test_write_json_table_orders_cached_partition_after_file_scan(spark, tmp_pat
     assert [r["id"] for r in json.loads(out.read_text())] == [5, 4, 3, 99]
 
 
-def test_write_json_table_rejects_nested_columns_before_any_job(spark, tmp_path):
+def test_write_json_table_rejects_nested_columns_before_any_job(
+    spark, tmp_path, count_jobs
+):
     from airflow_subscription_etl_spark.sources.io import write_json_table
 
     df = spark.createDataFrame([(1, (2, "x"))], "id int, s struct<a:int,b:string>")
-    sc = spark.sparkContext
-    group = "json-sink-type-contract"
-    sc.setJobGroup(group, group)
-    try:
+
+    def write():
         with pytest.raises(ValueError, match="column 's' of type struct"):
             write_json_table(df, str(tmp_path / "t.json"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    assert count_jobs(write)[1] == 0
     assert not (tmp_path / "t.json").exists()
 
 
@@ -663,3 +674,72 @@ def test_read_once_paths_of_deleted_files_are_forgotten(spark, tmp_path):
     gone.unlink()
     write_json_table(spark.range(1), str(tmp_path / "other.json"))
     assert str(gone) not in _READ_ONCE and str(kept) in _READ_ONCE
+
+
+# --- parquet star tables -----------------------------------------------------
+
+
+def test_star_tables_open_with_no_job(spark, count_jobs):
+    assert len(STAR_TABLES) == 10
+    _, n = count_jobs(lambda: [read_star_table(spark, SF, t) for t in STAR_TABLES])
+    assert n == 0
+
+
+@pytest.mark.parametrize("name", STAR_TABLES)
+def test_footer_schema_is_the_inferred_schema(spark, name):
+    ensure_query_confs(spark)
+    path = f"{SF}/{name}.parquet"
+    assert _footer_schema(path) == spark.read.parquet(path).schema
+
+
+def test_spark_written_directory_reads_its_first_part_file(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).selectExpr("id", "array(CAST(id AS float)) AS v").write.parquet(path)
+    assert _footer_schema(path) == spark.read.parquet(path).schema
+    assert read_star_table(spark, str(tmp_path), "t").count() == 3
+
+
+_INSTANTS = [
+    datetime.datetime(2024, 1, 1, 0, 0, 0),
+    datetime.datetime(2024, 3, 10, 12, 34, 56, 789012),
+    datetime.datetime(1999, 12, 31, 23, 59, 59, 999999),
+]
+
+
+@pytest.mark.parametrize(
+    "ts_type, write_kwargs",
+    [
+        (pa.timestamp("ns"), {"version": "2.6"}),  # INT64 TIMESTAMP(NANOS)
+        (pa.timestamp("us"), {}),  # INT64 TIMESTAMP(MICROS), not UTC-adjusted
+        (pa.timestamp("ns"), {"use_deprecated_int96_timestamps": True}),  # INT96
+    ],
+    ids=["nanos", "micros_ntz", "int96"],
+)
+def test_events_ts_encodings_read_to_the_same_instants(
+    spark, tmp_path, ts_type, write_kwargs
+):
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(_INSTANTS, ts_type),
+        }
+    )
+    pq.write_table(table, tmp_path / "events.parquet", **write_kwargs)
+    df = read_star_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = df.selectExpr("event_id", "unix_micros(ts) AS us").orderBy("event_id")
+    epoch = datetime.datetime(1970, 1, 1)
+    want = [(t - epoch) // datetime.timedelta(microseconds=1) for t in _INSTANTS]
+    assert [r["us"] for r in got.collect()] == want
+
+
+def test_unmapped_column_type_is_refused(spark, tmp_path):
+    table = pa.table(
+        {
+            "id": pa.array([1], pa.int64()),
+            "attrs": pa.array([{"a": 1}], pa.map_(pa.string(), pa.int64())),
+        }
+    )
+    pq.write_table(table, tmp_path / "t.parquet")
+    with pytest.raises(ValueError, match=r"t\.parquet: column 'attrs' has parquet type map"):
+        read_star_table(spark, str(tmp_path), "t")

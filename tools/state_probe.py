@@ -12,8 +12,11 @@ Method: build two state roots by replaying ``n_epochs`` seed batches
 of ``state_rows``/``n_epochs`` keyed rows (1× and 8× ``state_rows``),
 then time ONE further fixed-size delta batch (``delta_rows``, keys
 drawn from the existing key space so buckets are genuinely dirtied)
-against each. Warm pass first, min of 2 timed passes, same discipline
-as bench.py. Driver-side IO only — no query code touched.
+against each. The whole apply-and-replay sequence first runs once on a
+throwaway 1× root, so JVM and code-generation warm-up lands on neither
+timed root; the timed passes then alternate between the two roots,
+flipping their order every pass, so drift is shared. Driver-side IO
+only — no query code touched.
 
 Usage: python tools/state_probe.py [state_rows] [delta_rows]
 Defaults: 40_000 / 1_000. Prints a small human table; exits nonzero if
@@ -49,33 +52,37 @@ def build_state(spark, root: str, n_rows: int) -> None:
         )
 
 
-def time_delta_upsert(
-    spark, root: str, n_state: int, delta_rows: int
-) -> tuple[float, float]:
-    """(apply_sec, replay_sec) for one fixed delta batch: pass 0
-    first-applies epoch N_EPOCHS, passes 1–2 re-deliver the SAME id —
+def _delta(spark, n_state: int, delta_rows: int):
+    return spark.range(delta_rows).selectExpr(
+        f"(id * 37) % {n_state} AS k",  # existing keys → dirty buckets
+        "id + 1000000 AS v",
+    )
+
+
+def time_delta_upserts(
+    spark, roots: dict[int, tuple[str, int]], delta_rows: int
+) -> dict[int, tuple[float, float]]:
+    """(apply_sec, replay_sec) per root for one fixed delta batch: pass
+    0 first-applies epoch N_EPOCHS, passes 1–2 re-deliver the SAME id —
     identical merge work routed through the replay path (write-aside +
     delete+rename), so the pair separates the swap overhead from the
-    merge itself. replay_sec is the MIN of the two replay passes (r14
-    review: a single unaveraged sample let one host stall falsely fail
-    the replay-overhead gate; a stall in the APPLY sample only shrinks
-    the ratio, so it needs no smoothing). Growth comparisons use
-    min over all passes, as before."""
-    times = []
-    for _pass in range(3):
-        delta = (
-            spark.range(delta_rows)
-            .selectExpr(
-                f"(id * 37) % {n_state} AS k",  # existing keys → dirty buckets
-                "id + 1000000 AS v",
+    merge itself. Every pass times each root once, in alternating
+    order. replay_sec is the MIN of the two replay passes (a single
+    unaveraged sample let one host stall falsely fail the
+    replay-overhead gate; a stall in the APPLY sample only shrinks the
+    ratio, so it needs no smoothing). Growth comparisons use min over
+    all passes."""
+    times: dict[int, list[float]] = {m: [] for m in roots}
+    for p in range(3):
+        for mult in sorted(roots, reverse=p % 2 == 1):
+            root, n_state = roots[mult]
+            delta = _delta(spark, n_state, delta_rows)
+            t0 = time.time()
+            bucketed_state.upsert_keyed_buckets(
+                delta, root, "k", "v", N_EPOCHS, n_buckets=N_BUCKETS
             )
-        )
-        t0 = time.time()
-        bucketed_state.upsert_keyed_buckets(
-            delta, root, "k", "v", N_EPOCHS, n_buckets=N_BUCKETS
-        )
-        times.append(time.time() - t0)
-    return times[0], min(times[1:])
+            times[mult].append(time.time() - t0)
+    return {m: (t[0], min(t[1:])) for m, t in times.items()}
 
 
 def main() -> int:
@@ -84,28 +91,27 @@ def main() -> int:
     import shutil  # noqa: PLC0415
 
     spark = get_spark("state-probe")
-    spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm
     base = tempfile.mkdtemp(prefix="state_probe_")
-    results: dict[int, float] = {}
-    pairs: dict[int, tuple[float, float]] = {}
     try:
+        warm = f"{base}/state_warm"
+        build_state(spark, warm, state_rows)
+        time_delta_upserts(spark, {1: (warm, state_rows)}, delta_rows)
+        roots = {}
         for mult in (1, 8):
-            n = state_rows * mult
-            root = f"{base}/state_{mult}x"
-            build_state(spark, root, n)
-            pair = time_delta_upsert(spark, root, n, delta_rows)
-            pairs[mult] = pair
-            results[mult] = min(pair)
-            print(
-                f"# {mult}x state ({n} keys): "
-                f"apply {pair[0]:.2f}s, same-id replay {pair[1]:.2f}s",
-                file=sys.stderr,
-            )
+            roots[mult] = (f"{base}/state_{mult}x", state_rows * mult)
+            build_state(spark, *roots[mult])
+        pairs = time_delta_upserts(spark, roots, delta_rows)
     finally:
-        # two state roots (up to 9x state_rows of parquet) must not
+        # three state roots (up to 10x state_rows of parquet) must not
         # accumulate under /tmp across probe runs
         shutil.rmtree(base, ignore_errors=True)
-    b1, b8 = results[1], results[8]
+    for mult, (_, n) in roots.items():
+        print(
+            f"# {mult}x state ({n} keys): "
+            f"apply {pairs[mult][0]:.2f}s, same-id replay {pairs[mult][1]:.2f}s",
+            file=sys.stderr,
+        )
+    b1, b8 = min(pairs[1]), min(pairs[8])
     print(
         f"state_rows={state_rows} delta_rows={delta_rows} "
         f"epochs={N_EPOCHS} buckets={N_BUCKETS}"
